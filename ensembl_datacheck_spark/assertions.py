@@ -15,7 +15,8 @@ Test/DataCheck.pm:51-66,80-82, is free on Spark):
 * zero-checks first probe ``limit(MAX_DIAG_ROWS+1)`` so the passing path
   (the common case) can stop at the first matching row per partition and
   the full count is only computed on the failing path;
-* existence probes use ``limit(1)`` (early-out scan).
+* existence probes use ``isEmpty`` (a one-row collect-limit: early-out
+  scan).
 """
 
 from __future__ import annotations
@@ -84,8 +85,12 @@ def is_rows_zero(
 
 
 def is_rows_nonzero(df: DataFrame, name: str) -> tuple[AssertionResult, None]:
-    """count > 0 via early-out limit(1) (Test/DataCheck.pm:194-202)."""
-    nonempty = df.limit(1).count() > 0
+    """count > 0 via an early-out existence probe (Test/DataCheck.pm:
+    194-202).  ``isEmpty`` runs as a collect-limit that stops at the
+    first row; ``limit(1).count()`` would put the limit inside
+    whole-stage codegen, whose counter variable Spark names from a
+    JVM-global sequence, so every run compiled two new classes."""
+    nonempty = not df.isEmpty()
     return (
         AssertionResult(
             name,

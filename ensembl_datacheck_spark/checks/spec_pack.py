@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ensembl_datacheck_spark import assertions as A
 from ensembl_datacheck_spark.registry import register
+from ensembl_datacheck_spark.sources.io import local_frame
 from ensembl_datacheck_spark.sources.synth import (
     META_REQUIRED_KEYS,
     META_SINGLETON_KEYS,
@@ -347,8 +348,9 @@ def register_spec(spec, registry=None, fact_table: str = "sequences") -> None:
                     F.col(spec.col2).alias(spec.col1)
                 )
             else:
-                t2 = ctx.spark.createDataFrame(
-                    [(v,) for v in spec.expected], f"{spec.col1} string"
+                t2 = local_frame(
+                    ctx.spark, [(v,) for v in spec.expected],
+                    f"{spec.col1} string",
                 )
             viol = A.array_diff(t1, t2, spec.col1, spec.label1, spec.label2)
             ctx.record(

@@ -195,6 +195,11 @@ def lm_bigram_cross_entropy(
     """
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0 (got {alpha})")
+    if not 0.0 <= lam <= 1.0:
+        # outside [0, 1] a mixture weight goes negative, the interpolated
+        # probability can drop to <= 0 and F.log would return a NULL
+        # that the per-document sum then silently skips
+        raise ValueError(f"lam must be in [0, 1] (got {lam})")
     clean = F.filter(F.col(tokens_col), lambda t: t.isNotNull() & (t >= 0))
     base = (
         docs.filter(F.col(tokens_col).isNotNull() & (F.size(tokens_col) > 0))

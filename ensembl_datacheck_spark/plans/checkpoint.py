@@ -30,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ensembl_datacheck_spark.sources.io import Catalog
+from ensembl_datacheck_spark.sources.io import Catalog, local_frame
 
 CHECKPOINT_SCHEMA = (
     "run_id string, check_name string, partition_id int, status string, "
@@ -117,8 +117,8 @@ class CheckpointStore:
         Iceberg on the classpath this becomes a table.append (ACID)."""
         if not rows:
             return
-        df = self.catalog.spark.createDataFrame(
-            [r.as_tuple() for r in rows], CHECKPOINT_SCHEMA
+        df = local_frame(
+            self.catalog.spark, [r.as_tuple() for r in rows], CHECKPOINT_SCHEMA
         )
         with self._write_lock:
             self.catalog.append_atomic(df, self.table)

@@ -12,6 +12,34 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries of Spark's generated-class cache (CodeGenerator, one LRU per
+# JVM; Spark's default is 100).  A long-lived session cycles through a
+# fixed set of plans: one default-suite pair (first run + resume)
+# compiles about 143 classes and one pass of eight driver queries about
+# 157, so at 100 every class missed on every run and was compiled and
+# JIT-warmed again.  1000 holds several such working sets.
+CODEGEN_CACHE_ENTRIES = 1000
+
+# Engine defaults an operator's spark-submit ``--conf`` overrides.
+# AQE numbers whole-stage codegen stages in the order query stages are
+# created, which varies between runs of one plan; with the stage id in
+# the generated class name the same pipeline misses the cache under a
+# new name, so the name is kept id-free.
+_CODEGEN_CONF = {
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+    "spark.sql.codegen.useIdInClassName": "false",
+}
+
+
+def _submit_conf_keys() -> set[str]:
+    """Keys the spark-submit launch already set: its ``--conf`` flags and
+    spark-defaults.conf, which the submit passes to the gateway JVM as
+    ``spark.*`` system properties."""
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return {k for k, _ in SparkConf().getAll()}
+
 
 def get_spark(
     app_name: str = "ensembl-datacheck-spark",
@@ -33,7 +61,9 @@ def get_spark(
     and shuffle partitions are only touched when the submit didn't set
     them (``--conf`` wins), defaulting to the larger of Spark's 200 and
     the cluster's real ``sc.defaultParallelism`` (a runtime conf,
-    settable post-launch) instead of the driver host's CPU count.
+    settable post-launch) instead of the driver host's CPU count.  The
+    codegen settings (``_CODEGEN_CONF``) follow the same rule: set unless
+    the submit set them.
     """
     # spark-submit launches the gateway JVM before the Python driver runs;
     # its presence means resource config belongs to the submit, not us.
@@ -58,6 +88,10 @@ def get_spark(
         # medium inputs; AQE coalesces the reduce side back down
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
     )
+    submit_keys = _submit_conf_keys() if submitted else set()
+    for k, v in _CODEGEN_CONF.items():
+        if k not in submit_keys:
+            builder = builder.config(k, v)
     if not submitted:
         builder = (
             builder.master(master)

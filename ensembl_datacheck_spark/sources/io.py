@@ -259,6 +259,24 @@ def read_table(
     return reader.options(**options).format(fmt).load(path)
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-built frame: ``rows`` are tuples in the order of
+    ``schema``, a DDL string.  The rows travel as one Arrow table typed
+    from ``schema`` and become a JVM-side local relation.
+    ``createDataFrame`` on a list of tuples plans a PythonRDD instead,
+    whose first action forks Python workers just to unpickle the rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_pylist(
+        [dict(zip(arrow.names, r)) for r in rows], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
 SF_TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"

@@ -271,9 +271,10 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     available ONLY from the zip (cwd outside the repo, PYTHONPATH
     stripped), and run the suite over a parquet fixture.
 
-    Asserts (a) the submit's --master wins (get_spark must not override
-    it, session.py `submitted` path), (b) the package import resolves
-    from the zip, (c) verdicts + JSON report match the in-process run.
+    Asserts (a) the submit's --master and --conf win (get_spark must not
+    override them, session.py `submitted` path), (b) the package import
+    resolves from the zip, (c) verdicts + JSON report match the
+    in-process run.
 
     Reference kin: the production pipeline ships checks to workers and
     aggregates per-run results (DbDataChecks_conf.pm:214-306).
@@ -304,6 +305,10 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
         "from ensembl_datacheck_spark.session import get_spark\n"
         "spark = get_spark('pyfiles-smoke')\n"
         "print('SMOKE_MASTER=' + spark.sparkContext.master, flush=True)\n"
+        "conf = spark.sparkContext.getConf()\n"
+        "print('SMOKE_CODEGEN=' + ','.join(conf.get(k) for k in (\n"
+        "    'spark.sql.codegen.cache.maxEntries',\n"
+        "    'spark.sql.codegen.useIdInClassName')), flush=True)\n"
         "import ensembl_datacheck_spark as pkg\n"
         "print('SMOKE_PKG=' + pkg.__file__, flush=True)\n"
         "from ensembl_datacheck_spark.cli import main\n"
@@ -315,6 +320,7 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     proc = subprocess.run(
         [spark_submit, "--master", "local[4]", "--driver-memory", "4g",
          "--conf", "spark.ui.enabled=false",
+         "--conf", "spark.sql.codegen.cache.maxEntries=321",
          "--py-files", str(zip_path), str(driver),
          "--sequences", str(tmp_path / "sequences"),
          "--sources", str(tmp_path / "sources"),
@@ -331,6 +337,9 @@ def test_spark_submit_pyfiles_end_to_end(spark, tmp_path):
     # in-process run in test_cli_run_fail_and_reports
     assert proc.returncode == 1, out[-4000:]
     assert "SMOKE_MASTER=local[4]" in out
+    # the submit's --conf wins over the engine's codegen cache size; the
+    # setting the submit left alone gets the engine default
+    assert "SMOKE_CODEGEN=321,false" in out
     pkg_line = next(l for l in out.splitlines() if l.startswith("SMOKE_PKG="))
     assert "/root/repo" not in pkg_line, pkg_line  # imported from the zip
     j = json.loads((tmp_path / "res_submit.json").read_text())

@@ -933,3 +933,147 @@ def test_doc_id_unique_unattributed_under_foreign_bucket_key(spark, seq_fixture)
                         n_buckets=8)
     assert res2.partition_violations
     assert sum(res2.partition_violations.values()) == res2.n_violations
+
+
+def _compiles(spark) -> int:
+    """Classes Spark's CodeGenerator has compiled in this JVM so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_session_reuses_generated_classes(spark, seq_fixture):
+    """A second identical suite run on one session compiles (almost) no
+    new classes: the suite's working set fits the codegen cache
+    (session.CODEGEN_CACHE_ENTRIES), and no run-varying value lands in
+    generated code.  At Spark's default of 100 entries the LRU cache
+    evicts every class of this cyclic workload before its next use, so
+    the second run compiles as much as the first.  An unusual bucket
+    count keeps the first run's bucketing stages out of classes cached
+    by earlier tests."""
+    from ensembl_datacheck_spark.session import CODEGEN_CACHE_ENTRIES
+
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES)
+    assert conf.get("spark.sql.codegen.useIdInClassName") == "false"
+    counts, verdicts = [], []
+    for _ in range(2):
+        before = _compiles(spark)
+        summary = Runner(spark, _tables(seq_fixture), n_buckets=13).run(
+            registry.default_suite(), write_checkpoints=False)
+        counts.append(_compiles(spark) - before)
+        verdicts.append({r.check_name: r.status for r in summary.results})
+    assert verdicts[0] == verdicts[1]
+    assert counts[0] > 0, counts
+    assert counts[1] <= 0.1 * counts[0], counts
+
+
+def _checkpoint_rows():
+    import time
+
+    from ensembl_datacheck_spark.plans.checkpoint import CheckpointRow
+
+    now = time.time()
+    return [
+        CheckpointRow("run_x", f"Check{i % 3}", i, ("ok", "fail")[i % 2],
+                      now - i, now, 1000 * i, i % 2, "lin#nb16#bkdoc_id")
+        for i in range(7)
+    ]
+
+
+def test_checkpoint_batch_is_a_local_relation(spark, tmp_path, monkeypatch):
+    """The checkpoint append builds its batch on the JVM (an Arrow-fed
+    local relation): no PythonRDD in its lineage, so writing it forks no
+    Python worker.  The list-of-tuples frame it replaced did plan one."""
+    from ensembl_datacheck_spark.plans.checkpoint import CHECKPOINT_SCHEMA
+
+    seen = []
+    orig = Catalog.append_atomic
+
+    def capture(self, df, name):
+        seen.append(df)
+        return orig(self, df, name)
+
+    monkeypatch.setattr(Catalog, "append_atomic", capture)
+    CheckpointStore(Catalog(spark, tmp_path / "wh")).append(_checkpoint_rows())
+
+    def lineage(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    [batch] = seen
+    assert "PythonRDD" not in lineage(batch)
+    tuples = spark.createDataFrame(
+        [r.as_tuple() for r in _checkpoint_rows()], CHECKPOINT_SCHEMA)
+    assert "PythonRDD" in lineage(tuples)
+
+
+def test_checkpoint_batch_parquet_matches_tuple_path(spark, tmp_path):
+    """The Arrow-built checkpoint batch writes the same parquet as the
+    list-of-tuples frame did: the same Spark schema, the same parquet
+    footer schema (with Spark's row metadata) and the same rows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from ensembl_datacheck_spark.plans.checkpoint import CHECKPOINT_SCHEMA
+
+    rows = _checkpoint_rows()
+    store = CheckpointStore(Catalog(spark, tmp_path / "wh"))
+    store.append(rows)
+    old = str(tmp_path / "tuples")
+    spark.createDataFrame([r.as_tuple() for r in rows], CHECKPOINT_SCHEMA
+                          ).write.parquet(old)
+    new = store.catalog.path(store.table)
+
+    def footer(root):
+        files = glob.glob(f"{root}/**/*.parquet", recursive=True)
+        return pq.read_schema(files[0])
+
+    assert footer(new).equals(footer(old), check_metadata=True)
+    got, want = store.load(), spark.read.parquet(old)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+
+
+def test_fact_profile_cube_lost_blocks_recompute(spark, seq_fixture,
+                                                 monkeypatch):
+    """The shared fact-profile cube loses its cached blocks right after
+    it is built (as when an executor holding them dies).  Its consumers
+    read it through the cache entry, find no blocks, recompute the cube
+    from its lineage and reach the same verdicts as an undisturbed
+    run."""
+    import ensembl_datacheck_spark.checks.core as core
+
+    def verdicts(summary):
+        def got(a):
+            return round(a.got, 9) if isinstance(a.got, float) else a.got
+
+        return {r.check_name: (r.status, r.error, [
+            (a.name, a.status, got(a)) for a in r.assertions])
+            for r in summary.results}
+
+    specs = [s for s in registry.default_suite()
+             if "fact_profile" in s.shared_uses]
+    assert len(specs) >= 2
+    want = verdicts(Runner(spark, _tables(seq_fixture), n_buckets=16).run(
+        specs, write_checkpoints=False))
+
+    jsc = spark.sparkContext._jsc
+    dropped = []
+    orig = core._shared_fact_profile
+
+    def build_then_lose_blocks(ctx):
+        before = set(jsc.getPersistentRDDs().keySet())
+        prof = orig(ctx)
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id not in before:
+                rdd.unpersist(True)
+                dropped.append(rdd_id)
+        return prof
+
+    monkeypatch.setattr(core, "_shared_fact_profile", build_then_lose_blocks)
+    got = verdicts(Runner(spark, _tables(seq_fixture), n_buckets=16).run(
+        specs, write_checkpoints=False))
+    assert dropped, "the cube was never built"
+    assert not set(dropped) & set(jsc.getPersistentRDDs().keySet())
+    assert got == want

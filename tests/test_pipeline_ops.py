@@ -4,6 +4,8 @@ Arrow array-function tier."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -2017,6 +2019,27 @@ class TestLmArrowTierAndStream:
                 feats, IMP.feature_counts(feats), IMP.feature_counts(feats),
                 8, alpha=0.0,
             )
+
+    def test_bigram_lam_guard(self, spark):
+        """lam outside [0, 1] can make the interpolated probability
+        negative: for the unseen bigram (3, 3) below, 1.5 * 1/8 - 0.5 *
+        5/12 < 0.  Its log is a NULL that the per-document sum would skip,
+        so the scorer refuses such a lam."""
+        from ensembl_datacheck_spark.operators import lm as LM
+
+        train = spark.createDataFrame(
+            [(1, [3, 4, 3, 4, 3, 4, 3, 5])], "doc_id long, tokens array<long>"
+        )
+        probe = spark.createDataFrame(
+            [(2, [3, 3])], "doc_id long, tokens array<long>"
+        )
+        fit, bi = LM.fit_unigram_lm(train), LM.bigram_profile(train)
+        for lam in (1.5, -0.1):
+            with pytest.raises(ValueError, match="lam"):
+                LM.lm_bigram_cross_entropy(probe, fit, bi, lam=lam)
+        for lam in (0.0, 1.0):
+            [r] = LM.lm_bigram_cross_entropy(probe, fit, bi, lam=lam).collect()
+            assert r.n_scored == 2 and math.isfinite(r.ce_nats)
 
     def test_empty_scored_thresholds_raise(self, spark):
         from ensembl_datacheck_spark.operators import lm as LM
