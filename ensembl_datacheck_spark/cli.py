@@ -51,8 +51,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--cores", type=int, default=None)
     p.add_argument("--parallelism", type=int, default=4,
-                   help="checks in flight concurrently (FAIR-pool jobs; "
-                   "the fused fact scan overlaps them) — the analogue of "
+                   help="checks in flight concurrently (their jobs share "
+                   "executor slots under Spark's FIFO scheduler; the fused "
+                   "fact scan overlaps them) — the analogue of "
                    "the reference's analysis_capacity throttle "
                    "(DbDataChecks_conf.pm:214-295); 1 = serial")
     p.add_argument("--force", action="store_true",

@@ -108,7 +108,8 @@ def _gram_stream(
         .select(F.col(id_col), clean.alias("__clean"))
         .filter(F.size("__clean") >= 1)
     )
-    meta = {"n_buckets": n_buckets, "feat_hash": hash_tier}
+    meta = {"n_buckets": n_buckets, "feat_hash": hash_tier,
+            "use_bigrams": use_bigrams}
     if hash_tier == "fast":
         uni = F.expr(
             "transform(__clean, w -> struct(CAST(w AS BIGINT) AS w1, "
@@ -161,9 +162,25 @@ def _feat_meta(frame: DataFrame) -> tuple[int | None, str | None]:
     return (int(b) if b is not None else None), md.get("feat_hash")
 
 
-def _check_hash_tier(expected: str, frames: dict[str, DataFrame]) -> None:
-    """Profiles and scorer must use ONE hash tier — portable and fast
-    feature ids are unrelated, so mixing them scores garbage silently."""
+def _feat_grams(frame: DataFrame) -> bool | None:
+    """The ``use_bigrams`` recorded on a frame's feat column, or None
+    when absent."""
+    if "feat" not in frame.columns:
+        return None
+    return frame.schema["feat"].metadata.get("use_bigrams")
+
+
+def _check_hash_tier(
+    expected: str,
+    frames: dict[str, DataFrame],
+    use_bigrams: bool | None = None,
+) -> None:
+    """Profiles and scorer must hash ONE way: one hash tier — portable
+    and fast feature ids are unrelated, so mixing them scores garbage
+    silently — and, given ``use_bigrams``, one gram set: a unigram-only
+    profile scored against a bigram stream keeps every id inside
+    [0, B), so no width check sees it, yet every bigram feature reads as
+    unseen.  Both come from schema metadata: no Spark job."""
     for name, frame in frames.items():
         _, h = _feat_meta(frame)
         if h is not None and h != expected:
@@ -172,6 +189,14 @@ def _check_hash_tier(expected: str, frames: dict[str, DataFrame]) -> None:
                 f"uses {expected!r} — feature ids from different hash "
                 "tiers are unrelated; rebuild the profiles with the "
                 "same hash_tier"
+            )
+        g = _feat_grams(frame)
+        if use_bigrams is not None and g is not None and g != use_bigrams:
+            raise ValueError(
+                f"{name} was built with use_bigrams={g} but this call "
+                f"scores use_bigrams={use_bigrams} — the profile and "
+                "the scored stream count different features; rebuild "
+                "the profiles with the same use_bigrams"
             )
 
 
@@ -372,7 +397,7 @@ def importance_log_weights_from_docs(
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0 (got {alpha})")
     _check_hash_tier(hash_tier, {"target_counts": target_counts,
-                                 "raw_counts": raw_counts})
+                                 "raw_counts": raw_counts}, use_bigrams)
     n_buckets = _resolve_width(
         n_buckets, {"target_counts": target_counts,
                     "raw_counts": raw_counts}
@@ -426,7 +451,8 @@ def importance_log_weights(
     _, feat_hash = _feat_meta(raw_features)
     if feat_hash is not None:
         _check_hash_tier(feat_hash, {"target_counts": target_counts,
-                                     "raw_counts": raw_counts})
+                                     "raw_counts": raw_counts},
+                         _feat_grams(raw_features))
     else:
         # features carry no tier metadata (built elsewhere): the two
         # profiles must still agree with EACH OTHER
@@ -489,7 +515,7 @@ def importance_log_weights_arrow(
     if alpha <= 0:
         raise ValueError(f"alpha must be > 0 (got {alpha})")
     _check_hash_tier("portable", {"target_counts": target_counts,
-                                  "raw_counts": raw_counts})
+                                  "raw_counts": raw_counts}, use_bigrams)
     n_buckets = _resolve_width(
         n_buckets, {"target_counts": target_counts,
                     "raw_counts": raw_counts}

@@ -89,7 +89,9 @@ class CheckpointStore:
         import threading
 
         self._write_lock = threading.Lock()
-        self._map_cache: tuple[str, dict[str, set[int]]] | None = None
+        self._map_cache: (
+            tuple[str, tuple[dict[str, set[int]], dict[int, int]]] | None
+        ) = None
         self._append_gen = 0  # bumps on append; guards the cache fill
 
     def load(self) -> DataFrame | None:
@@ -137,33 +139,52 @@ class CheckpointStore:
         ONE load + aggregation, memoized until the next append — a
         per-check query would re-read the checkpoint table once per
         check per run (× fleet targets)."""
+        return self._lineage_state(lineage)[0]
+
+    def bucket_rows(self, lineage: str) -> dict[int, int]:
+        """{partition_id: n_rows} recorded under the lineage, from the
+        same load as ``completed_map`` (partition -1 carries the table
+        total).  Every check's row for one bucket records the same count,
+        and a lineage pins the input, so a resume fills its checkpoint
+        rows' ``n_rows`` from here instead of recounting the fact
+        table."""
+        return self._lineage_state(lineage)[1]
+
+    def _lineage_state(
+        self, lineage: str
+    ) -> tuple[dict[str, set[int]], dict[int, int]]:
         if self._map_cache is not None and self._map_cache[0] == lineage:
             return self._map_cache[1]
         gen = self._append_gen
         df = self.load()
         if df is None:
-            return {}
+            return {}, {}
         latest = (
             # lineage scopes the history namespace (db + input state):
             # rows from other lineages must not shadow this one's latest
             df.filter(F.col("lineage") == lineage)
             .groupBy("check_name", "partition_id")
-            .agg(F.max_by(F.struct("finished", "status"), "finished").alias("last"))
+            .agg(F.max_by(F.struct("finished", "status", "n_rows"),
+                          "finished").alias("last"))
             .select(
                 "check_name", "partition_id",
                 F.col("last.status").alias("status"),
+                F.col("last.n_rows").alias("n_rows"),
             )
-            .filter(F.col("status") == "ok")
         )
-        out: dict[str, set[int]] = {}
+        done: dict[str, set[int]] = {}
+        rows: dict[int, int] = {}
         for r in latest.collect():
-            out.setdefault(r["check_name"], set()).add(r["partition_id"])
+            if r["status"] == "ok":
+                done.setdefault(r["check_name"], set()).add(r["partition_id"])
+            if r["n_rows"] is not None:
+                rows[r["partition_id"]] = r["n_rows"]
         with self._write_lock:
             # don't publish a map computed from pre-append data: a
             # concurrent append invalidated it mid-computation
             if gen == self._append_gen:
-                self._map_cache = (lineage, out)
-        return out
+                self._map_cache = (lineage, (done, rows))
+        return done, rows
 
 
 def new_run_id() -> str:

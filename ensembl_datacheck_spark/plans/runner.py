@@ -25,7 +25,8 @@ from __future__ import annotations
 import threading
 import time
 import traceback
-from typing import Callable
+from contextlib import contextmanager
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +43,7 @@ from ensembl_datacheck_spark.plans.checkpoint import (
     new_run_id,
 )
 from ensembl_datacheck_spark.registry import CheckSpec
+from ensembl_datacheck_spark.sources.io import localize_if_small
 from ensembl_datacheck_spark.verdict import (
     AssertionResult,
     CheckResult,
@@ -50,6 +52,33 @@ from ensembl_datacheck_spark.verdict import (
 )
 
 VIOLATIONS_SCHEMA = "check_name string, assertion string, partition_id int, key string, detail string"
+
+
+@contextmanager
+def job_group(
+    spark: SparkSession, name: str, pool: str | None = None
+) -> Iterator[None]:
+    """Tag every Spark job this thread launches inside the block with
+    job group ``dcheck:<name>`` (and, given ``pool``, label its stages
+    with that scheduler pool); the thread's previous properties come
+    back afterwards.  Jobs AQE and broadcasts launch on the query's
+    behalf inherit the tag, so Spark's status store attributes each job
+    to the check (or runner step) that caused it."""
+    sc = spark.sparkContext
+    props = {
+        "spark.jobGroup.id": f"dcheck:{name}",
+        "spark.job.description": f"dcheck:{name}",
+    }
+    if pool is not None:
+        props["spark.scheduler.pool"] = pool
+    prev = {k: sc.getLocalProperty(k) for k in props}
+    for k, v in props.items():
+        sc.setLocalProperty(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            sc.setLocalProperty(k, v)
 
 
 class SkipCheck(Exception):
@@ -127,6 +156,7 @@ class CheckContext:
         n_buckets: int = 64,
         fact_table: str = "sequences",
         shared: SharedComputations | None = None,
+        local_table: Callable[[str, DataFrame], DataFrame] | None = None,
     ):
         self.spark = spark
         self.tables = tables
@@ -142,10 +172,17 @@ class CheckContext:
         #: run_check callers get a private instance (each check then
         #: computes its own profile — today's per-check cost, no sharing)
         self.shared = shared if shared is not None else SharedComputations()
+        #: the Runner's per-run table resolver (Runner._table_for: small
+        #: dimension tables become local relations); standalone
+        #: run_check callers read their tables as given
+        self._local_table = local_table
 
     def table(self, name: str) -> DataFrame:
         if name in self.tables:
-            return self.tables[name]
+            df = self.tables[name]
+            if self._local_table is not None:
+                return self._local_table(name, df)
+            return df
         if "." in name:
             # cross-database lookup (S25): a qualified name resolves
             # through the session catalog (io.register_database) — the
@@ -216,12 +253,14 @@ def run_check(
     bucket_key: str = "doc_id",
     n_buckets: int = 64,
     shared: SharedComputations | None = None,
+    local_table: Callable[[str, DataFrame], DataFrame] | None = None,
 ) -> tuple[CheckResult, list[DataFrame]]:
     """Programmatic single-check entry point (reference §3.3:
     `My::Check->new(...)->run()`)."""
     ctx = CheckContext(
         spark, tables, config, check_name=spec.name,
         bucket_key=bucket_key, n_buckets=n_buckets, shared=shared,
+        local_table=local_table,
     )
     ctx.result.severity = spec.severity.value
     try:
@@ -277,50 +316,79 @@ class Runner:
         # collide.  Default: private per-run memo, today's behavior.
         self.shared = shared if shared is not None else SharedComputations()
         self._owns_shared = shared is None
-        self._rows_per_bucket: dict[int, int] | None = None
-        self._rpb_lock = threading.Lock()
         self._cc_lock = threading.Lock()
         self._completed_cache: dict[str, set[int]] | None = None
+        # per-run state, set up by run(): the dimension tables' local
+        # relations (_table_for) and the rows per bucket the fused scan
+        # counted (partition -1 = the whole table)
+        self._locals: SharedComputations | None = None
+        self._scanned_rows: dict[int, int] = {}
 
     # --- helpers ---
 
     def _bucket(self) -> F.Column:
         return bucket_col(self.bucket_key, self.n_buckets)
 
-    def rows_per_bucket(self) -> dict[int, int]:
-        """One groupBy-count per run, shared by all checkpoint rows.
-        Runs without the fact table (e.g. a meta-only spec-pack suite)
-        report no per-bucket row counts rather than failing.  Lock-guarded
-        compute-once: with ``parallelism`` > 1 the fused scan and the
-        pooled checks race to be first caller, and exactly one count job
-        must run (the fused counts set it for free when they cover the
-        whole table — see _run_fused)."""
-        with self._rpb_lock:
-            if self._rows_per_bucket is None:
-                if self.fact_table not in self.tables:
-                    self._rows_per_bucket = {}
-                    return self._rows_per_bucket
-                rows = (
-                    self.tables[self.fact_table]
-                    .groupBy(self._bucket().alias("b"))
-                    .count()
-                    .collect()
-                )
-                self._rows_per_bucket = {r["b"]: r["count"] for r in rows}
-            return self._rows_per_bucket
+    def _table_for(self, name: str, df: DataFrame) -> DataFrame:
+        """What ``ctx.table(name)`` hands a check during a run: a
+        non-fact table Spark would broadcast becomes a local relation on
+        first use and is shared by every later check of the run
+        (sources.io.localize_if_small); the fact table, and any table
+        outside a run, stays as given."""
+        cache = self._locals
+        if cache is None or name == self.fact_table:
+            return df
+
+        def build() -> DataFrame:
+            with job_group(self.spark, "__tables__"):
+                return localize_if_small(self.spark, df)
+
+        return cache.get(name, build)
+
+    def _bucket_rows(self, need: set[int]) -> dict[int, int]:
+        """Rows per bucket for the checkpoint rows' ``n_rows`` (partition
+        -1: the whole table), from counts the run already holds: the
+        fused scan's, then the lineage's checkpoint rows (a resume).  The
+        fact table is counted only when neither covers every bucket in
+        ``need``.  Runs without the fact table (e.g. a meta-only
+        spec-pack suite) report no row counts rather than failing."""
+        if self.fact_table not in self.tables:
+            return {}
+        known = dict(self._scanned_rows)
+        if not need <= known.keys() and self.store is not None:
+            for b, n in self.store.bucket_rows(self.lineage).items():
+                known.setdefault(b, n)
+        if -1 not in known and known.keys() >= set(range(self.n_buckets)):
+            known[-1] = sum(known[b] for b in range(self.n_buckets))
+        return known if need <= known.keys() else self._count_bucket_rows()
+
+    def _count_bucket_rows(self) -> dict[int, int]:
+        """One groupBy-count over the whole fact table."""
+        rows = (
+            self.tables[self.fact_table]
+            .groupBy(self._bucket().alias("b"))
+            .count()
+            .collect()
+        )
+        counted = {r["b"]: r["count"] for r in rows}
+        counted[-1] = sum(counted.values())
+        return counted
 
     def _pending_buckets(self, spec: CheckSpec) -> list[int] | None:
         """None = all pending.  Empty list = nothing to do (skip)."""
         if self.store is None or spec.force:
             return None
-        # lock-guarded compute-once (same discipline as rows_per_bucket):
-        # with fused_in_pool plus pooled checks several threads race to be
-        # first caller, and exactly one checkpoint-table load must run
+        # lock-guarded compute-once: with fused_in_pool plus pooled
+        # checks several threads race to be first caller, and exactly
+        # one checkpoint-table load must run
         with self._cc_lock:
             if self._completed_cache is None:
                 # one checkpoint-table load + aggregation serves every
                 # check in this run (invalidated by run() after appending)
-                self._completed_cache = self.store.completed_map(self.lineage)
+                with job_group(self.spark, "__checkpoint__"):
+                    self._completed_cache = self.store.completed_map(
+                        self.lineage
+                    )
             done = self._completed_cache.get(spec.name, set())
         if not done:
             return None
@@ -345,13 +413,14 @@ class Runner:
         pending: list[int] | None,
         started: float,
     ) -> list[CheckpointRow]:
+        """The check's checkpoint rows; ``n_rows`` is filled for the whole
+        batch just before the append (_bucket_rows)."""
         finished = time.time()
         if result.skip_reason is not None:
             # a skipped check never ran: recording 'ok' buckets would make
             # resume silently skip it forever (the reference's history
             # only records finished runs, DbCheck.pm:767-804)
             return []
-        rpb = self.rows_per_bucket()
         if spec.per_partition:
             buckets = pending if pending is not None else list(range(self.n_buckets))
         else:
@@ -369,10 +438,8 @@ class Runner:
         for b in buckets:
             nv = viol_counts.get(b, 0)
             if b == -1:
-                nr = sum(rpb.values())
                 status = result.status.value
             else:
-                nr = rpb.get(b, 0)
                 status = (
                     "fail"
                     if nv > 0 or result.error or unattributed_fail
@@ -386,7 +453,7 @@ class Runner:
                     status=status,
                     started=started,
                     finished=finished,
-                    n_rows=nr,
+                    n_rows=0,
                     n_violations=nv,
                     lineage=self.lineage,
                 )
@@ -411,7 +478,11 @@ class Runner:
         lifetime, a storage-memory leak under a long-lived session
         running many targets.  A memo INJECTED by a fleet is left alone
         (siblings on the same table still need it); run_fleet releases
-        it after the whole fan-out."""
+        it after the whole fan-out.  Per-run state (the dimension tables'
+        local relations, the fused scan's row counts) lives only for the
+        call."""
+        self._locals = SharedComputations()
+        self._scanned_rows = {}
         try:
             return self._run_impl(
                 specs,
@@ -421,6 +492,8 @@ class Runner:
                 parallelism=parallelism,
             )
         finally:
+            self._locals = None
+            self._scanned_rows = {}
             if self._owns_shared:
                 self.shared.release()
 
@@ -433,10 +506,16 @@ class Runner:
         parallelism: int = 1,
     ) -> RunSummary:
         """``parallelism`` > 1 runs the non-fused checks concurrently from
-        a thread pool (one Spark job per check in flight, FAIR-pool
-        scheduled) — the in-session analogue of the reference's per-check
-        worker fan-out (DataCheckFan.pm:32-66, analysis_capacity throttle
-        DbDataChecks_conf.pm:270)."""
+        a thread pool (one Spark job per check in flight) — the
+        in-session analogue of the reference's per-check worker fan-out
+        (DataCheckFan.pm:32-66, analysis_capacity throttle
+        DbDataChecks_conf.pm:270).  The engine leaves
+        ``spark.scheduler.mode`` at Spark's FIFO default: concurrent jobs
+        start in submission order and share executor slots as those free
+        up; each check's ``spark.scheduler.pool`` property only labels
+        its stages.  At every parallelism a check's jobs carry job group
+        ``dcheck:<check>`` and the shared scan's ``dcheck:__fused__``
+        (job_group)."""
         summary = RunSummary()
         all_violations: list[DataFrame] = []
         checkpoint_rows: list[CheckpointRow] = []
@@ -477,11 +556,15 @@ class Runner:
         # measured at 20M rows/8 cores this serialization was the single
         # largest scaling drag (the small checks' walls are fixed cost at
         # any core count, so paying them serially caps suite speedup; see
-        # BENCH/BASELINE.md round-3 attribution).  FAIR-pool scheduling
-        # interleaves their tiny jobs with the scan's stages.
+        # BENCH/BASELINE.md round-3 attribution).  Under Spark's FIFO
+        # scheduler their tiny jobs take executor slots as the scan's
+        # tasks finish.
         fused_in_pool = bool(fused) and parallelism > 1 and len(rest) > 1
         if fused and not fused_in_pool:
-            self._run_fused(fused, summary, all_violations, checkpoint_rows)
+            with job_group(self.spark, "__fused__"):
+                self._run_fused(
+                    fused, summary, all_violations, checkpoint_rows
+                )
 
         def exec_one(spec: CheckSpec):
             started = time.time()
@@ -497,12 +580,12 @@ class Runner:
                 # shared values are computed from the FULL fact table; a
                 # resume-filtered scan must not consume (or poison) them
                 shared=self.shared if pending is None else None,
+                local_table=self._table_for,
             )
             if self.store is None or not write_checkpoints:
                 # no checkpoint rows will be written — skip the extra
-                # Spark jobs that exist only to build them (re-executing
-                # violation plans for per-bucket counts + the full-table
-                # rows_per_bucket scan inside _checkpoint_rows)
+                # Spark job that exists only to build them (re-executing
+                # violation plans for per-bucket counts)
                 return result, violations, [], None
             viol_counts: dict[int, int] = {}
             if result.partition_violations:
@@ -526,21 +609,11 @@ class Runner:
             from concurrent.futures import ThreadPoolExecutor
 
             def pooled(spec):
-                self.spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", f"dcheck_{spec.name}"
-                )
-                try:
+                with job_group(self.spark, spec.name, f"dcheck_{spec.name}"):
                     return exec_one(spec)
-                finally:
-                    self.spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", None
-                    )
 
             def fused_pooled():
-                self.spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", "dcheck_fused_scan"
-                )
-                try:
+                with job_group(self.spark, "__fused__", "dcheck_fused_scan"):
                     # appends into summary/all_violations/checkpoint_rows
                     # directly; safe because pooled() tasks only RETURN
                     # their results — the shared lists are written by this
@@ -548,10 +621,6 @@ class Runner:
                     # strictly after pool shutdown
                     self._run_fused(
                         fused, summary, all_violations, checkpoint_rows
-                    )
-                finally:
-                    self.spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", None
                     )
 
             # the fused scan gets a dedicated slot so check fan-out never
@@ -565,7 +634,10 @@ class Runner:
                 if fused_fut is not None:
                     fused_fut.result()
         else:
-            outs = [exec_one(spec) for spec in rest]
+            outs = []
+            for spec in rest:
+                with job_group(self.spark, spec.name):
+                    outs.append(exec_one(spec))
 
         for result, violations, cps, _ in outs:
             summary.results.append(result)
@@ -577,9 +649,17 @@ class Runner:
             union = all_violations[0]
             for v in all_violations[1:]:
                 union = union.unionByName(v)
-            violations_sink(union)
+            with job_group(self.spark, "__funnel__"):
+                violations_sink(union)
         if write_checkpoints and self.store is not None:
-            self.store.append(checkpoint_rows)
+            with job_group(self.spark, "__checkpoint__"):
+                if checkpoint_rows:
+                    rows = self._bucket_rows(
+                        {r.partition_id for r in checkpoint_rows}
+                    )
+                    for r in checkpoint_rows:
+                        r.n_rows = rows.get(r.partition_id, 0)
+                self.store.append(checkpoint_rows)
             self._completed_cache = None  # appended rows invalidate it
         return summary
 
@@ -642,6 +722,7 @@ class Runner:
             bucket_key=self.bucket_key, n_buckets=self.n_buckets,
             fact_table=self.fact_table,
             shared=self.shared if union_pending is None else None,
+            local_table=self._table_for,
         )
         ctx_shared_private = union_pending is not None
         preds: list[RowPredicate] = []
@@ -696,15 +777,17 @@ class Runner:
         bucket = self._bucket()
         counts = fused_violation_counts(scan2, preds, bucket).collect()
         viol_rows = fused_violation_rows(scan2, preds, bucket, self.bucket_key)
+        # the counts carry every scanned bucket's row count (an absent
+        # bucket has none): the checkpoint rows' n_rows need no separate
+        # counting scan.  Only this thread writes _scanned_rows during
+        # the pool phase; run() reads it after pool shutdown
+        scanned = {r["partition_id"]: r["n_rows"] for r in counts}
+        covered = (
+            range(self.n_buckets) if union_pending is None else union_pending
+        )
+        self._scanned_rows.update({b: scanned.get(b, 0) for b in covered})
         if union_pending is None:
-            # the fused counts already carry rows-per-bucket for the whole
-            # table — no separate counting scan needed (unless a pooled
-            # sibling already computed one while this scan ran)
-            with self._rpb_lock:
-                if self._rows_per_bucket is None:
-                    self._rows_per_bucket = {
-                        r["partition_id"]: r["n_rows"] for r in counts
-                    }
+            self._scanned_rows[-1] = sum(scanned.values())
 
         # per-check verdicts from the fused counts
         for s in todo:
@@ -735,7 +818,7 @@ class Runner:
                 )
                 res.n_violations += total
             res.n_rows_checked = sum(
-                n for b, n in self.rows_per_bucket().items()
+                n for b, n in scanned.items()
                 if my_pending is None or b in my_pending
             )
             summary.results.append(res.finish())

@@ -277,6 +277,30 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFram
     return spark.createDataFrame(table, struct)
 
 
+def localize_if_small(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """``df`` as a JVM local relation when Spark would broadcast it, else
+    ``df`` itself.  "Would broadcast" is Spark's own size rule: the
+    optimized plan's estimated size is at most
+    ``spark.sql.autoBroadcastJoinThreshold`` (so a threshold of -1 turns
+    this off too); streaming frames are never localized.  The rows are
+    collected and rebuilt on the JVM side, never through Python.
+
+    On a local relation Catalyst folds filters, projections and limits
+    at optimization time (``ConvertToLocalRelation``), so a probe such
+    as ``filter(...).limit(11).collect()`` runs no Spark job, where the
+    file-backed table costs a job or two per probe."""
+    if df.isStreaming:
+        return df
+    jspark, jdf = spark._jsparkSession, df._jdf
+    threshold = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+    size = int(str(jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    if not 0 <= size <= threshold:
+        return df
+    return DataFrame(
+        jspark.createDataFrame(jdf.collectAsList(), jdf.schema()), spark
+    )
+
+
 SF_TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"

@@ -334,6 +334,7 @@ def dsir_weights_stream(
     tokens_col: str = "tokens",
     n_buckets: int | None = None,
     alpha: float = 1.0,
+    use_bigrams: bool = True,
 ) -> DataFrame:
     """Streaming twin of DSIR selection: score ARRIVING documents
     against STATIC target/raw hashed-ngram profiles and (optionally)
@@ -346,7 +347,9 @@ def dsir_weights_stream(
     ``select_top_k`` once on a reference corpus, read the rank-k
     boundary weight, and pass it here — DSIR's resampling acceptance
     happens per row.  ``min_log_weight=None`` emits every scored row
-    (weight tagging for a downstream sampler).
+    (weight tagging for a downstream sampler).  ``use_bigrams`` must
+    match the gram set the profiles were fitted with; profiles record it
+    on their ``feat`` column and a mismatch raises.
 
     Scale shape: ``importance_log_weights_arrow`` is stateless per
     micro-batch (both profiles ride in the task closure as
@@ -361,7 +364,7 @@ def dsir_weights_stream(
     scored = importance_log_weights_arrow(
         stream, target_counts, raw_counts,
         n_buckets=n_buckets, alpha=alpha,
-        id_col=id_col, tokens_col=tokens_col,
+        id_col=id_col, tokens_col=tokens_col, use_bigrams=use_bigrams,
     )
     if min_log_weight is None:
         return scored

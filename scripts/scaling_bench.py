@@ -67,8 +67,8 @@ n_failed = best_summary.n_failed
 # per-check wall attribution from the BEST run: the round-5 quantile
 # regression needed a same-data A/B bisect to attribute because only the
 # total wall was reported — the slowest-checks list makes the next one a
-# one-read diagnosis.  Per-check runtimes overlap under the FAIR pool
-# (their sum exceeds the wall); read them as relative weight.  Checks
+# one-read diagnosis.  Per-check runtimes overlap in the runner's thread
+# pool (their sum exceeds the wall); read them as relative weight.  Checks
 # fused into one shared scan report identical (started, runtime) — they
 # collapse to one entry so the list stays diagnostic — but the label
 # checks REAL fused membership (row_predicates, the runner's own fusion

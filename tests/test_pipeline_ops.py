@@ -2488,6 +2488,45 @@ class TestDsirArrowTierAndStream:
         # ties at the boundary would admit extras; the fixture has none
         assert got == batch_expected
 
+    def test_unigram_profiles_against_bigram_scoring_raise(
+        self, spark, arrow_docs, tmp_path
+    ):
+        """Profiles fitted with use_bigrams=False record it on ``feat``;
+        scoring them against a bigram stream raises at plan time, with
+        no Spark job, on every scorer tier and on the streaming path.
+        Their feature ids stay inside [0, B), so no width check would
+        catch the mix."""
+        from ensembl_datacheck_spark.operators import importance as IMP
+        from ensembl_datacheck_spark.streaming import dsir_weights_stream
+
+        uni = IMP.feature_counts_from_docs(arrow_docs, n_buckets=64,
+                                           use_bigrams=False)
+        assert uni.schema["feat"].metadata["use_bigrams"] is False
+        sc = spark.sparkContext
+        group = "dsir-grams-guard-probe"
+        sc.setJobGroup(group, "gram-set guard must not run a job")
+        try:
+            with pytest.raises(ValueError, match="use_bigrams"):
+                IMP.importance_log_weights_from_docs(arrow_docs, uni, uni)
+            with pytest.raises(ValueError, match="use_bigrams"):
+                IMP.importance_log_weights_arrow(arrow_docs, uni, uni)
+            with pytest.raises(ValueError, match="use_bigrams"):
+                IMP.importance_log_weights(
+                    IMP.hashed_ngram_features(arrow_docs, n_buckets=64),
+                    uni, uni)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+        src = tmp_path / "grams_src"
+        arrow_docs.write.parquet(str(src))
+        stream = spark.readStream.schema(arrow_docs.schema).parquet(str(src))
+        with pytest.raises(ValueError, match="use_bigrams"):
+            dsir_weights_stream(stream, uni, uni)
+        # the matching gram set scores
+        out = dsir_weights_stream(stream, uni, uni, use_bigrams=False)
+        assert out.isStreaming
+
 
 def test_dsir_arrow_dense_rejects_out_of_width_profiles(spark):
     """Metadata-less profiles (parquet round-trips drop column metadata)

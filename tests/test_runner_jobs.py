@@ -1,0 +1,246 @@
+"""Spark jobs per suite run: job-group tags, small dimension tables as
+local relations, and checkpoint row counts without extra scans.
+
+The dimension tables here are read from parquet: a frame built with
+``createDataFrame`` from Python rows is a plan of unknown size, which
+Spark would never broadcast, so the Runner never localizes it."""
+
+from __future__ import annotations
+
+from contextlib import contextmanager
+
+import pytest
+from pyspark.sql import functions as F
+
+import ensembl_datacheck_spark.checks  # noqa: F401  (registers the suite)
+from ensembl_datacheck_spark import registry
+from ensembl_datacheck_spark.plans.checkpoint import CheckpointStore
+from ensembl_datacheck_spark.plans.runner import Runner
+from ensembl_datacheck_spark.registry import CheckSpec
+from ensembl_datacheck_spark.sources import synth
+from ensembl_datacheck_spark.sources.io import Catalog, localize_if_small
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+RUNNER_GROUPS = {"dcheck:__fused__", "dcheck:__tables__",
+                 "dcheck:__checkpoint__", "dcheck:__funnel__"}
+
+
+@pytest.fixture(scope="module")
+def parquet_tables(spark, tmp_path_factory):
+    """A 2k-row fact table plus dimension tables with one injected
+    defect each: a blank ``sources.source`` and a negative
+    ``baseline_stats.value``."""
+    root = tmp_path_factory.mktemp("localized")
+    gen = dict(n_partitions=4, median_tok=32, max_tok=256)
+    seq = synth.gen_sequences(spark, 2000, **gen)
+    clean = synth.gen_sequences(spark, 2000, inject_violations=False, **gen)
+    sources = synth.gen_sources(spark)
+    sources = sources.unionByName(
+        spark.createDataFrame([("  ", 0.0, True)], sources.schema))
+    baseline = synth.gen_baseline_stats(spark, clean).withColumn(
+        "value",
+        F.when((F.col("stat_key") == "n_tok_quantile")
+               & (F.col("category") == "0.99"), F.lit(-1.0))
+        .otherwise(F.col("value")))
+    paths = {}
+    for name, df in (("sequences", seq), ("sources", sources),
+                     ("baseline_stats", baseline)):
+        paths[name] = str(root / name)
+        df.write.parquet(paths[name])
+    return paths
+
+
+def _read(spark, paths):
+    return {name: spark.read.parquet(p) for name, p in paths.items()}
+
+
+@contextmanager
+def _threshold(spark, value):
+    old = spark.conf.get(THRESHOLD)
+    spark.conf.set(THRESHOLD, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(THRESHOLD, old)
+
+
+def _last_job(spark):
+    return max(_jobs_since(spark, -1), default=-1)
+
+
+def _jobs_since(spark, last):
+    """{job id: job group} of the jobs after ``last``, read from Spark's
+    status store once its listener bus has drained."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    out = {}
+    for i in range(jobs.size()):
+        j = jobs.apply(i)
+        if j.jobId() > last:
+            g = j.jobGroup()
+            out[j.jobId()] = g.get() if g.isDefined() else None
+    return out
+
+
+@pytest.mark.parametrize("parallelism", [1, 4])
+def test_every_job_carries_its_check_group(spark, parquet_tables, tmp_path,
+                                           parallelism):
+    """Every Spark job of a suite run (first run and resume) is tagged
+    ``dcheck:<check>`` or with one of the runner's own groups, at every
+    parallelism; the shared scan's jobs are ``dcheck:__fused__``, and a
+    thread's own job group survives the run."""
+    specs = registry.default_suite()
+    store = CheckpointStore(Catalog(spark, tmp_path / "wh"))
+    allowed = {f"dcheck:{s.name}" for s in specs} | RUNNER_GROUPS
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "the caller's own group")
+    try:
+        for _ in range(2):  # first run, then resume
+            # reading parquet infers its schema with a job of the caller's
+            tables = _read(spark, parquet_tables)
+            last = _last_job(spark)
+            Runner(spark, tables, n_buckets=16,
+                   checkpoint_store=store, lineage="tags").run(
+                specs, violations_sink=lambda df: store.catalog.append_atomic(
+                    df, "violations"),
+                parallelism=parallelism)
+            groups = set(_jobs_since(spark, last).values())
+            assert groups <= allowed, groups - allowed
+            assert "dcheck:__fused__" in groups
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
+def test_dimension_row_rule_launches_no_job(spark, parquet_tables):
+    """A dimension row rule's probe runs against a local relation:
+    filter and limit fold at optimization time, so its job group holds
+    no job.  With localization off (threshold -1) the same probe reads
+    parquet."""
+    specs = [s for s in registry.default_suite()
+             if s.name in ("SourceNameNotBlank", "BaselineValueDomain")]
+    assert len(specs) == 2
+
+    def jobs_by_check(threshold):
+        with _threshold(spark, threshold):
+            tables = _read(spark, parquet_tables)
+            last = _last_job(spark)
+            summary = Runner(spark, tables, n_buckets=16).run(specs)
+            groups = list(_jobs_since(spark, last).values())
+        assert {r.check_name: r.status.value for r in summary.results} == {
+            "SourceNameNotBlank": "fail", "BaselineValueDomain": "fail"}
+        return {s.name: groups.count(f"dcheck:{s.name}") for s in specs}
+
+    assert jobs_by_check(spark.conf.get(THRESHOLD)) == {
+        "SourceNameNotBlank": 0, "BaselineValueDomain": 0}
+    off = jobs_by_check("-1")
+    assert all(n > 0 for n in off.values()), off
+
+
+def test_localized_run_matches_file_backed_run(spark, parquet_tables,
+                                               tmp_path, monkeypatch):
+    """Localized dimension tables change no output: verdicts, checkpoint
+    rows (minus run id and timings) and violations rows equal a run with
+    localization off, on the first run and on the resume.  Neither run
+    counts the fact table for its checkpoint rows' ``n_rows``: the fused
+    scan's counts fill the first run's, the lineage's checkpoint rows the
+    resume's, which match the first run's bucket for bucket."""
+    def no_full_count(self):
+        raise AssertionError("full-table row count")
+
+    monkeypatch.setattr(Runner, "_count_bucket_rows", no_full_count)
+    specs = registry.default_suite()
+
+    def verdicts(summary):
+        def got(a):
+            return round(a.got, 9) if isinstance(a.got, float) else a.got
+
+        return {r.check_name: (r.status, r.n_violations, r.skip_reason,
+                               r.error, [(a.name, a.status, got(a))
+                                         for a in r.assertions])
+                for r in summary.results}
+
+    def run_pair(threshold, wh):
+        store = CheckpointStore(Catalog(spark, tmp_path / wh))
+        out = []
+        with _threshold(spark, threshold):
+            for _ in range(2):
+                v = verdicts(Runner(
+                    spark, _read(spark, parquet_tables), n_buckets=16,
+                    checkpoint_store=store, lineage="parity").run(
+                    specs, parallelism=4,
+                    violations_sink=lambda df: store.catalog.append_atomic(
+                        df, "violations")))
+                out.append(v)
+        cps = sorted(
+            tuple(r) for r in store.load().select(
+                "check_name", "partition_id", "status", "n_rows",
+                "n_violations", "lineage").collect())
+        viol = sorted(
+            tuple(r) for r in store.catalog.load(
+                "violations", recursive=True).collect())
+        return out, cps, viol
+
+    local = run_pair(spark.conf.get(THRESHOLD), "wh_local")
+    files = run_pair("-1", "wh_files")
+    assert local == files
+
+    (first, resume), cps, viol = local
+    failed = {n for n, v in first.items() if v[0].value == "fail"}
+    assert {"SourceNameNotBlank", "BaselineValueDomain"} <= failed
+    assert {n for n, v in resume.items() if v[0].value == "fail"} == failed
+    assert viol
+    # each bucket's n_rows is one figure across checks and both runs,
+    # and the buckets add up to the table
+    per_bucket: dict[int, set[int]] = {}
+    for _, b, _, n_rows, _, _ in cps:
+        per_bucket.setdefault(b, set()).add(n_rows)
+    assert all(len(v) == 1 for v in per_bucket.values()), per_bucket
+    total = spark.read.parquet(parquet_tables["sequences"]).count()
+    assert per_bucket[-1] == {total}
+    assert sum(next(iter(per_bucket[b])) for b in range(16)) == total
+
+
+def test_small_dimensions_localize_once_others_stay_file_backed(
+        spark, parquet_tables, tmp_path):
+    """Within a run every check gets the same local relation for a small
+    dimension table, while the fact table, a table above the broadcast
+    threshold and a streaming table stay file-backed."""
+    stream_dir = str(tmp_path / "stream")
+    spark.read.parquet(parquet_tables["sources"]).write.parquet(stream_dir)
+    tables = _read(spark, parquet_tables)
+    src_schema = tables["sources"].schema
+    tables["stream"] = spark.readStream.schema(src_schema).parquet(stream_dir)
+    seen: dict[str, list] = {}
+
+    def body(ctx):
+        for name in ("sequences", "sources", "baseline_stats", "stream"):
+            seen.setdefault(name, []).append(ctx.table(name))
+
+    specs = [CheckSpec(name=f"Probe{i}", description="table probe",
+                       body=body) for i in range(2)]
+
+    def leaf(df):
+        return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+    size = int(str(tables["sources"]._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes()))
+    # sources fits the threshold, baseline_stats (larger) does not
+    with _threshold(spark, str(size)):
+        Runner(spark, tables, n_buckets=16).run(specs, parallelism=2)
+    a, b = seen["sources"]
+    assert a is b and leaf(a) == "LocalRelation"
+    assert all(leaf(df) != "LocalRelation"
+               for name in ("sequences", "baseline_stats", "stream")
+               for df in seen[name])
+    assert all(df.isStreaming for df in seen["stream"])
+    assert localize_if_small(spark, tables["stream"]) is tables["stream"]
+    # outside a run, and from standalone run_check, tables stay as given
+    from ensembl_datacheck_spark.plans.runner import run_check
+
+    seen.clear()
+    run_check(specs[0], spark, tables)
+    assert seen["sources"][0] is tables["sources"]
