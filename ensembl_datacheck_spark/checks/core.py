@@ -822,8 +822,8 @@ def token_eval_contamination(ctx):
     "length/source/quantile checks cannot see (a tokenizer or filter "
     "change that preserves n_tok but shifts which tokens appear): "
     "unigram histogram via explode -> two-stage count (map-side "
-    "combinable, shuffle bounded by vocab size; Arrow bincount tier via "
-    "config[unigram_arrow]), folded onto the BASELINE's top-K token set "
+    "combinable, shuffle bounded by vocab size), folded onto the "
+    "BASELINE's top-K token set "
     "+ __other__ bucket (at most K+1 rows to the driver), then the same "
     "chi-square machinery as SourceDrift plus an L1 (total-variation) "
     "bound.  Baseline rows: stat_key='token_unigram' "
@@ -844,10 +844,7 @@ def token_unigram_drift(ctx):
     if not base_hist:
         raise SkipCheck("baseline snapshot carries no token_unigram rows")
     base_tokens = [int(c) for c, _ in base_hist if c != "__other__"]
-    prof = D.unigram_profile(
-        ctx.table("sequences"),
-        arrow=bool(ctx.config.get("unigram_arrow", False)),
-    )
+    prof = D.unigram_profile(ctx.table("sequences"))
     cur_hist = D.collect_histogram(
         D.align_unigram_categories(prof, base_tokens), "category", "count"
     )
@@ -1276,7 +1273,7 @@ def source_unigram_divergence_check(ctx):
     "config[hh_shingle_k]-token shingles (default 2), no shingle "
     "accounts for more than config[max_shingle_share] (default 0.005) "
     "of the corpus's shingle observations "
-    "(operators/skew.heavy_hitter_keys — Misra-Gries candidates + "
+    "(operators/skew.heavy_hitter_keys — hashed-bucket candidates + "
     "broadcast exact recount, so the verdict is exact and "
     "partition-independent without materializing the full shingle "
     "histogram).  A breaching shingle is corpus-level boilerplate — a "

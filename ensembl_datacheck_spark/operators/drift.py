@@ -200,89 +200,32 @@ def category_drift_violations(
     return j.filter(pred)
 
 
-# bincount allocates 8 bytes per id up to the batch max; above this bound
-# (2^24 ids = 128 MB) the buffer no longer pays for itself and the Arrow
-# tier counts via np.unique instead.  Real BPE/unigram-LM vocabularies
-# top out around 2^18; ids past this line are hash-derived or corrupt.
-_BINCOUNT_MAX_ID = 1 << 24
-
-
 def unigram_profile(
     df: DataFrame,
     tokens_col: str = "tokens",
-    arrow: bool = False,
 ) -> DataFrame:
     """(token, count) unigram histogram of a token corpus — the drift
     axis the length/source/quantile checks cannot see: a tokenizer or
     filtering change that preserves n_tok but shifts token CONTENT.
 
-    Two tiers, identical output:
+    ``explode(tokens) → groupBy(token).count()``.  Partial aggregation
+    runs in the same stage as the explode, so the shuffle carries at most
+    vocab-size rows per task regardless of corpus size — at 10^12
+    sequences the exploded 10^15 token rows never materialize past the
+    map-side hash aggregate.  Any SQL engine reproduces it (the oracle
+    replays it), and it beat an Arrow ``numpy.bincount`` tier 110M vs
+    44M tokens/s at 1M×512 (BENCH/UNIGRAM_1M.md).
 
-    * portable (default): ``explode(tokens) → groupBy(token).count()``.
-      Partial aggregation runs in the same stage as the explode, so the
-      shuffle carries at most vocab-size rows per task regardless of
-      corpus size — at 10^12 sequences the exploded 10^15 token rows
-      never materialize past the map-side hash aggregate.  This is the
-      oracle-verified tier (any SQL engine reproduces it).
-    * ``arrow=True``: mapInPandas emitting one ``numpy.bincount`` partial
-      per Arrow batch (token ids are non-negative ints by TokenInvariants'
-      domain check), then the same tiny groupBy-sum combine.  MEASURED
-      SLOWER than the portable tier on this host (44M vs 110M tokens/s at
-      1M×512 — BENCH/UNIGRAM_1M.md): shipping the token arrays through
-      Arrow costs more than bincount saves.  Kept for environments where
-      that balance differs; the default is the measured winner.
-      ``bincount`` allocates O(max token id) per batch, not O(vocab), so
-      a batch whose max id exceeds ``_BINCOUNT_MAX_ID`` (2^24 → 128 MB of
-      int64, the largest real BPE vocabularies are ~2^18) falls back to
-      ``np.unique(..., return_counts=True)`` — O(batch·log batch) time,
-      O(distinct) memory — instead of attempting a multi-GB allocation on
-      sparse large-id vocabularies.
-
-    Both tiers skip NULL/empty arrays (completeness checks own those) and
-    NULL/negative elements (the domain check owns those; bincount cannot
-    index negatives, so the portable tier drops them too — the tiers must
-    agree bin-for-bin).
+    Skips NULL/empty arrays (completeness checks own those) and
+    NULL/negative elements (the domain check owns those).
     """
-    nn = df.filter(F.col(tokens_col).isNotNull() & (F.size(tokens_col) > 0))
-    if not arrow:
-        return (
-            nn.select(F.explode(tokens_col).alias("token"))
-            .filter(F.col("token").isNotNull() & (F.col("token") >= 0))
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("count"))
-        )
-
-    import pandas as pd  # local: Arrow tier only
-
-    def bincount_batches(batches):
-        import numpy as np
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            flat = np.concatenate([
-                np.asarray(a, dtype=np.int64) for a in pdf[tokens_col]
-            ])
-            flat = flat[flat >= 0]  # domain violations belong elsewhere
-            if flat.size == 0:
-                continue
-            if int(flat.max()) > _BINCOUNT_MAX_ID:
-                # sparse large-id vocab: bincount's O(max id) buffer
-                # would dwarf the batch — count by sorting instead
-                toks, counts = np.unique(flat, return_counts=True)
-                yield pd.DataFrame({"token": toks, "count": counts})
-                continue
-            counts = np.bincount(flat)
-            toks = np.nonzero(counts)[0]
-            yield pd.DataFrame({"token": toks, "count": counts[toks]})
-
-    # NULL elements compacted JVM-side so every Arrow batch lands as a
-    # clean int array (np.asarray on a None-bearing list would fall back
-    # to dtype=object); negatives are dropped numpy-side above
-    partials = nn.select(
-        F.array_compact(tokens_col).alias(tokens_col)
-    ).mapInPandas(bincount_batches, schema="token long, count long")
-    return partials.groupBy("token").agg(F.sum("count").alias("count"))
+    return (
+        df.filter(F.col(tokens_col).isNotNull() & (F.size(tokens_col) > 0))
+        .select(F.explode(tokens_col).alias("token"))
+        .filter(F.col("token").isNotNull() & (F.col("token") >= 0))
+        .groupBy("token")
+        .agg(F.count(F.lit(1)).alias("count"))
+    )
 
 
 def align_unigram_categories(

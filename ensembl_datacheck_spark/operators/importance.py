@@ -35,11 +35,10 @@ pytest.
 
 Scale shape (the 100 TB story):
 
-* feature extraction is explode + map-side partial aggregation; the
-  per-document feature bag is bounded by min(doc length, n_buckets);
+* feature extraction is explode + map-side partial aggregation;
 * both distribution fits aggregate to ≤ n_buckets rows (8192 default)
   — broadcast to the scoring join by construction;
-* scoring joins each document's hashed features against the broadcast
+* scoring joins each gram occurrence against the broadcast
   (feat → (t_cnt, r_cnt)) map: zero shuffle; the per-document
   aggregation carries one row per document;
 * top-k is TakeOrderedAndProject (per-partition partial top-k, no
@@ -52,10 +51,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "hashed_ngram_features",
-    "feature_counts",
     "feature_counts_from_docs",
-    "importance_log_weights",
     "importance_log_weights_arrow",
     "importance_log_weights_from_docs",
     "select_top_k",
@@ -83,8 +79,13 @@ def _gram_stream(
     hash_tier: str = "portable",
 ) -> DataFrame:
     """(id, feat) — ONE ROW PER GRAM OCCURRENCE, the shared explode
-    behind both the bag API and the fused scorer.  Hygiene exactly as
-    ``hashed_ngram_features`` documents.
+    behind the distribution fit and the fused scorer: unigrams plus
+    (optionally) adjacent bigrams, each hashed into ``n_buckets``
+    feature ids.  NULL/empty arrays and NULL/negative elements are
+    skipped; a document with no scoreable token emits no rows.  Gram
+    strings before portable hashing: ``CAST(w AS STRING)`` for unigrams,
+    ``w1 || '_' || w2`` for bigrams — the exact strings the SQL oracle
+    rebuilds.
 
     Two hash tiers (recorded in the feat column's metadata so profiles
     and scorer cannot silently mix them — feature ids from different
@@ -236,15 +237,15 @@ def _score_feature_stream(
     n_buckets: int,
     alpha: float,
     id_col: str,
-    weight_col: str | None,
 ) -> DataFrame:
-    """THE smoothed log-likelihood-ratio scorer, single-sourced for the
-    bag and fused paths (their 1e-10 weight-equality invariant is
-    test-pinned, so the smoothing/normalization formula must never be
-    able to drift between them): ``items`` rows are (id, feat[, w]);
-    ``weight_col=None`` scores each row once (occurrence stream), else
-    by its exact multiplicity (bag)."""
-    w = F.lit(1) if weight_col is None else F.col(weight_col)
+    """THE smoothed log-likelihood-ratio scorer over an occurrence
+    stream: ``items`` rows are (id, feat), each counted once.
+
+    Metadata-less profiles (e.g. parquet written by a non-Spark tool)
+    evade ``_resolve_width``, and an id ≥ n_buckets would still join and
+    skew the normalizer silently, so the totals aggregate also takes
+    each profile's max(feat) and raises on an out-of-range id — in the
+    same broadcast, so no extra Spark job."""
     t = F.broadcast(
         target_counts.select(
             F.col("feat").alias("__t_feat"), F.col("count").alias("__t_cnt")
@@ -255,24 +256,39 @@ def _score_feature_stream(
             F.col("feat").alias("__r_feat"), F.col("count").alias("__r_cnt")
         )
     )
+
+    def total(counts: DataFrame, name: str, alias: str) -> DataFrame:
+        top = F.max("feat")
+        return counts.agg(
+            F.when(
+                top >= n_buckets,
+                F.raise_error(F.concat(
+                    F.lit(f"{name} contains feature id "),
+                    top.cast("string"),
+                    F.lit(f" outside [0, {n_buckets}) — the profile was "
+                          "hashed with a different n_buckets than this "
+                          "call; rebuild it or pass the matching "
+                          "n_buckets"),
+                )),
+            ).otherwise(
+                F.coalesce(F.sum("count"), F.lit(0)).cast("double")
+            ).alias(alias)
+        )
+
     totals = F.broadcast(
-        target_counts.agg(
-            F.coalesce(F.sum("count"), F.lit(0)).cast("double").alias("__T")
-        ).crossJoin(
-            raw_counts.agg(
-                F.coalesce(F.sum("count"), F.lit(0)).cast("double").alias("__R")
-            )
+        total(target_counts, "target_counts", "__T").crossJoin(
+            total(raw_counts, "raw_counts", "__R")
         )
     )
     j = items.join(
         t, items["feat"] == t["__t_feat"], "left_outer"
     ).join(r, items["feat"] == r["__r_feat"], "left_outer")
-    per_item = w.cast("double") * (
+    per_item = (
         F.log(F.coalesce(F.col("__t_cnt"), F.lit(0)).cast("double") + alpha)
         - F.log(F.coalesce(F.col("__r_cnt"), F.lit(0)).cast("double") + alpha)
     )
     agg = j.groupBy(id_col).agg(
-        F.sum(w).cast("long").alias("n_feat_obs"),
+        F.count(F.lit(1)).alias("n_feat_obs"),
         F.sum(per_item).alias("__s"),
     )
     b = float(n_buckets)
@@ -287,60 +303,6 @@ def _score_feature_stream(
     )
 
 
-def hashed_ngram_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    n_buckets: int = 8192,
-    use_bigrams: bool = True,
-    hash_tier: str = "portable",
-) -> DataFrame:
-    """(id, feat, cnt) hashed n-gram bag per document — unigrams plus
-    (optionally) adjacent bigrams, each hashed into ``n_buckets``
-    feature ids.  NULL/empty arrays and NULL/negative elements are
-    skipped with the module-standard hygiene; a document with no
-    scoreable token emits no rows.
-
-    Gram strings before hashing: ``CAST(w AS STRING)`` for unigrams,
-    ``w1 || '_' || w2`` for bigrams — the exact strings the SQL oracle
-    rebuilds.  ``cnt`` is the exact BIGINT occurrence count of the
-    feature in the document (DSIR's bag-of-hashed-ngrams).
-
-    The ``feat`` column carries ``n_buckets`` and the ``hash_tier``
-    (``portable`` md5-string, oracle-replayable — the default — or
-    ``fast`` numeric xxhash64, see ``_gram_stream``) as column
-    METADATA, so downstream consumers recover the hashing contract
-    from the schema instead of trusting the caller to repeat it — a
-    silently-wrong B mis-normalizes every weight, and mixed tiers
-    score garbage.
-
-    SCALE WARNING (measured, BENCH/LM_1M.md): materializing the bag
-    shuffles ~min(doc_len, B) rows PER DOCUMENT — the (id, feat) keys
-    barely combine map-side, so at 1M docs × ~1.5k grams this is a
-    ~10^9-row shuffle and the whole pipeline ran 814 s.  Use the bag
-    only when you need the bag itself (feature export, repeated
-    re-scoring against many targets).  For scoring, use
-    ``importance_log_weights_from_docs`` (one shuffle row per
-    document); for distribution fits, ``feature_counts_from_docs``
-    (shuffle bounded by B) — see BENCH/LM_1M.md for the measured
-    gap.
-    """
-    return (
-        _gram_stream(df, id_col, tokens_col, n_buckets, use_bigrams,
-                     hash_tier)
-        .groupBy(id_col, "feat")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def feature_counts(features: DataFrame) -> DataFrame:
-    """(feat, count) distribution fit from a per-document feature bag —
-    one aggregate bounded by n_buckets rows.  If you do not already
-    have the bag, ``feature_counts_from_docs`` fits the same
-    distribution without ever materializing it."""
-    return features.groupBy("feat").agg(F.sum("cnt").alias("count"))
-
-
 def feature_counts_from_docs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -349,13 +311,18 @@ def feature_counts_from_docs(
     use_bigrams: bool = True,
     hash_tier: str = "portable",
 ) -> DataFrame:
-    """(feat, count) distribution fit straight from token arrays — the
-    scale path: the gram stream partially aggregates map-side into at
-    most B bins per task, so the shuffle is bounded by B × partitions
-    regardless of corpus size (identical output to
-    ``feature_counts(hashed_ngram_features(...))`` at the same
-    ``hash_tier``, without the per-document bag shuffle that costs
-    ~10^9 rows at 1M docs — BENCH/LM_1M.md)."""
+    """(feat, count) hashed n-gram distribution fit straight from token
+    arrays: the gram stream partially aggregates map-side into at most B
+    bins per task, so the shuffle is bounded by B × partitions
+    regardless of corpus size.
+
+    The ``feat`` column carries ``n_buckets``, the ``hash_tier``
+    (``portable`` md5-string, oracle-replayable — the default — or
+    ``fast`` numeric xxhash64, see ``_gram_stream``) and ``use_bigrams``
+    as column METADATA, so the scorers recover the hashing contract from
+    the schema instead of trusting the caller to repeat it — a
+    silently-wrong B mis-normalizes every weight, and mixed tiers score
+    garbage."""
     return (
         _gram_stream(df, id_col, tokens_col, n_buckets, use_bigrams,
                      hash_tier)
@@ -375,27 +342,37 @@ def importance_log_weights_from_docs(
     use_bigrams: bool = True,
     hash_tier: str = "portable",
 ) -> DataFrame:
-    """FUSED DSIR scorer — identical weights to
-    ``importance_log_weights(hashed_ngram_features(df), ...)`` up to
-    float summation order, with the per-document feature bag never
+    """FUSED per-document DSIR importance log-weight.
+
+    ``lw = Σ_f c_f·[ln(t_f + α) − ln(r_f + α)] + n·[ln(R + αB) − ln(T + αB)]``
+    — the log likelihood ratio of the document's hashed-feature bag
+    under the smoothed target vs raw models (B = n_buckets; T, R =
+    total target/raw feature observations, re-aggregated lazily so the
+    whole score is ONE plan).  The per-document feature bag is never
     materialized: Σ_f c_f·x_f = Σ_occurrences x_f, so each gram
     OCCURRENCE joins the two broadcast profiles and the per-document
     aggregate folds straight from the exploded stream — map-side
     partial aggregation in the explode stage, ONE shuffle row per
     document (the lm_cross_entropy shape).  Measured end-to-end at 1M
-    docs (BENCH/LM_1M.md): bag path 814 s → fused portable 336 s →
-    fused fast tier 99 s (``hash_tier="fast"``: numeric xxhash64, no
-    gram strings, no md5) — 8.2×; the fast fused tier is the one that
-    survives 10^12 documents.
+    docs (BENCH/LM_1M.md): a per-document bag path 814 s → fused
+    portable 336 s → fused fast tier 99 s (``hash_tier="fast"``:
+    numeric xxhash64, no gram strings, no md5) — 8.2×; the fast fused
+    tier is the one that survives 10^12 documents.
 
     ``n_buckets`` defaults to the width recorded as metadata on the
-    profile frames (``feature_counts_from_docs`` /
-    ``hashed_ngram_features`` both record it); an explicit value must
-    agree with that metadata, and the profiles' recorded ``hash_tier``
-    must match this call's.
+    profile frames (``feature_counts_from_docs`` records it); an
+    explicit value must agree with that metadata, and the profiles'
+    recorded ``hash_tier`` must match this call's.
+
+    Output: (id, n_feat_obs BIGINT — the document's gram count;
+    log_weight DOUBLE).
     """
     if alpha <= 0:
-        raise ValueError(f"alpha must be > 0 (got {alpha})")
+        raise ValueError(
+            f"alpha must be > 0 (got {alpha}): unsmoothed ln(0) on an "
+            "unseen feature evaluates to NULL and silently drops from "
+            "the weight sum"
+        )
     _check_hash_tier(hash_tier, {"target_counts": target_counts,
                                  "raw_counts": raw_counts}, use_bigrams)
     n_buckets = _resolve_width(
@@ -405,79 +382,7 @@ def importance_log_weights_from_docs(
     stream = _gram_stream(df, id_col, tokens_col, n_buckets, use_bigrams,
                           hash_tier)
     return _score_feature_stream(
-        stream, target_counts, raw_counts, n_buckets, alpha, id_col,
-        weight_col=None,
-    )
-
-
-def importance_log_weights(
-    raw_features: DataFrame,
-    target_counts: DataFrame,
-    raw_counts: DataFrame,
-    n_buckets: int | None = None,
-    alpha: float = 1.0,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document DSIR importance log-weight.
-
-    ``lw = Σ_f c_f·[ln(t_f + α) − ln(r_f + α)] + n·[ln(R + αB) − ln(T + αB)]``
-    — the log likelihood ratio of the document's hashed-feature bag
-    under the smoothed target vs raw models (B = n_buckets; T, R =
-    total target/raw feature observations, re-aggregated lazily so the
-    whole score is ONE plan).
-
-    ``n_buckets`` defaults to the hashing width that
-    ``hashed_ngram_features`` recorded as column metadata on ``feat`` —
-    pass it explicitly only for feature frames built elsewhere, and if
-    both are present they must agree (a silently-wrong B shifts every
-    weight by an n-dependent amount and reorders the selection).
-
-    Output: (id, n_feat_obs BIGINT — Σ c_f, the bag size;
-    log_weight DOUBLE).  Both count tables are broadcast (≤ B rows by
-    construction).
-    """
-    if alpha <= 0:
-        raise ValueError(
-            f"alpha must be > 0 (got {alpha}): unsmoothed ln(0) on an "
-            "unseen feature evaluates to NULL and silently drops from "
-            "the weight sum"
-        )
-    if id_col not in raw_features.columns:
-        raise ValueError(
-            f"id_col {id_col!r} not in features columns "
-            f"{raw_features.columns} — pass the id column "
-            "hashed_ngram_features was built with"
-        )
-    _, feat_hash = _feat_meta(raw_features)
-    if feat_hash is not None:
-        _check_hash_tier(feat_hash, {"target_counts": target_counts,
-                                     "raw_counts": raw_counts},
-                         _feat_grams(raw_features))
-    else:
-        # features carry no tier metadata (built elsewhere): the two
-        # profiles must still agree with EACH OTHER
-        tiers = {
-            name: _feat_meta(f)[1]
-            for name, f in (("target_counts", target_counts),
-                            ("raw_counts", raw_counts))
-            if _feat_meta(f)[1] is not None
-        }
-        if len(set(tiers.values())) > 1:
-            raise ValueError(
-                f"target/raw profiles use different hash tiers: {tiers}"
-            )
-    # width metadata on the FEATURES and on BOTH PROFILES must agree
-    # (profiles were previously unchecked here — a 32-bucket profile
-    # against 64-bucket features silently coalesced half the features
-    # to 'unseen')
-    n_buckets = _resolve_width(
-        n_buckets, {"raw_features": raw_features,
-                    "target_counts": target_counts,
-                    "raw_counts": raw_counts}
-    )
-    return _score_feature_stream(
-        raw_features, target_counts, raw_counts, n_buckets, alpha, id_col,
-        weight_col="cnt",
+        stream, target_counts, raw_counts, n_buckets, alpha, id_col
     )
 
 

@@ -3833,10 +3833,10 @@ def chunk_sequences_documents(spark, sf_dir):
 def heavy_hitter_shingles_documents(spark, sf_dir):
     """phi-heavy-hitter 2-token shingles (skew.heavy_hitter_keys,
     phi=0.0017) over the derived token corpus (doc_id < 400): the
-    Misra-Gries candidate pass + broadcast exact recount reproduces the
-    full GROUP BY/HAVING histogram the oracle computes — exactly and
+    hashed-bucket candidate pass + broadcast exact recount reproduces
+    the full GROUP BY/HAVING histogram the oracle computes — exactly and
     independently of partitioning — while shuffling at most
-    partitions x ceil(1/phi) summary rows instead of every distinct
+    partitions x n_buckets bucket counts instead of every distinct
     shingle."""
     from ensembl_datacheck_spark.operators import skew
 
@@ -3995,13 +3995,13 @@ def dsir_topk_documents(spark, sf_dir):
     t = _t(spark, sf_dir)
     d = t["documents"].filter(F.col("doc_id") < 400)
     toks = d.select("doc_id", "lang", _derived_tokens_col().alias("tokens"))
-    # FUSED tier (importance_log_weights_from_docs): identical weights
-    # to the bag path up to float summation order — the oracle's bag
-    # formulation still matches because only rank/count INTEGERS are
-    # compared and the boundary gap dwarfs the reordering error
-    # (test_driver_fixture_rank_boundary_gap) — with one shuffle row
-    # per document instead of the ~10^9-row (doc, feat) bag shuffle at
-    # 1M docs (BENCH/LM_1M.md).
+    # FUSED scorer (importance_log_weights_from_docs): identical weights
+    # to the oracle's per-document bag formulation up to float
+    # summation order — it still matches because only rank/count
+    # INTEGERS are compared and the boundary gap dwarfs the reordering
+    # error (test_driver_fixture_rank_boundary_gap) — with one shuffle
+    # row per document instead of a ~10^9-row (doc, feat) bag shuffle
+    # at 1M docs (BENCH/LM_1M.md).
     target = IMP.feature_counts_from_docs(
         toks.filter(F.col("lang") == "en"), n_buckets=4096
     )

@@ -465,7 +465,6 @@ class Runner:
     def run(
         self,
         specs: list[CheckSpec],
-        fuse_row_checks: bool = True,
         write_checkpoints: bool = True,
         violations_sink: Callable[[DataFrame], None] | None = None,
         parallelism: int = 1,
@@ -486,7 +485,6 @@ class Runner:
         try:
             return self._run_impl(
                 specs,
-                fuse_row_checks=fuse_row_checks,
                 write_checkpoints=write_checkpoints,
                 violations_sink=violations_sink,
                 parallelism=parallelism,
@@ -500,7 +498,6 @@ class Runner:
     def _run_impl(
         self,
         specs: list[CheckSpec],
-        fuse_row_checks: bool = True,
         write_checkpoints: bool = True,
         violations_sink: Callable[[DataFrame], None] | None = None,
         parallelism: int = 1,
@@ -547,7 +544,7 @@ class Runner:
         run_config["_shared_consumers"] = consumer_counts
         self._run_config = run_config
 
-        fused = [s for s in specs if fuse_row_checks and s.row_predicates is not None]
+        fused = [s for s in specs if s.row_predicates is not None]
         rest = [s for s in specs if s not in fused]
 
         # with a thread pool, the fused fact scan runs AS a pool task so
@@ -572,7 +569,7 @@ class Runner:
             if pending is not None and not pending:
                 res = CheckResult(check_name=spec.name)
                 res.skip_reason = "All tests passed in a previous run"  # DbCheck.pm:775 analogue
-                return res.finish(), [], [], None
+                return res.finish(), [], []
             tables = self._filtered_tables(pending)
             result, violations = run_check(
                 spec, self.spark, tables, self._run_config,
@@ -586,7 +583,7 @@ class Runner:
                 # no checkpoint rows will be written — skip the extra
                 # Spark job that exists only to build them (re-executing
                 # violation plans for per-bucket counts)
-                return result, violations, [], None
+                return result, violations, []
             viol_counts: dict[int, int] = {}
             if result.partition_violations:
                 viol_counts = dict(result.partition_violations)
@@ -603,7 +600,7 @@ class Runner:
             elif result.n_violations:
                 viol_counts = {-1: result.n_violations}
             cps = self._checkpoint_rows(spec, result, viol_counts, pending, started)
-            return result, violations, cps, None
+            return result, violations, cps
 
         if parallelism > 1 and len(rest) > 1:
             from concurrent.futures import ThreadPoolExecutor
@@ -639,7 +636,7 @@ class Runner:
                 with job_group(self.spark, spec.name):
                     outs.append(exec_one(spec))
 
-        for result, violations, cps, _ in outs:
+        for result, violations, cps in outs:
             summary.results.append(result)
             all_violations.extend(violations)
             checkpoint_rows.extend(cps)

@@ -422,25 +422,25 @@ def main():
         "simple",
     ))
 
-    feats = IMP.hashed_ngram_features(lm_docs, n_buckets=4096)
     out.append(section(
         "DSIR importance top-k: two broadcast profiles, partial top-k",
-        "DSIR selection (operators/importance.py): both distribution "
-        "fits aggregate to <= n_buckets rows and join back onto the "
-        "per-document feature bags as BroadcastHashJoins; the "
-        "per-document weight aggregate map-side-combines with the "
-        "feature extraction; the final top-k compiles to "
-        "TakeOrderedAndProject — per-partition partial top-k, a "
-        "driver-side merge of k rows per partition, and NO global "
-        "sort.  This is the plan that survives scoring 10^12 "
-        "documents against a curated target slice.",
+        "Fused DSIR selection (operators/importance.py): both "
+        "distribution fits aggregate to <= n_buckets rows and join the "
+        "exploded gram-occurrence stream as BroadcastHashJoins (plus a "
+        "1-row totals broadcast, whose max(feat) width guard rides in "
+        "the same aggregate); the per-document weight aggregate "
+        "partially aggregates in the same stage as the explode, so the "
+        "only doc-sized Exchange carries one row per document; the "
+        "final top-k compiles to TakeOrderedAndProject — per-partition "
+        "partial top-k, a driver-side merge of k rows per partition, "
+        "and NO global sort.  This is the plan that survives scoring "
+        "10^12 documents against a curated target slice.",
         IMP.select_top_k(
-            IMP.importance_log_weights(
-                feats,
-                IMP.feature_counts(IMP.hashed_ngram_features(
-                    lm_docs.filter(F.col("doc_id") < 200), n_buckets=4096)),
-                IMP.feature_counts(feats),
-                n_buckets=4096,
+            IMP.importance_log_weights_from_docs(
+                lm_docs,
+                IMP.feature_counts_from_docs(
+                    lm_docs.filter(F.col("doc_id") < 200), n_buckets=4096),
+                IMP.feature_counts_from_docs(lm_docs, n_buckets=4096),
             ),
             60,
         ),

@@ -98,11 +98,10 @@ def main() -> None:
 
         # DSIR end-to-end, FUSED path: profiles straight from token
         # arrays (shuffle bounded by B), occurrence-level scoring (one
-        # shuffle row per doc), top-1000.  The bag path
-        # (hashed_ngram_features -> importance_log_weights) was
-        # measured once at 813.91 s on this input — its (id, feat) bag
-        # shuffle is ~10^9 rows — and is deliberately NOT in the loop;
-        # the fused tier below is the production scorer.  Target slice
+        # shuffle row per doc), top-1000.  A per-document feature-bag
+        # path, measured once at 813.91 s on this input (its (id, feat)
+        # shuffle is ~10^9 rows), lost to it and was deleted; the
+        # fused tier below is the only JVM scorer.  Target slice
         # = a deterministic 10% of docs (synth doc_ids are strings, so
         # slice by the portable md5 bucket).
         from ensembl_datacheck_spark.operators.corpus import split_bucket

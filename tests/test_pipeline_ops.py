@@ -1765,7 +1765,10 @@ class TestDsirImportance:
         ).cache()
 
     @staticmethod
-    def _numpy_weights(rows, target_pred, n_buckets, alpha=1.0):
+    def _numpy_weights(rows, target_pred, n_buckets, alpha=1.0, bags=None):
+        """{id: (n_feat_obs, log_weight)} of the DSIR formula in plain
+        Python.  ``bags`` ({id: Counter(feat)}) replaces the portable md5
+        hashing, e.g. with a fast-tier gram stream's feature multisets."""
         import hashlib
         import math
         from collections import Counter
@@ -1782,7 +1785,9 @@ class TestDsirImportance:
             ]
             return Counter(bucket(g) for g in grams)
 
-        bags = {i: feats(t) for i, lang, t in rows}
+        if bags is None:
+            bags = {i: feats(t) for i, lang, t in rows}
+        bags = {i: bags.get(i, Counter()) for i, lang, t in rows}
         tc = Counter()
         rc = Counter()
         for i, lang, t in rows:
@@ -1806,40 +1811,41 @@ class TestDsirImportance:
             )
         return out
 
-    def test_log_weights_match_numpy(self, spark, dsir_docs):
+    @staticmethod
+    def _fused(docs, target, n_buckets, **kw):
+        """Fused weights of ``docs``: target profile fitted on
+        ``target``, raw profile on ``docs`` itself."""
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        rows = [(r.doc_id, r.lang, r.tokens) for r in dsir_docs.collect()]
-        feats = IMP.hashed_ngram_features(dsir_docs, n_buckets=128)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                dsir_docs.filter(F.col("lang") == "en"), n_buckets=128
-            )
+        return IMP.importance_log_weights_from_docs(
+            docs,
+            IMP.feature_counts_from_docs(target, n_buckets=n_buckets, **kw),
+            IMP.feature_counts_from_docs(docs, n_buckets=n_buckets, **kw),
+            **kw,
         )
-        rc = IMP.feature_counts(feats)
-        got = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights(feats, tc, rc, 128).collect()
-        }
-        want = self._numpy_weights(rows, lambda lang: lang == "en", 128)
-        assert set(got) == set(want)  # 200/201 dropped; 202 cleans to [3]
+
+    @staticmethod
+    def _assert_matches_numpy(weights, want):
+        got = {r.doc_id: r for r in weights.collect()}
+        assert set(got) == set(want)
         for i, (n, lw) in want.items():
             assert got[i].n_feat_obs == n, i
             assert abs(got[i].log_weight - lw) < 1e-10, i
 
+    def test_log_weights_match_numpy(self, spark, dsir_docs):
+        rows = [(r.doc_id, r.lang, r.tokens) for r in dsir_docs.collect()]
+        w = self._fused(
+            dsir_docs, dsir_docs.filter(F.col("lang") == "en"), 128
+        )
+        want = self._numpy_weights(rows, lambda lang: lang == "en", 128)
+        assert 200 not in want and 201 not in want and 202 in want
+        self._assert_matches_numpy(w, want)  # 202 cleans to [3]
+
     def test_target_slice_scores_higher_on_average(self, spark, dsir_docs):
         """Sanity of the sign convention: documents FROM the target
         slice must average a higher importance weight than the rest."""
-        from ensembl_datacheck_spark.operators import importance as IMP
-
-        feats = IMP.hashed_ngram_features(dsir_docs, n_buckets=128)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                dsir_docs.filter(F.col("lang") == "en"), n_buckets=128
-            )
-        )
-        w = IMP.importance_log_weights(
-            feats, tc, IMP.feature_counts(feats), 128
+        w = self._fused(
+            dsir_docs, dsir_docs.filter(F.col("lang") == "en"), 128
         )
         j = w.join(dsir_docs.select("doc_id", "lang"), "doc_id")
         means = {
@@ -1851,13 +1857,9 @@ class TestDsirImportance:
     def test_top_k_deterministic_and_ranked(self, spark, dsir_docs):
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        feats = IMP.hashed_ngram_features(dsir_docs, n_buckets=128)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                dsir_docs.filter(F.col("lang") == "en"), n_buckets=128
-            )
+        w = self._fused(
+            dsir_docs, dsir_docs.filter(F.col("lang") == "en"), 128
         )
-        w = IMP.importance_log_weights(feats, tc, IMP.feature_counts(feats), 128)
         a = [(r.rank, r.doc_id) for r in IMP.select_top_k(w, 7).orderBy("rank").collect()]
         b = [(r.rank, r.doc_id) for r in IMP.select_top_k(w, 7).orderBy("rank").collect()]
         assert a == b and [r for r, _ in a] == list(range(1, 8))
@@ -1865,14 +1867,8 @@ class TestDsirImportance:
     def test_gumbel_deterministic_per_salt_and_weighted(self, spark, dsir_docs):
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        feats = IMP.hashed_ngram_features(dsir_docs, n_buckets=128)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                dsir_docs.filter(F.col("lang") == "en"), n_buckets=128
-            )
-        )
-        w = IMP.importance_log_weights(
-            feats, tc, IMP.feature_counts(feats), 128
+        w = self._fused(
+            dsir_docs, dsir_docs.filter(F.col("lang") == "en"), 128
         ).cache()
         s1 = sorted(r.doc_id for r in IMP.gumbel_top_k(w, 6, salt="a").collect())
         s1b = sorted(r.doc_id for r in IMP.gumbel_top_k(w, 6, salt="a").collect())
@@ -1893,54 +1889,32 @@ class TestDsirImportance:
         from ensembl_datacheck_spark.plans.entry_queries import (
             _derived_tokens_col,
         )
-        from ensembl_datacheck_spark.operators import importance as IMP
 
         d = (
             spark.read.parquet(f"{sf}/documents.parquet")
             .filter(F.col("doc_id") < 400)
             .select("doc_id", "lang", _derived_tokens_col().alias("tokens"))
         )
-        feats = IMP.hashed_ngram_features(d, n_buckets=4096)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                d.filter(F.col("lang") == "en"), n_buckets=4096
-            )
-        )
-        w = IMP.importance_log_weights(feats, tc, IMP.feature_counts(feats), 4096)
+        w = self._fused(d, d.filter(F.col("lang") == "en"), 4096)
         ws = sorted((r.log_weight for r in w.collect()), reverse=True)
         assert len(ws) > 61
         assert ws[59] - ws[60] > 1e-9, ws[58:62]
 
     def test_feature_hygiene_matches_numpy_bag(self, spark):
+        import hashlib
+
         from ensembl_datacheck_spark.operators import importance as IMP
 
         df = spark.createDataFrame(
             [(1, [5]), (2, [None, -1]), (3, None), (4, [])],
             "doc_id long, tokens array<long>",
         )
-        rows = IMP.hashed_ngram_features(df, n_buckets=16).collect()
+        rows = IMP.feature_counts_from_docs(df, n_buckets=16).collect()
         # only doc 1 survives (doc 2 cleans to empty); single token -> one
-        # unigram feature with cnt 1
-        assert len(rows) == 1 and rows[0].doc_id == 1 and rows[0].cnt == 1
-
-    def test_scoring_plan_broadcasts_both_profiles(self, spark):
-        from tests.test_plans import plan_str
-        from ensembl_datacheck_spark.operators import importance as IMP
-
-        df = spark.range(100).select(
-            F.col("id").alias("doc_id"),
-            F.array(F.col("id") % 13, F.col("id") % 7).cast("array<long>").alias("tokens"),
-        )
-        feats = IMP.hashed_ngram_features(df, n_buckets=64)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(df.filter(F.col("doc_id") < 20), n_buckets=64)
-        )
-        plan = plan_str(
-            IMP.importance_log_weights(feats, tc, IMP.feature_counts(feats), 64),
-            "simple",
-        )
-        assert plan.count("BroadcastHashJoin") >= 2
-        assert "SortMergeJoin" not in plan
+        # unigram feature, the md5 bucket of "5", with count 1
+        assert [(r.feat, r["count"]) for r in rows] == [
+            (int(hashlib.md5(b"5").hexdigest()[:8], 16) % 16, 1)
+        ]
 
 
 class TestLmArrowTierAndStream:
@@ -2013,12 +1987,9 @@ class TestLmArrowTierAndStream:
             LM.lm_cross_entropy_arrow(df, fit, alpha=-1.0)
         with pytest.raises(ValueError, match="alpha"):
             LM.lm_bigram_cross_entropy(df, fit, LM.bigram_profile(df), alpha=0)
-        feats = IMP.hashed_ngram_features(df, n_buckets=8)
+        prof = IMP.feature_counts_from_docs(df, n_buckets=8)
         with pytest.raises(ValueError, match="alpha"):
-            IMP.importance_log_weights(
-                feats, IMP.feature_counts(feats), IMP.feature_counts(feats),
-                8, alpha=0.0,
-            )
+            IMP.importance_log_weights_from_docs(df, prof, prof, alpha=0.0)
 
     def test_bigram_lam_guard(self, spark):
         """lam outside [0, 1] can make the interpolated probability
@@ -2112,15 +2083,16 @@ class TestReviewRegressionsLmDsir:
         df = spark.createDataFrame(
             [(1, [3, 4, 5]), (2, [3, 9])], "doc_id long, tokens array<long>"
         )
-        feats = IMP.hashed_ngram_features(df, n_buckets=64)
-        tc = IMP.feature_counts(feats)
+        tc = IMP.feature_counts_from_docs(df, n_buckets=64)
         explicit = {
             r.doc_id: r.log_weight
-            for r in IMP.importance_log_weights(feats, tc, tc, 64).collect()
+            for r in IMP.importance_log_weights_from_docs(
+                df, tc, tc, 64).collect()
         }
         inferred = {
             r.doc_id: r.log_weight
-            for r in IMP.importance_log_weights(feats, tc, tc).collect()
+            for r in IMP.importance_log_weights_from_docs(
+                df, tc, tc).collect()
         }
         assert explicit == inferred
 
@@ -2130,23 +2102,9 @@ class TestReviewRegressionsLmDsir:
         df = spark.createDataFrame(
             [(1, [3, 4])], "doc_id long, tokens array<long>"
         )
-        feats = IMP.hashed_ngram_features(df, n_buckets=128)
-        tc = IMP.feature_counts(feats)
+        tc = IMP.feature_counts_from_docs(df, n_buckets=128)
         with pytest.raises(ValueError, match="disagrees"):
-            IMP.importance_log_weights(feats, tc, tc, 4096)
-
-    def test_weights_reject_missing_id_col(self, spark):
-        from ensembl_datacheck_spark.operators import importance as IMP
-
-        df = spark.createDataFrame(
-            [(1, [3, 4])], "item_id long, tokens array<long>"
-        )
-        feats = IMP.hashed_ngram_features(df, id_col="item_id", n_buckets=8)
-        tc = IMP.feature_counts(feats)
-        with pytest.raises(ValueError, match="id_col"):
-            IMP.importance_log_weights(feats, tc, tc, 8)  # default doc_id
-        ok = IMP.importance_log_weights(feats, tc, tc, 8, id_col="item_id")
-        assert ok.columns[0] == "item_id"
+            IMP.importance_log_weights_from_docs(df, tc, tc, 4096)
 
     def test_single_bucket_thresholds_empty_cutpoints(self, spark):
         from ensembl_datacheck_spark.operators import lm as LM
@@ -2181,44 +2139,17 @@ class TestDsirFusedPath:
             rows, "doc_id long, tokens array<long>"
         ).cache()
 
-    def test_profile_from_docs_equals_bag_profile(self, spark, fused_docs):
-        from ensembl_datacheck_spark.operators import importance as IMP
-
-        bag = IMP.feature_counts(
-            IMP.hashed_ngram_features(fused_docs, n_buckets=64)
-        )
-        fused = IMP.feature_counts_from_docs(fused_docs, n_buckets=64)
-        a = {(r.feat, r["count"]) for r in bag.collect()}
-        b = {(r.feat, r["count"]) for r in fused.collect()}
-        assert a == b
-        assert fused.schema["feat"].metadata["n_buckets"] == 64
-
     def test_fused_weights_equal_bag_weights(self, spark, fused_docs):
-        """Σ_f c_f·x_f == Σ_occurrences x_f — identical weights up to
-        float summation order (1e-10)."""
-        from ensembl_datacheck_spark.operators import importance as IMP
-
-        feats = IMP.hashed_ngram_features(fused_docs, n_buckets=64)
-        target = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                fused_docs.filter(F.col("doc_id") % 3 == 0), n_buckets=64
-            )
+        """Σ_f c_f·x_f == Σ_occurrences x_f — the occurrence-stream
+        weights equal the numpy bag-of-features model up to float
+        summation order (1e-10)."""
+        M = TestDsirImportance
+        rows = [(r.doc_id, r.doc_id, r.tokens) for r in fused_docs.collect()]
+        M._assert_matches_numpy(
+            M._fused(fused_docs, fused_docs.filter(F.col("doc_id") % 3 == 0),
+                     64),
+            M._numpy_weights(rows, lambda i: i % 3 == 0, 64),
         )
-        raw = IMP.feature_counts(feats)
-        bag = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights(feats, target, raw).collect()
-        }
-        fused = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights_from_docs(
-                fused_docs, target, raw
-            ).collect()
-        }
-        assert set(bag) == set(fused)
-        for i in bag:
-            assert bag[i].n_feat_obs == fused[i].n_feat_obs
-            assert abs(bag[i].log_weight - fused[i].log_weight) < 1e-10
 
     def test_fused_infers_and_validates_n_buckets(self, spark, fused_docs):
         from ensembl_datacheck_spark.operators import importance as IMP
@@ -2237,19 +2168,35 @@ class TestDsirFusedPath:
         with pytest.raises(ValueError, match="disagrees"):
             IMP.importance_log_weights_from_docs(fused_docs, target, raw_other)
 
-    def test_bag_path_validates_profile_widths_too(self, spark, fused_docs):
-        """Review regression: the BAG path must also reject a profile
-        hashed with a different width than the features — previously it
-        only checked the features frame, so a 32-bucket profile against
-        64-bucket features silently scored half the features as
-        'unseen'."""
+    def test_fused_rejects_out_of_width_parquet_profile(
+        self, spark, fused_docs, tmp_path
+    ):
+        """A profile exported to parquet by a non-Spark writer (pandas
+        here) comes back without width metadata, so only the data can
+        show it was hashed wider than this call's n_buckets: the
+        scorer's totals aggregate must fail on it with the width-contract
+        message instead of scoring the stray ids."""
+        from pyspark.errors import SparkRuntimeException
+
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        feats = IMP.hashed_ngram_features(fused_docs, n_buckets=64)
-        narrow = IMP.feature_counts_from_docs(fused_docs, n_buckets=32)
-        wide = IMP.feature_counts(feats)
-        with pytest.raises(ValueError, match="disagrees"):
-            IMP.importance_log_weights(feats, narrow, wide)
+        path = str(tmp_path / "wide_profile.parquet")
+        IMP.feature_counts_from_docs(
+            fused_docs, n_buckets=8192
+        ).toPandas().to_parquet(path)
+        wide = spark.read.parquet(path)
+        assert "n_buckets" not in wide.schema["feat"].metadata
+        assert wide.agg(F.max("feat")).first()[0] >= 64
+        narrow = IMP.feature_counts_from_docs(fused_docs, n_buckets=64)
+        for target, raw, name in ((wide, narrow, "target_counts"),
+                                  (narrow, wide, "raw_counts")):
+            w = IMP.importance_log_weights_from_docs(
+                fused_docs, target, raw, n_buckets=64
+            )
+            with pytest.raises(SparkRuntimeException,
+                               match=f"{name} contains feature "
+                               r"id \d+ outside \[0, 64\)"):
+                w.collect()
 
     def test_fused_plan_one_doc_shuffle_no_bag_aggregate(
         self, spark, tmp_path
@@ -2258,9 +2205,9 @@ class TestDsirFusedPath:
         source lets Catalyst elide even the bag shuffle via known doc
         locality — the token_rarity plan-pin finding — hiding the
         contrast): the fused scorer's only document-data Exchange
-        hashes on doc_id alone (one row per doc), while the bag path
-        shuffles (doc_id, feat) — the ~10^9-row shuffle the SCALE
-        WARNING documents."""
+        hashes on doc_id alone (one row per doc), never (doc_id, feat)
+        — the per-document bag shuffle that cost ~10^9 rows at 1M docs
+        (BENCH/LM_1M.md)."""
         import re
 
         from tests.test_plans import plan_str
@@ -2287,18 +2234,17 @@ class TestDsirFusedPath:
         )
         assert plan.count("BroadcastHashJoin") >= 2
         assert "SortMergeJoin" not in plan
-        bag_plan = plan_str(
-            IMP.hashed_ngram_features(df, n_buckets=64), "simple"
-        )
-        assert re.search(r"hashpartitioning\(doc_id#\d+L?, feat#", bag_plan)
 
 
 class TestDsirFastHashTier:
     def test_fast_tier_paths_agree_and_select_sane(self, spark):
-        """fast-tier fused weights equal fast-tier bag weights (same
+        """fast-tier fused weights equal the numpy model over the
+        fast-tier gram stream's per-document feature multisets (same
         identity as the portable tier), and the target slice still
         scores higher on average — the hash tier changes feature IDS,
         not the statistics."""
+        from collections import Counter
+
         from ensembl_datacheck_spark.operators import importance as IMP
 
         rows = [
@@ -2309,29 +2255,21 @@ class TestDsirFastHashTier:
         df = spark.createDataFrame(
             rows, "doc_id long, lang string, tokens array<long>"
         )
-        feats = IMP.hashed_ngram_features(df, n_buckets=64, hash_tier="fast")
-        target = IMP.feature_counts_from_docs(
-            df.filter(F.col("lang") == "en"), n_buckets=64, hash_tier="fast"
+        bags: dict[int, Counter] = {}
+        for r in IMP._gram_stream(df, "doc_id", "tokens", 64, True,
+                                  "fast").collect():
+            bags.setdefault(r.doc_id, Counter())[r.feat] += 1
+        w = TestDsirImportance._fused(
+            df, df.filter(F.col("lang") == "en"), 64, hash_tier="fast"
+        ).cache()
+        TestDsirImportance._assert_matches_numpy(
+            w,
+            TestDsirImportance._numpy_weights(
+                rows, lambda lang: lang == "en", 64, bags=bags
+            ),
         )
-        raw = IMP.feature_counts(feats)
-        bag = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights(feats, target, raw).collect()
-        }
-        fused = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights_from_docs(
-                df, target, raw, hash_tier="fast"
-            ).collect()
-        }
-        assert set(bag) == set(fused)
-        for i in bag:
-            assert bag[i].n_feat_obs == fused[i].n_feat_obs
-            assert abs(bag[i].log_weight - fused[i].log_weight) < 1e-10
         j = (
-            IMP.importance_log_weights_from_docs(df, target, raw,
-                                                 hash_tier="fast")
-            .join(df.select("doc_id", "lang"), "doc_id")
+            w.join(df.select("doc_id", "lang"), "doc_id")
             .groupBy("lang").agg(F.avg("log_weight").alias("m"))
         )
         means = {r.lang: r.m for r in j.collect()}
@@ -2351,12 +2289,6 @@ class TestDsirFastHashTier:
         with pytest.raises(ValueError, match="hash"):
             IMP.importance_log_weights_from_docs(
                 df, fast, fast  # profiles fast, scorer defaults portable
-            )
-        bag_fast = IMP.hashed_ngram_features(df, n_buckets=64,
-                                             hash_tier="fast")
-        with pytest.raises(ValueError, match="hash"):
-            IMP.importance_log_weights(
-                bag_fast, portable, portable
             )
         with pytest.raises(ValueError, match="hash_tier"):
             IMP.feature_counts_from_docs(df, n_buckets=64, hash_tier="md5")
@@ -2510,10 +2442,6 @@ class TestDsirArrowTierAndStream:
                 IMP.importance_log_weights_from_docs(arrow_docs, uni, uni)
             with pytest.raises(ValueError, match="use_bigrams"):
                 IMP.importance_log_weights_arrow(arrow_docs, uni, uni)
-            with pytest.raises(ValueError, match="use_bigrams"):
-                IMP.importance_log_weights(
-                    IMP.hashed_ngram_features(arrow_docs, n_buckets=64),
-                    uni, uni)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
