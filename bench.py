@@ -83,8 +83,7 @@ def bench_queries(spark, sf_dir: str, passes: int = 3) -> dict[str, float]:
     return times
 
 
-def bench_sequences_suite(spark, n_rows: int, n_buckets: int = 64,
-                          cpus: int = 32):
+def bench_sequences_suite(spark, n_rows: int, n_buckets: int = 64):
     """Generate (untimed) then validate (timed) — returns
     (seqs_per_sec, wall_sec, n_rows)."""
     import ensembl_datacheck_spark.checks  # noqa: F401
@@ -116,19 +115,11 @@ def bench_sequences_suite(spark, n_rows: int, n_buckets: int = 64,
             "sources": synth.gen_sources(spark),
             "baseline_stats": spark.read.parquet(f"{tmp}/baseline"),
         }
-        # pool lanes scale with cores: the 1M-row profile (interleaved
-        # 8/4 sweeps: 4.95-5.14 s vs 5.93-6.58 s, BENCH/BASELINE.md)
-        # shows the suite's 5 heavy shared-scan tasks quantize onto 4
-        # lanes as two waves at 32 cores, while at the scaling bench's
-        # 2-8 cores max(4, cpus//4) keeps the historical 4 — pair
-        # comparability preserved
-        lanes = max(4, cpus // 4)
         # one untimed warm-up (JIT + page cache), then best-of-3 timed
         # runs — steady-state throughput with ambient-load spikes
         # absorbed, same protocol as scripts/scaling_bench.py
         Runner(spark, tables, n_buckets=n_buckets).run(
             registry.default_suite(), write_checkpoints=False,
-            parallelism=lanes,
         )
         # the violation-injecting fixture makes exactly these checks fail
         # (synth.py residues; scale-independent).  Pinning the set guards
@@ -144,7 +135,7 @@ def bench_sequences_suite(spark, n_rows: int, n_buckets: int = 64,
             runner = Runner(spark, tables, n_buckets=n_buckets)
             t0 = time.perf_counter()
             summary = runner.run(registry.default_suite(),
-                                 write_checkpoints=False, parallelism=lanes)
+                                 write_checkpoints=False)
             walls.append(time.perf_counter() - t0)
             failed = {r.check_name for r in summary.results
                       if r.status.value == "fail"}
@@ -192,9 +183,7 @@ def main():
         seq_rows = max(100_000, int(float(sf) * 10_000_000))
     except ValueError:
         seq_rows = 1_000_000
-    seqs_per_sec, suite_wall, n_rows = bench_sequences_suite(
-        spark, seq_rows, cpus=cpus
-    )
+    seqs_per_sec, suite_wall, n_rows = bench_sequences_suite(spark, seq_rows)
     times["sequences_check_suite"] = suite_wall
 
     out = {

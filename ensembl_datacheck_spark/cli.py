@@ -50,12 +50,13 @@ def build_parser() -> argparse.ArgumentParser:
                    help="checkpoint/violations table root")
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--cores", type=int, default=None)
-    p.add_argument("--parallelism", type=int, default=4,
+    p.add_argument("--parallelism", type=int, default=None,
                    help="checks in flight concurrently (their jobs share "
                    "executor slots under Spark's FIFO scheduler; the fused "
                    "fact scan overlaps them) — the analogue of "
                    "the reference's analysis_capacity throttle "
-                   "(DbDataChecks_conf.pm:214-295); 1 = serial")
+                   "(DbDataChecks_conf.pm:214-295); default: a quarter of "
+                   "the session's cores, at least 4 (runner.lanes)")
     p.add_argument("--force", action="store_true",
                    help="ignore checkpoints, re-run everything")
     p.add_argument("--no-failures-fatal", action="store_true")
@@ -124,6 +125,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.fmt == "jdbc" and not args.jdbc_table:
         print("--format jdbc needs --jdbc-table", file=sys.stderr)
         return 2
+    if args.parallelism is not None and args.parallelism < 1:
+        print("--parallelism must be at least 1", file=sys.stderr)
+        return 2
     spark = get_spark("dcheck-cli", cores=args.cores)
 
     def fmt_kw(relation: str | None) -> dict:
@@ -186,7 +190,7 @@ def main(argv: list[str] | None = None) -> int:
     summary = runner.run(
         specs,
         violations_sink=lambda df: catalog.append_atomic(df, "violations"),
-        parallelism=max(args.parallelism, 1),
+        parallelism=args.parallelism,
     )
 
     if args.output_json:

@@ -102,11 +102,8 @@ def run_fleet(
             return target.name, None, traceback.format_exc(limit=8)
 
     try:
-        if max_parallel_dbs > 1 and len(targets) > 1:
-            with ThreadPoolExecutor(max_workers=max_parallel_dbs) as pool:
-                outs = list(pool.map(one, targets))
-        else:
-            outs = [one(t) for t in targets]
+        with ThreadPoolExecutor(max_workers=max_parallel_dbs) as pool:
+            outs = list(pool.map(one, targets))
     finally:
         # the fleet owns the shared memo (runners received it injected,
         # so Runner.run left it alone): free the per-table cube blocks

@@ -6,6 +6,9 @@ Execution model:
 * one SparkSession; each check = one (or few) DataFrame actions — the
   analogue of one eHive worker per (db, check) (DataCheckFan.pm:32-66)
   without process fan-out cost;
+* fan-out: every run uses one thread pool of ``parallelism`` lanes
+  (default ``lanes(spark)``), the analogue of eHive's
+  ``analysis_capacity`` throttle (DbDataChecks_conf.pm:214-295);
 * **row-fused checks**: checks declaring row-level predicates are executed
   together in a single scan (operators/fused.py) — per-(bucket, assertion)
   counts in one aggregation + one violating-row projection — instead of
@@ -25,6 +28,7 @@ from __future__ import annotations
 import threading
 import time
 import traceback
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from typing import Callable, Iterator
 
@@ -52,6 +56,15 @@ from ensembl_datacheck_spark.verdict import (
 )
 
 VIOLATIONS_SCHEMA = "check_name string, assertion string, partition_id int, key string, detail string"
+
+
+def lanes(spark: SparkSession) -> int:
+    """Default number of checks in flight: a quarter of the session's
+    task slots, at least 4.  The suite's few heavy shared-scan checks
+    would otherwise queue as two waves on 4 lanes at 32 cores
+    (BENCH/BASELINE.md, "core-adaptive suite pool lanes"), while small
+    hosts keep the historical 4."""
+    return max(4, spark.sparkContext.defaultParallelism // 4)
 
 
 @contextmanager
@@ -91,9 +104,9 @@ class SharedComputations:
     """Per-run memoization for Spark jobs whose result several checks can
     consume (the fact-table profile in checks/core.py is the flagship:
     one grouping-sets scan replaces five independent full scans).  Keyed
-    compute-once with a lock PER KEY: under ``parallelism`` > 1 the first
-    pooled check to ask runs the job while its co-consumers block on that
-    key only — unrelated shared values never serialize behind it."""
+    compute-once with a lock PER KEY: the first pooled check to ask runs
+    the job while its co-consumers block on that key only — unrelated
+    shared values never serialize behind it."""
 
     def __init__(self) -> None:
         self._vals: dict[str, object] = {}
@@ -278,6 +291,18 @@ def run_check(
     return ctx.result.finish(), ctx.violations
 
 
+def _skipped(
+    spec: CheckSpec, reason: str | None = None, error: str | None = None
+) -> CheckResult:
+    """The verdict of a check the runner stopped before its assertions:
+    skipped for ``reason`` or failed with ``error``, under the check's
+    own severity."""
+    return CheckResult(
+        check_name=spec.name, severity=spec.severity.value,
+        skip_reason=reason, error=error,
+    ).finish()
+
+
 class Runner:
     def __init__(
         self,
@@ -378,9 +403,9 @@ class Runner:
         """None = all pending.  Empty list = nothing to do (skip)."""
         if self.store is None or spec.force:
             return None
-        # lock-guarded compute-once: with fused_in_pool plus pooled
-        # checks several threads race to be first caller, and exactly
-        # one checkpoint-table load must run
+        # lock-guarded compute-once: the fused scan and the pooled checks
+        # race to be first caller, and exactly one checkpoint-table load
+        # must run
         with self._cc_lock:
             if self._completed_cache is None:
                 # one checkpoint-table load + aggregation serves every
@@ -467,147 +492,74 @@ class Runner:
         specs: list[CheckSpec],
         write_checkpoints: bool = True,
         violations_sink: Callable[[DataFrame], None] | None = None,
-        parallelism: int = 1,
+        parallelism: int | None = None,
     ) -> RunSummary:
-        """See _run_impl.  This wrapper releases the run's OWN shared
-        memo (cached cube blocks, CacheManager entries) once the run —
-        including its violation funnel write — completes or fails: a
-        persist() without a paired unpersist() accumulates one
-        InMemoryRelation per distinct fact table for the SparkSession's
-        lifetime, a storage-memory leak under a long-lived session
-        running many targets.  A memo INJECTED by a fleet is left alone
-        (siblings on the same table still need it); run_fleet releases
-        it after the whole fan-out.  Per-run state (the dimension tables'
-        local relations, the fused scan's row counts) lives only for the
-        call."""
+        """Run ``specs`` from one thread pool — the in-session analogue
+        of the reference's per-check worker fan-out (DataCheckFan.pm:32-66)
+        under its analysis_capacity throttle (DbDataChecks_conf.pm:270).
+        The fused fact scan gets a slot of its own; ``parallelism`` other
+        checks (default ``lanes(spark)``) run beside it, started in spec
+        order, and take over the scan's slot once it is done.  Verdicts
+        come back fused checks first, then the rest in spec order.  Spark
+        schedules the concurrent jobs FIFO: each check's
+        ``spark.scheduler.pool`` property only labels its stages, and its
+        jobs carry job group ``dcheck:<check>`` (the scan's:
+        ``dcheck:__fused__``, see job_group).
+
+        The run's OWN shared memo is released once the run, funnel write
+        included, completes or fails: a persist() without a paired
+        unpersist() would hold one InMemoryRelation per distinct fact
+        table for the SparkSession's lifetime.  A memo INJECTED by a
+        fleet is left for run_fleet to release.  Per-run state (the
+        dimension tables' local relations, the fused scan's row counts)
+        lives only for the call."""
+        if parallelism is None:
+            parallelism = lanes(self.spark)
+        if parallelism < 1:
+            raise ValueError(
+                f"parallelism must be at least 1, got {parallelism}"
+            )
         self._locals = SharedComputations()
         self._scanned_rows = {}
         try:
-            return self._run_impl(
-                specs,
-                write_checkpoints=write_checkpoints,
-                violations_sink=violations_sink,
-                parallelism=parallelism,
-            )
-        finally:
-            self._locals = None
-            self._scanned_rows = {}
-            if self._owns_shared:
-                self.shared.release()
+            summary = RunSummary()
+            all_violations: list[DataFrame] = []
+            checkpoint_rows: list[CheckpointRow] = []
 
-    def _run_impl(
-        self,
-        specs: list[CheckSpec],
-        write_checkpoints: bool = True,
-        violations_sink: Callable[[DataFrame], None] | None = None,
-        parallelism: int = 1,
-    ) -> RunSummary:
-        """``parallelism`` > 1 runs the non-fused checks concurrently from
-        a thread pool (one Spark job per check in flight) — the
-        in-session analogue of the reference's per-check worker fan-out
-        (DataCheckFan.pm:32-66, analysis_capacity throttle
-        DbDataChecks_conf.pm:270).  The engine leaves
-        ``spark.scheduler.mode`` at Spark's FIFO default: concurrent jobs
-        start in submission order and share executor slots as those free
-        up; each check's ``spark.scheduler.pool`` property only labels
-        its stages.  At every parallelism a check's jobs carry job group
-        ``dcheck:<check>`` and the shared scan's ``dcheck:__fused__``
-        (job_group)."""
-        summary = RunSummary()
-        all_violations: list[DataFrame] = []
-        checkpoint_rows: list[CheckpointRow] = []
+            # Count declared shared-computation consumers among the checks
+            # in THIS run (CheckSpec.shared_uses) and expose the counts to
+            # every body: a check that can serve itself with a cheaper
+            # one-scan plan (NTokQuantileDrift's combined sketch probe)
+            # joins the shared build instead iff co-consumers make that
+            # build a sunk cost — without this signal a peek() racing the
+            # in-flight cube build launches a duplicate full fact scan.
+            # Only checks that will actually RUN against the full table
+            # count as consumers: a checkpoint-complete sibling skips
+            # before touching ctx.shared, and a partially-pending one runs
+            # against a resume-filtered scan with shared=None (see
+            # _exec_one) — counting either would make a lone pending check
+            # "join" a cube build nobody else pays for, re-introducing the
+            # duplicate-scan cost on resume that the sunk-cost rule exists
+            # to avoid.  _pending_buckets is one cached checkpoint-table
+            # load per run.
+            consumer_counts: dict[str, int] = {}
+            for s in specs:
+                if not s.shared_uses:
+                    continue
+                if self._pending_buckets(s) is not None:
+                    continue
+                for kind in s.shared_uses:
+                    consumer_counts[kind] = consumer_counts.get(kind, 0) + 1
+            run_config = dict(self.config)
+            run_config["_shared_consumers"] = consumer_counts
+            self._run_config = run_config
 
-        # Count declared shared-computation consumers among the checks in
-        # THIS run (CheckSpec.shared_uses) and expose the counts to every
-        # body: a check that can serve itself with a cheaper one-scan plan
-        # (NTokQuantileDrift's combined sketch probe) joins the shared
-        # build instead iff co-consumers make that build a sunk cost —
-        # without this signal a peek() racing the in-flight cube build
-        # launches a duplicate full fact scan.
-        # Only checks that will actually RUN against the full table count
-        # as consumers: a checkpoint-complete sibling skips before
-        # touching ctx.shared, and a partially-pending one runs against a
-        # resume-filtered scan with shared=None (see exec_one) — counting
-        # either would make a lone pending check "join" a cube build
-        # nobody else pays for, re-introducing the duplicate-scan cost on
-        # resume that the sunk-cost rule exists to avoid.
-        # _pending_buckets is one cached checkpoint-table load per run.
-        consumer_counts: dict[str, int] = {}
-        for s in specs:
-            if not s.shared_uses:
-                continue
-            if self._pending_buckets(s) is not None:
-                continue
-            for kind in s.shared_uses:
-                consumer_counts[kind] = consumer_counts.get(kind, 0) + 1
-        run_config = dict(self.config)
-        run_config["_shared_consumers"] = consumer_counts
-        self._run_config = run_config
+            fused = [s for s in specs if s.row_predicates is not None]
+            rest = [s for s in specs if s not in fused]
 
-        fused = [s for s in specs if s.row_predicates is not None]
-        rest = [s for s in specs if s not in fused]
-
-        # with a thread pool, the fused fact scan runs AS a pool task so
-        # the many contract-small checks (dimension/meta/baseline rules,
-        # one-row aggregates) overlap it instead of queueing behind it —
-        # measured at 20M rows/8 cores this serialization was the single
-        # largest scaling drag (the small checks' walls are fixed cost at
-        # any core count, so paying them serially caps suite speedup; see
-        # BENCH/BASELINE.md round-3 attribution).  Under Spark's FIFO
-        # scheduler their tiny jobs take executor slots as the scan's
-        # tasks finish.
-        fused_in_pool = bool(fused) and parallelism > 1 and len(rest) > 1
-        if fused and not fused_in_pool:
-            with job_group(self.spark, "__fused__"):
-                self._run_fused(
-                    fused, summary, all_violations, checkpoint_rows
-                )
-
-        def exec_one(spec: CheckSpec):
-            started = time.time()
-            pending = self._pending_buckets(spec)
-            if pending is not None and not pending:
-                res = CheckResult(check_name=spec.name)
-                res.skip_reason = "All tests passed in a previous run"  # DbCheck.pm:775 analogue
-                return res.finish(), [], []
-            tables = self._filtered_tables(pending)
-            result, violations = run_check(
-                spec, self.spark, tables, self._run_config,
-                bucket_key=self.bucket_key, n_buckets=self.n_buckets,
-                # shared values are computed from the FULL fact table; a
-                # resume-filtered scan must not consume (or poison) them
-                shared=self.shared if pending is None else None,
-                local_table=self._table_for,
-            )
-            if self.store is None or not write_checkpoints:
-                # no checkpoint rows will be written — skip the extra
-                # Spark job that exists only to build them (re-executing
-                # violation plans for per-bucket counts)
-                return result, violations, []
-            viol_counts: dict[int, int] = {}
-            if result.partition_violations:
-                viol_counts = dict(result.partition_violations)
-            elif spec.per_partition and violations:
-                union = violations[0]
-                for v in violations[1:]:
-                    union = union.unionByName(v)
-                viol_counts = {
-                    r["partition_id"]: r["n"]
-                    for r in union.groupBy("partition_id")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
-                }
-            elif result.n_violations:
-                viol_counts = {-1: result.n_violations}
-            cps = self._checkpoint_rows(spec, result, viol_counts, pending, started)
-            return result, violations, cps
-
-        if parallelism > 1 and len(rest) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            def pooled(spec):
+            def pooled(spec: CheckSpec):
                 with job_group(self.spark, spec.name, f"dcheck_{spec.name}"):
-                    return exec_one(spec)
+                    return self._exec_one(spec, write_checkpoints)
 
             def fused_pooled():
                 with job_group(self.spark, "__fused__", "dcheck_fused_scan"):
@@ -620,45 +572,88 @@ class Runner:
                         fused, summary, all_violations, checkpoint_rows
                     )
 
-            # the fused scan gets a dedicated slot so check fan-out never
-            # starves it (parallelism counts small checks, as before)
-            workers = parallelism + (1 if fused_in_pool else 0)
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                fused_fut = (
-                    pool.submit(fused_pooled) if fused_in_pool else None
-                )
+            # the fused fact scan runs AS a pool task in a slot of its own,
+            # so the many contract-small checks (dimension/meta/baseline
+            # rules, one-row aggregates) overlap it instead of queueing
+            # behind it — measured at 20M rows/8 cores this serialization
+            # was the single largest scaling drag (BENCH/BASELINE.md
+            # round-3 attribution).  Under Spark's FIFO scheduler their
+            # tiny jobs take executor slots as the scan's tasks finish.
+            with ThreadPoolExecutor(parallelism + (1 if fused else 0)) as pool:
+                fused_fut = pool.submit(fused_pooled) if fused else None
                 outs = list(pool.map(pooled, rest))
                 if fused_fut is not None:
                     fused_fut.result()
-        else:
-            outs = []
-            for spec in rest:
-                with job_group(self.spark, spec.name):
-                    outs.append(exec_one(spec))
 
-        for result, violations, cps in outs:
-            summary.results.append(result)
-            all_violations.extend(violations)
-            checkpoint_rows.extend(cps)
+            for result, violations, cps in outs:
+                summary.results.append(result)
+                all_violations.extend(violations)
+                checkpoint_rows.extend(cps)
 
-        # --- funnel (DataCheckFunnel.pm: single merged write) ---
-        if all_violations and violations_sink is not None:
-            union = all_violations[0]
-            for v in all_violations[1:]:
+            # --- funnel (DataCheckFunnel.pm: single merged write) ---
+            if all_violations and violations_sink is not None:
+                union = all_violations[0]
+                for v in all_violations[1:]:
+                    union = union.unionByName(v)
+                with job_group(self.spark, "__funnel__"):
+                    violations_sink(union)
+            if write_checkpoints and self.store is not None:
+                with job_group(self.spark, "__checkpoint__"):
+                    if checkpoint_rows:
+                        rows = self._bucket_rows(
+                            {r.partition_id for r in checkpoint_rows}
+                        )
+                        for r in checkpoint_rows:
+                            r.n_rows = rows.get(r.partition_id, 0)
+                    self.store.append(checkpoint_rows)
+                self._completed_cache = None  # appended rows invalidate it
+            return summary
+        finally:
+            self._locals = None
+            self._scanned_rows = {}
+            if self._owns_shared:
+                self.shared.release()
+
+    def _exec_one(
+        self, spec: CheckSpec, write_checkpoints: bool
+    ) -> tuple[CheckResult, list[DataFrame], list[CheckpointRow]]:
+        """Run one non-fused check against its pending buckets; returns
+        its verdict, violation frames and checkpoint rows."""
+        started = time.time()
+        pending = self._pending_buckets(spec)
+        if pending is not None and not pending:
+            # DbCheck.pm:775 analogue
+            return _skipped(spec, "All tests passed in a previous run"), [], []
+        result, violations = run_check(
+            spec, self.spark, self._filtered_tables(pending), self._run_config,
+            bucket_key=self.bucket_key, n_buckets=self.n_buckets,
+            # shared values are computed from the FULL fact table; a
+            # resume-filtered scan must not consume (or poison) them
+            shared=self.shared if pending is None else None,
+            local_table=self._table_for,
+        )
+        if self.store is None or not write_checkpoints:
+            # no checkpoint rows will be written — skip the extra Spark
+            # job that exists only to build them (re-executing violation
+            # plans for per-bucket counts)
+            return result, violations, []
+        viol_counts: dict[int, int] = {}
+        if result.partition_violations:
+            viol_counts = dict(result.partition_violations)
+        elif spec.per_partition and violations:
+            union = violations[0]
+            for v in violations[1:]:
                 union = union.unionByName(v)
-            with job_group(self.spark, "__funnel__"):
-                violations_sink(union)
-        if write_checkpoints and self.store is not None:
-            with job_group(self.spark, "__checkpoint__"):
-                if checkpoint_rows:
-                    rows = self._bucket_rows(
-                        {r.partition_id for r in checkpoint_rows}
-                    )
-                    for r in checkpoint_rows:
-                        r.n_rows = rows.get(r.partition_id, 0)
-                self.store.append(checkpoint_rows)
-            self._completed_cache = None  # appended rows invalidate it
-        return summary
+            viol_counts = {
+                r["partition_id"]: r["n"]
+                for r in union.groupBy("partition_id")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            }
+        elif result.n_violations:
+            viol_counts = {-1: result.n_violations}
+        cps = self._checkpoint_rows(spec, result, viol_counts, pending, started)
+        return result, violations, cps
 
     def _run_fused(
         self,
@@ -678,22 +673,17 @@ class Runner:
             # suite): every fused check skips with a reason — the same
             # per-check containment ctx.table gives body checks, not a
             # KeyError that would abort the whole run
-            for s in specs:
-                res = CheckResult(check_name=s.name)
-                res.skip_reason = (
-                    f"required table '{self.fact_table}' not available"
-                )
-                summary.results.append(res.finish())
+            reason = f"required table '{self.fact_table}' not available"
+            summary.results.extend(_skipped(s, reason) for s in specs)
             return
         pending_by_check: dict[str, list[int] | None] = {
             s.name: self._pending_buckets(s) for s in specs
         }
         todo = [s for s in specs if pending_by_check[s.name] != []]
-        for s in specs:
-            if pending_by_check[s.name] == []:
-                res = CheckResult(check_name=s.name)
-                res.skip_reason = "All tests passed in a previous run"
-                summary.results.append(res.finish())
+        summary.results.extend(
+            _skipped(s, "All tests passed in a previous run")
+            for s in specs if pending_by_check[s.name] == []
+        )
         if not todo:
             return
         union_pending: set[int] | None = set()
@@ -730,29 +720,26 @@ class Runner:
             # a predicate factory that cannot run (missing table, bad
             # config) must skip/fail THIS check only — same error
             # containment as run_check (BaseCheck.pm:131-139), not a
-            # crash of every sibling in the fused scan
+            # crash of every sibling in the fused scan.  A failed
+            # factory's pending buckets are checkpointed 'fail', as a
+            # body check's error is, so a resume runs it again
             try:
                 ps, scan2 = s.row_predicates(ctx, scan2)
             except SkipCheck as e:
-                res = CheckResult(check_name=s.name)
-                res.severity = s.severity.value
-                res.skip_reason = e.reason
-                summary.results.append(res.finish())
+                summary.results.append(_skipped(s, e.reason))
                 continue
             except Exception:
-                res = CheckResult(check_name=s.name)
-                res.severity = s.severity.value
-                res.error = traceback.format_exc(limit=8)
-                summary.results.append(res.finish())
+                res = _skipped(s, error=traceback.format_exc(limit=8))
+                summary.results.append(res)
+                checkpoint_rows.extend(self._checkpoint_rows(
+                    s, res, {}, pending_by_check[s.name], started))
                 continue
             if not ps:
                 # e.g. a generated sweep over a table with no applicable
                 # columns: nothing to assert, and an empty predicate list
                 # would crash the fused aggregation downstream
-                res = CheckResult(check_name=s.name)
-                res.severity = s.severity.value
-                res.skip_reason = "no applicable columns/predicates"
-                summary.results.append(res.finish())
+                summary.results.append(
+                    _skipped(s, "no applicable columns/predicates"))
                 continue
             for p in ps:
                 if p.assertion in pred_owner:

@@ -188,11 +188,12 @@ def test_cli_jdbc_requires_table_option(spark, capsys):
 
 def test_parallelism_flag_parses():
     """--parallelism (analysis_capacity analogue) parses and defaults
-    to 4; no Spark needed."""
+    to None, which the Runner resolves to runner.lanes(spark); no Spark
+    needed."""
     from ensembl_datacheck_spark.cli import build_parser
 
     p = build_parser()
-    assert p.parse_args(["--sequences", "x"]).parallelism == 4
+    assert p.parse_args(["--sequences", "x"]).parallelism is None
     assert p.parse_args(
         ["--sequences", "x", "--parallelism", "1"]
     ).parallelism == 1

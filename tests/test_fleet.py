@@ -83,10 +83,10 @@ def test_fleet_shares_profile_cube_per_table(spark, seq_fixture, monkeypatch):
 
 
 def test_pooled_fused_scan_matches_serial(spark, seq_fixture, tmp_path):
-    """With ``parallelism`` > 1 the fused fact scan runs AS a pool task
-    overlapping the small checks (the round-3 scaling fix).  Verdicts,
-    violation counts, skip reasons AND checkpoint rows must be identical
-    to the serial execution."""
+    """The fused fact scan runs AS a pool task overlapping the small
+    checks (the round-3 scaling fix).  Verdicts, violation counts, skip
+    reasons AND checkpoint rows must be identical at 1 lane (one other
+    check at a time beside the scan) and at 4 lanes."""
     from ensembl_datacheck_spark.plans.checkpoint import CheckpointStore
     from ensembl_datacheck_spark.plans.runner import Runner
     from ensembl_datacheck_spark.sources import synth

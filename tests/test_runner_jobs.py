@@ -1,5 +1,6 @@
 """Spark jobs per suite run: job-group tags, small dimension tables as
-local relations, and checkpoint row counts without extra scans.
+local relations, and checkpoint row counts without extra scans; and the
+Runner's fan-out: lane counts, verdict severities and checks that raise.
 
 The dimension tables here are read from parquet: a frame built with
 ``createDataFrame`` from Python rows is a plan of unknown size, which
@@ -8,6 +9,7 @@ Spark would never broadcast, so the Runner never localizes it."""
 from __future__ import annotations
 
 from contextlib import contextmanager
+from dataclasses import replace
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,10 +17,12 @@ from pyspark.sql import functions as F
 import ensembl_datacheck_spark.checks  # noqa: F401  (registers the suite)
 from ensembl_datacheck_spark import registry
 from ensembl_datacheck_spark.plans.checkpoint import CheckpointStore
+from ensembl_datacheck_spark.plans.fleet import DbTarget, run_fleet
 from ensembl_datacheck_spark.plans.runner import Runner
-from ensembl_datacheck_spark.registry import CheckSpec
+from ensembl_datacheck_spark.registry import CheckSpec, Severity
 from ensembl_datacheck_spark.sources import synth
 from ensembl_datacheck_spark.sources.io import Catalog, localize_if_small
+from ensembl_datacheck_spark.verdict import Status
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
 RUNNER_GROUPS = {"dcheck:__fused__", "dcheck:__tables__",
@@ -83,7 +87,7 @@ def _jobs_since(spark, last):
     return out
 
 
-@pytest.mark.parametrize("parallelism", [1, 4])
+@pytest.mark.parametrize("parallelism", [1, 4, None])
 def test_every_job_carries_its_check_group(spark, parquet_tables, tmp_path,
                                            parallelism):
     """Every Spark job of a suite run (first run and resume) is tagged
@@ -244,3 +248,121 @@ def test_small_dimensions_localize_once_others_stay_file_backed(
     seen.clear()
     run_check(specs[0], spark, tables)
     assert seen["sources"][0] is tables["sources"]
+
+
+def _clean_tables(seq_fixture):
+    return {"sequences": seq_fixture["sequences_clean"],
+            "sources": seq_fixture["sources"],
+            "baseline_stats": seq_fixture["baseline_same"]}
+
+
+def test_resume_keeps_each_checks_severity(spark, seq_fixture, tmp_path):
+    """A check skipped because it passed in a previous run, or because
+    the fact table is missing, reports its own severity: an advisory
+    check stays ``advisory`` in the JSON verdict on the resume, for body
+    checks (SequencesStats, SourcesUsed) and for a fused one."""
+    specs = [replace(s, severity=Severity.ADVISORY)
+             if s.name == "DocIdFormat" else s
+             for s in registry.default_suite()]
+    advisory = {s.name for s in specs if s.severity is Severity.ADVISORY}
+    assert {"SequencesStats", "SourcesUsed", "DocIdFormat"} <= advisory
+    store = CheckpointStore(Catalog(spark, tmp_path / "wh"))
+
+    def severities(summary):
+        return {r["check_name"]: (r["severity"], r["status"])
+                for r in summary.to_dict(failures_only=False)["datachecks"]}
+
+    for _ in range(2):  # first run, then resume
+        got = severities(Runner(
+            spark, _clean_tables(seq_fixture), n_buckets=8,
+            checkpoint_store=store, lineage="sev").run(specs))
+    for name in advisory:
+        assert got[name] == ("advisory", "skip"), (name, got[name])
+    assert {sev for sev, _ in got.values()} == {"advisory", "critical"}
+
+    no_fact = Runner(spark, {"sources": seq_fixture["sources"]}).run(
+        [s for s in specs if s.name == "DocIdFormat"])
+    assert severities(no_fact) == {"DocIdFormat": ("advisory", "skip")}
+
+
+def test_lane_count_below_one_fails_loud(spark, seq_fixture, monkeypatch,
+                                         capsys):
+    """A lane count below 1 is an error on every path, not a silent
+    serial run: the CLI exits 2 before starting Spark, ``Runner.run``
+    and ``run_fleet`` raise ValueError."""
+    from ensembl_datacheck_spark import cli, session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("Spark started before argument validation")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    for bad in ("0", "-3"):
+        assert cli.main(["--sequences", "x", "--parallelism", bad]) == 2
+        assert "--parallelism" in capsys.readouterr().err
+    specs = registry.select(names=["DocIdUnique", "SequencesCompleteness"])
+    tables = _clean_tables(seq_fixture)
+    with pytest.raises(ValueError, match="parallelism"):
+        Runner(spark, tables, n_buckets=8).run(specs, parallelism=0)
+    with pytest.raises(ValueError):
+        run_fleet(spark, [DbTarget("db", tables)], specs, n_buckets=8,
+                  max_parallel_dbs=0)
+
+
+def _explode(ctx, *scan):
+    raise RuntimeError("exploded mid-fan-out")
+
+
+RAISERS = [
+    CheckSpec(name="BodyRaises", description="body raises", body=_explode,
+              per_partition=True),
+    CheckSpec(name="RowsRaise", description="row factory raises",
+              body=_explode, per_partition=True, row_predicates=_explode),
+]
+
+
+@pytest.mark.parametrize("parallelism", [1, 4])
+def test_check_raising_mid_fan_out_is_contained(spark, seq_fixture,
+                                                tmp_path, parallelism):
+    """A body check and a fused row-predicate factory that raise get FAIL
+    verdicts carrying the traceback, while their siblings' verdicts and
+    checkpoint rows equal a run without them, on the first run and on
+    the resume.  The raisers' buckets are checkpointed ``fail``, so the
+    resume runs them again."""
+    tables = {"sequences": seq_fixture["sequences"],
+              "sources": seq_fixture["sources"],
+              "baseline_stats": seq_fixture["baseline_same"]}
+    siblings = registry.select(names=[
+        "DocIdFormat", "SequencesCompleteness", "SourceReferential",
+        "DocIdUnique", "SequencesStats", "SourceNameNotBlank"])
+    mixed = siblings[:2] + [RAISERS[0]] + siblings[2:] + [RAISERS[1]]
+
+    def two_runs(specs, wh):
+        store = CheckpointStore(Catalog(spark, tmp_path / wh))
+        out = []
+        for _ in range(2):  # first run, then resume
+            summary = Runner(spark, tables, n_buckets=8,
+                             checkpoint_store=store, lineage="boom").run(
+                specs, parallelism=parallelism)
+            verdicts = {r.check_name: (r.status, r.n_violations,
+                                       r.skip_reason, r.error)
+                        for r in summary.results}
+            cps = sorted((r["check_name"], r["partition_id"], r["status"],
+                          r["n_violations"])
+                         for r in store.load().collect())
+            out.append((verdicts, cps))
+        return out
+
+    raisers = {s.name for s in RAISERS}
+    runs = zip(two_runs(mixed, "wh_mixed"), two_runs(siblings, "wh_ref"))
+    for n_runs, ((v, cps), (v_ref, cps_ref)) in enumerate(runs, start=1):
+        assert {n: x for n, x in v.items() if n not in raisers} == v_ref
+        assert [r for r in cps if r[0] not in raisers] == cps_ref
+        for name in raisers:
+            status, _, skip_reason, error = v[name]
+            assert status == Status.FAIL and skip_reason is None
+            assert "Traceback" in error and "exploded mid-fan-out" in error
+            # each run adds one 'fail' row per bucket
+            mine = [r for r in cps if r[0] == name]
+            assert sorted({r[1] for r in mine}) == list(range(8))
+            assert {r[2] for r in mine} == {"fail"}
+            assert len(mine) == 8 * n_runs
