@@ -27,6 +27,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ensembl_datacheck_spark.sources.io import local_frame
 from ensembl_datacheck_spark.verdict import MAX_DIAG_ROWS, AssertionResult, Status
 
 _OPS: dict[str, Callable[[Any, Any], bool]] = {
@@ -82,6 +83,25 @@ def is_rows_zero(
         diag.append(f"Reached limit of {MAX_DIAG_ROWS} diagnostic rows; "
                     f"full set persisted to violations table")
     return AssertionResult(name, Status.FAIL, expected=0, got=got, diag=diag), df
+
+
+def rows_zero_local(
+    spark, rows: list[tuple], schema: str, name: str
+) -> tuple[AssertionResult, DataFrame | None]:
+    """is_rows_zero over violation rows already on the driver (``rows``
+    are tuples in the order of ``schema``, a DDL string): the verdict
+    and diagnostics come from the rows themselves, with no Spark job,
+    and the violation frame (sources.io.local_frame) is built only on
+    failure."""
+    if not rows:
+        return AssertionResult(name, Status.OK, expected=0, got=0), None
+    df = local_frame(spark, rows, schema)
+    diag = [str(dict(zip(df.columns, r))) for r in rows[:MAX_DIAG_ROWS]]
+    if len(rows) > MAX_DIAG_ROWS:
+        diag.append(f"Reached limit of {MAX_DIAG_ROWS} diagnostic rows; "
+                    f"full set persisted to violations table")
+    return AssertionResult(name, Status.FAIL, expected=0, got=len(rows),
+                           diag=diag), df
 
 
 def is_rows_nonzero(df: DataFrame, name: str) -> tuple[AssertionResult, None]:

@@ -113,9 +113,9 @@ def token_invariants(ctx):
         )
 
 
-def profile_memo_key(df, kind: str = "fact_profile") -> str:
-    """Memo key for shared profile values: kind + a fingerprint of the
-    fact table's ANALYZED plan.  Within one Runner the table object is
+def profile_memo_key(df) -> str:
+    """Memo key for the shared fact profile: a fingerprint of the fact
+    table's ANALYZED plan.  Within one Runner the table object is
     stable, so the key behaves exactly like the old per-run constant;
     under a fleet-shared SharedComputations (plans/fleet.py) targets
     validating the same DataFrame hash to the same key (one cube build
@@ -126,47 +126,38 @@ def profile_memo_key(df, kind: str = "fact_profile") -> str:
     import hashlib
 
     plan = df._jdf.queryExecution().analyzed().toString()
-    return f"{kind}:sequences:{hashlib.md5(plan.encode()).hexdigest()[:16]}"
+    return f"fact_profile:sequences:{hashlib.md5(plan.encode()).hexdigest()[:16]}"
 
 
-def _profile_memo_key(ctx, kind: str = "fact_profile") -> str:
-    return profile_memo_key(ctx.table("sequences"), kind)
+def _profile_memo_key(ctx) -> str:
+    return profile_memo_key(ctx.table("sequences"))
 
 
-def _shared_fact_profile(ctx):
-    """Run-scoped one-scan (source, n_tok) profile cube
-    (operators/profile.py): the first aggregate check in a run builds and
-    materializes it, every other consumer (SequencesStats, RowTotals,
-    SourceDrift, NTokDrift, NTokQuantileDrift, SourcesUsed) re-aggregates
-    the ~80k-row cube — six independent full fact scans collapse to one.
-    A standalone run_check gets a private memo (one scan, same answers).
-
-    Materialization is persist(MEMORY_AND_DISK) + an eager count, NOT
-    localCheckpoint: persist keeps the RECOMPUTABLE lineage, so losing an
-    executor mid-run recomputes the missing cube blocks from the fact
-    table instead of failing every downstream consumer (localCheckpoint
-    truncates lineage to non-replicated executor blocks — a
-    fault-tolerance regression at the executor-churn scale this module
-    targets).  The cube is ~vocab-of-(source,n_tok) rows, so the cached
-    footprint is tiny; the count that forces it IS the one shared scan."""
-    def build():
-        from pyspark import StorageLevel
-
-        prof = P.fact_profile(ctx.table("sequences")).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        prof.count()  # eager: consumers re-aggregate materialized blocks
-        return prof
-
-    return ctx.shared.get(_profile_memo_key(ctx), build)
-
-
-def _shared_profile_global(ctx) -> dict:
-    prof = _shared_fact_profile(ctx)
+def _shared_fact_profile(ctx) -> P.FactProfile:
+    """Run-scoped one-scan fact profile (operators/profile.py): the
+    first aggregate check in a run builds the (source, n_tok) cube,
+    persists it and collects its summary in one pass; every consumer
+    (SequencesStats, RowTotals, SourceDrift, NTokDrift, SourcesUsed)
+    then judges from the collected summary in Python, and
+    NTokQuantileDrift reads its per-value counts from the cube the
+    summary job cached — six independent full fact scans collapse to
+    one, and the per-check re-aggregation jobs to none.  A standalone
+    run_check gets a private memo (one scan, same answers)."""
     return ctx.shared.get(
-        _profile_memo_key(ctx, "fact_profile_global"),
-        lambda: P.profile_global(prof),
+        _profile_memo_key(ctx),
+        lambda: P.collect_profile(ctx.table("sequences"), ntok_bin()),
     )
+
+
+def _stat_rows(ctx, stat_key: str) -> list[tuple]:
+    """(category, value) rows of one baseline stat.  In a run a small
+    baseline table is a local relation, so this collect runs no job."""
+    base = ctx.table("baseline_stats")
+    return [
+        (r["category"], r["value"])
+        for r in base.filter(F.col("stat_key") == stat_key)
+        .select("category", "value").collect()
+    ]
 
 
 @register(
@@ -184,14 +175,14 @@ def sequences_stats(ctx):
     # narrow columns only: tokens-array stats already ride the fused row
     # scan (completeness/invariants); re-scanning the widest column here
     # would double the table's IO for an advisory check.  Stats come from
-    # the shared one-scan profile cube (operators/profile.py) — null
-    # counts for the cube's key columns fall out of their NULL groups,
-    # doc_id nulls ride as a summed flag.
-    row = _shared_profile_global(ctx)
-    n = row["n_rows"] or 1
+    # the shared profile summary (operators/profile.py) — null counts
+    # for the cube's key columns fall out of their NULL groups, doc_id
+    # nulls ride as a summed flag.
+    prof = _shared_fact_profile(ctx).summary
+    n = prof.n_rows or 1
     max_null_rate = ctx.config.get("max_null_rate", 0.001)
     for col in ("doc_id", "n_tok", "source"):
-        rate = (row.get(f"{col}__n_null") or 0) / n
+        rate = prof.null_counts[col] / n
         status = Status.OK if rate <= max_null_rate else Status.FAIL
         ctx.result.assertions.append(
             AssertionResult(
@@ -199,7 +190,7 @@ def sequences_stats(ctx):
                 expected=f"<= {max_null_rate}", got=round(rate, 6),
             )
         )
-    lo, hi = row.get("n_tok__min"), row.get("n_tok__max")
+    lo, hi = prof.ntok_min, prof.ntok_max
     ok = lo is not None and lo >= 1 and hi is not None and hi <= 8192
     ctx.result.assertions.append(
         AssertionResult("n_tok_range", Status.OK if ok else Status.FAIL,
@@ -353,20 +344,20 @@ def source_referential(ctx):
     shared_uses=("fact_profile",),
 )
 def sources_used(ctx):
-    sources = ctx.table("sources")
-    # reverse FK against the shared profile cube instead of the fact
+    # reverse FK against the shared profile summary instead of the fact
     # table (operators/referential.childless_parents is the standalone
-    # operator face): the set of sources that appear is exactly the
-    # cube's non-null source groups, so the anti-join probes an ~80k-row
-    # materialized table, not 10^12 rows — and costs no fact scan when
-    # another aggregate check already built the profile
-    present = P.profile_source_counts(_shared_fact_profile(ctx)).select("source")
-    viol = (
-        sources.filter(F.col("active"))
-        .join(present, "source", "left_anti")
-        .select("source")
+    # operator face): the sources that appear are exactly the summary's
+    # non-null source groups, so the left-anti join runs on the driver
+    # over the (local) dimension rows — no fact scan, no Spark job
+    active = ctx.table("sources").filter(F.col("active")).select("source")
+    present = _shared_fact_profile(ctx).summary.source_counts
+    missing = [(r["source"],) for r in active.collect()
+               if r["source"] is None or r["source"] not in present]
+    ctx.record(
+        A.rows_zero_local(ctx.spark, missing, "source string",
+                          "active_source_has_rows"),
+        key_col="source",
     )
-    ctx.record(A.is_rows_zero(viol, "active_source_has_rows"), key_col="source")
 
 
 # ---------------------------------------------------------------------------
@@ -384,15 +375,11 @@ def sources_used(ctx):
     shared_uses=("fact_profile",),
 )
 def row_totals_check(ctx):
-    base = ctx.table("baseline_stats")
-    base_total = (
-        base.filter(F.col("stat_key") == "source_count")
-        .agg(F.sum("value").alias("v"))
-        .collect()[0]["v"]
-        or 0.0
+    base_total = sum(
+        (v for _, v in _stat_rows(ctx, "source_count") if v is not None), 0.0
     )
-    # current total from the shared profile cube — no dedicated count scan
-    cur = int(_shared_profile_global(ctx)["n_rows"])
+    # current total from the shared profile summary — no count scan
+    cur = _shared_fact_profile(ctx).summary.n_rows
     p = ctx.config.get("row_totals_min_proportion", 0.95)
     ok = cur >= base_total * p
     ctx.result.assertions.append(
@@ -414,15 +401,18 @@ def row_totals_check(ctx):
     shared_uses=("fact_profile",),
 )
 def source_drift(ctx):
-    base = ctx.table("baseline_stats")
-    # identical to sequences.groupBy(source).count(), derived from the
-    # shared profile cube (one fact scan for the whole aggregate family)
-    cur_counts = P.profile_source_counts(_shared_fact_profile(ctx))
-    base_counts = base.filter(F.col("stat_key") == "source_count")
+    # identical to sequences.groupBy(source).count(), read from the
+    # shared profile summary (one fact scan for the whole aggregate
+    # family); the baseline rows are local, so the comparison runs on
+    # the driver
+    base = _stat_rows(ctx, "source_count")
+    cur = list(_shared_fact_profile(ctx).summary.source_counts.items())
     tol = D.Tolerance(min_proportion=ctx.config.get("source_min_proportion", 0.75))
-    base_kv = base_counts.select(F.col("category").alias("source"), "value")
-    viol = D.category_drift_violations(cur_counts, base_kv, "source", tol)
-    ctx.record(A.is_rows_zero(viol, "source_subtotals"), key_col="category")
+    ctx.record(
+        A.rows_zero_local(ctx.spark, D.category_drift_rows(cur, base, tol),
+                          D.CATEGORY_DRIFT_SCHEMA, "source_subtotals"),
+        key_col="category",
+    )
 
     # bidirectional option: also flag categories that GREW beyond
     # tolerance, by running the comparison flipped — the reference runs
@@ -430,19 +420,16 @@ def source_drift(ctx):
     # (ComparePreviousVersionProbes.pm:59-60; asymmetry documented at
     # Test/DataCheck.pm:332-335)
     if ctx.config.get("source_drift_bidirectional", False):
-        flipped = D.category_drift_violations(
-            base_kv.select("source", F.col("value").alias("count")),
-            cur_counts.select("source", F.col("count").alias("value")),
-            "source",
-            tol,
-            count_col="count",
+        ctx.record(
+            A.rows_zero_local(ctx.spark, D.category_drift_rows(base, cur, tol),
+                              D.CATEGORY_DRIFT_SCHEMA,
+                              "source_subtotals_reverse"),
+            key_col="category",
         )
-        ctx.record(A.is_rows_zero(flipped, "source_subtotals_reverse"),
-                   key_col="category")
 
     stats = D.drift_statistics(
-        [(r["source"], float(r["count"])) for r in cur_counts.collect()],
-        [(r["category"], float(r["value"])) for r in base_counts.collect()],
+        [(s, float(c)) for s, c in cur],
+        [(c, float(v)) for c, v in base],
     )
     alpha = ctx.config.get("chi2_alpha", 1e-4)
     min_l1 = ctx.config.get("chi2_min_effect_l1", 0.02)
@@ -469,14 +456,13 @@ def source_drift(ctx):
     shared_uses=("fact_profile",),
 )
 def ntok_drift(ctx):
-    base = ctx.table("baseline_stats")
     # identical to build_histogram(seq.filter(n_tok notnull), ntok_bin())
-    # — binned from the shared profile cube's non-null n_tok groups
-    cur_hist = P.profile_ntok_hist(_shared_fact_profile(ctx), ntok_bin())
-    base_hist = base.filter(F.col("stat_key") == "n_tok_hist")
+    # — the shared profile summary's bins over non-null n_tok
+    base = _stat_rows(ctx, "n_tok_hist")
+    bins = _shared_fact_profile(ctx).summary.ntok_bins
     stats = D.drift_statistics(
-        D.collect_histogram(cur_hist),
-        [(r["category"], float(r["value"])) for r in base_hist.collect()],
+        [(str(b), float(c)) for b, c in bins.items()],
+        [(c, float(v)) for c, v in base],
     )
     ks_max = ctx.config.get("ks_max", 0.05)
     alpha = ctx.config.get("chi2_alpha", 1e-4)
@@ -529,10 +515,9 @@ def ntok_drift(ctx):
 def ntok_quantile_drift(ctx):
     from ensembl_datacheck_spark.plans.runner import SkipCheck
 
-    seq, base = ctx.table("sequences"), ctx.table("baseline_stats")
+    seq = ctx.table("sequences")
     base_q = {
-        float(r["category"]): float(r["value"])
-        for r in base.filter(F.col("stat_key") == "n_tok_quantile").collect()
+        float(c): float(v) for c, v in _stat_rows(ctx, "n_tok_quantile")
     }
     if not base_q:
         raise SkipCheck("baseline snapshot carries no n_tok_quantile rows")
@@ -550,8 +535,8 @@ def ntok_quantile_drift(ctx):
     # every other aggregate consumer via ctx.shared.
     probe: list | None = None
     sketch_q: dict[float, float] | None = None
-    shared_prof = ctx.shared.peek(_profile_memo_key(ctx))
-    if shared_prof is None and int(
+    shared = ctx.shared.peek(_profile_memo_key(ctx))
+    if shared is None and int(
         ctx.config.get("_shared_consumers", {}).get("fact_profile", 0)
     ) >= 2:
         # Co-consumers are scheduled in this run (Runner counts declared
@@ -560,10 +545,10 @@ def ntok_quantile_drift(ctx):
         # lands while the build is in flight would otherwise launch a
         # duplicate full fact scan (the combined sketch probe), which
         # measurably regressed the pooled suite at 50M rows.
-        shared_prof = _shared_fact_profile(ctx)
-    if shared_prof is not None:
+        shared = _shared_fact_profile(ctx)
+    if shared is not None:
         probe = (
-            P.profile_ntok_counts(shared_prof).limit(max_card + 1).collect()
+            P.profile_ntok_counts(shared.cube).limit(max_card + 1).collect()
         )
         if not probe:
             raise SkipCheck("sequences has no non-null n_tok rows")
@@ -580,7 +565,7 @@ def ntok_quantile_drift(ctx):
             # the true cardinality exceeds the cap, fall back to the
             # sketch values already computed — never a third scan.
             probe = (
-                P.profile_ntok_counts(_shared_fact_profile(ctx))
+                P.profile_ntok_counts(_shared_fact_profile(ctx).cube)
                 .limit(max_card + 1)
                 .collect()
             )

@@ -128,6 +128,9 @@ def main(argv: list[str] | None = None) -> int:
     if args.parallelism is not None and args.parallelism < 1:
         print("--parallelism must be at least 1", file=sys.stderr)
         return 2
+    if args.n_buckets < 1:
+        print("--n-buckets must be at least 1", file=sys.stderr)
+        return 2
     spark = get_spark("dcheck-cli", cores=args.cores)
 
     def fmt_kw(relation: str | None) -> dict:

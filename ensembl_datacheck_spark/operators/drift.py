@@ -200,6 +200,39 @@ def category_drift_violations(
     return j.filter(pred)
 
 
+#: the rows of category_drift_violations, as category_drift_rows returns them
+CATEGORY_DRIFT_SCHEMA = "category string, base_count double, cur_count double"
+
+
+def category_drift_rows(
+    current: list[tuple],
+    baseline: list[tuple],
+    tolerance: Tolerance,
+) -> list[tuple[str | None, float, float]]:
+    """category_drift_violations on the driver, over collected
+    (category, count) pairs: the same (category, base_count, cur_count)
+    rows, for inputs small enough to hold (per-source counts, baseline
+    rows).  It keeps the distributed plan's SQL semantics: a NULL
+    category joins nothing; a current count that is NULL, NaN or absent
+    is 0 (fillna); a NULL baseline count breaches nothing, while a NaN
+    one breaches always (Spark orders NaN above every number); a
+    category repeated in ``current`` pairs with each of its counts."""
+    cur: dict[str, list[float]] = {}
+    for k, v in current:
+        if k is not None:
+            fill = v is None or math.isnan(v)
+            cur.setdefault(k, []).append(0.0 if fill else float(v))
+    out = []
+    for k, b in baseline:
+        if b is None:
+            continue
+        b = float(b)
+        for c in cur.get(k, [0.0]):
+            if math.isnan(b) or tolerance.violated(b, c):
+                out.append((k, b, c))
+    return out
+
+
 def unigram_profile(
     df: DataFrame,
     tokens_col: str = "tokens",

@@ -9,23 +9,35 @@ one pass; this module does the same for the *aggregate* checks
 SourcesUsed), which otherwise each issue an independent full scan of
 the 10^12-row table — five redundant scans per suite run.
 
-Design: ONE `groupBy(source, n_tok)` aggregation — the minimal
-sufficient statistic for the whole family — NOT a grouping-sets /
-CUBE plan.  Grouping sets expand every input row once per grouping set
-(Spark's Expand operator: 4 sets = 4x the scanned rows through the
-partial aggregate), whereas the composite-key cube is a single
-map-side-combinable hash aggregation whose per-partition state is
-bounded by |sources| x |n_tok domain| (~10 x 8192 here — NTokDomain
-bounds n_tok to [1, 8192]).  Every family member is then a trivial
-re-aggregation of the ~80k-row cube:
+Design, in two levels:
 
-  * global row count / null counts / n_tok min-max  -> SequencesStats,
-    RowTotals
-  * per-source counts  (sum n over source)          -> SourceDrift,
-    SourcesUsed (reverse FK: which sources appear)
-  * per-bin counts     (sum n over floor(log2))     -> NTokDrift
-  * per-value counts   (sum n over n_tok)           -> NTokQuantileDrift
-    (its LIMIT-bounded driver collect guard is unchanged)
+1. The cube.  ONE `groupBy(source, n_tok)` aggregation over the fact
+   rows — the minimal sufficient statistic for the whole family — NOT
+   a grouping-sets plan over the fact rows.  Grouping sets expand every
+   input row once per grouping set (Spark's Expand operator: 3 sets =
+   3x the scanned rows through the partial aggregate), whereas the
+   composite-key cube is a single map-side-combinable hash aggregation
+   whose per-partition state is bounded by |sources| x |n_tok domain|
+   (~10 x 8192 here — NTokDomain bounds n_tok to [1, 8192]).
+2. The summary.  The cube is small, so the rollup the family needs is
+   a grouping-sets plan OVER THE CUBE: `groupingSets([(), (source),
+   (bin)])` with the Expand above the cube's aggregate, where it
+   multiplies ~80k cube rows, not the fact rows.  Its output is
+   collected once (`profile_summary`): the global row (row count, null
+   counts, n_tok min/max), the per-source counts (NULL source kept) and
+   the per-bin counts over non-null n_tok.  That is 1 + |sources| +
+   |bins| rows (at most 32 log2 bins of an int n_tok).  The consumers
+   then judge in Python:
+
+     * global row       -> SequencesStats, RowTotals
+     * per-source counts -> SourceDrift, SourcesUsed (reverse FK)
+     * per-bin counts   -> NTokDrift
+     * per-value counts (sum n over n_tok, from the cube) ->
+       NTokQuantileDrift (its LIMIT-bounded driver collect guard is
+       unchanged)
+
+   Every Spark job these checks ran to re-aggregate the cube is gone:
+   at small inputs each job is fixed planning and scheduling cost.
 
 Skew: the composite (source, n_tok) key is strictly more uniform than
 either key alone — a hot source spreads over its n_tok values, a hot
@@ -34,11 +46,11 @@ than the per-check shuffles it replaces.
 
 Degenerate input: an unbounded/corrupt n_tok column makes the cube
 large but it stays DISTRIBUTED (the materialization is a recomputable
-persist(MEMORY_AND_DISK), never a driver collect); the only driver transfers
-are the derived aggregates, and the quantile consumer keeps its
-LIMIT-bounded cardinality guard.
+persist(MEMORY_AND_DISK), never a driver collect); the only driver
+transfers are the summary and the quantile consumer's LIMIT-bounded
+value counts.
 
-The cube is memoized per Runner run via plans/runner.SharedComputations
+The profile is memoized per Runner run via plans/runner.SharedComputations
 (checks/core._shared_fact_profile): under --parallelism the first
 aggregate check to ask runs the scan while its co-consumers block on
 that key only; standalone run_check callers get a private instance and
@@ -47,11 +59,15 @@ pay one scan themselves — today's per-check cost, no sharing.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: profile column names (the cube's contract with its consumers)
 SRC, NTOK, N = "source", "n_tok", "n"
+BIN = "bin"
 
 
 def fact_profile(
@@ -73,46 +89,90 @@ def fact_profile(
     ).agg(*aggs)
 
 
-def profile_global(
-    prof: DataFrame, null_count_cols: tuple[str, ...] = ("doc_id",)
-) -> dict:
-    """Single global stats row derived from the cube: n_rows, per-column
-    null counts (key columns from their NULL groups, ride-along columns
-    from their summed flags), n_tok min/max.  Empty table -> zeros/Nones
-    (an aggregate over an empty cube still yields one row)."""
-    aggs = [
-        F.coalesce(F.sum(N), F.lit(0)).alias("n_rows"),
-        F.coalesce(
-            F.sum(F.when(F.col(SRC).isNull(), F.col(N))), F.lit(0)
-        ).alias(f"{SRC}__n_null"),
-        F.coalesce(
-            F.sum(F.when(F.col(NTOK).isNull(), F.col(N))), F.lit(0)
-        ).alias(f"{NTOK}__n_null"),
-        F.min(NTOK).alias(f"{NTOK}__min"),
-        F.max(NTOK).alias(f"{NTOK}__max"),
-    ]
-    for c in null_count_cols:
-        aggs.append(F.coalesce(F.sum(f"{c}_nulls"), F.lit(0)).alias(f"{c}__n_null"))
-    return prof.agg(*aggs).collect()[0].asDict()
+@dataclass(frozen=True)
+class ProfileSummary:
+    """The collected rollup of a profile cube.  ``null_counts`` holds
+    the key columns' NULL-group counts and each ride-along column's
+    summed flags; ``source_counts`` keys the NULL-source group as None,
+    as ``fact.groupBy(source).count()`` would; ``ntok_bins`` counts
+    non-null n_tok only."""
+
+    n_rows: int
+    null_counts: dict[str, int]
+    ntok_min: int | None
+    ntok_max: int | None
+    source_counts: dict[str | None, int]
+    ntok_bins: dict[int, int]
 
 
-def profile_source_counts(prof: DataFrame) -> DataFrame:
-    """(source, count) — identical to fact.groupBy(source).count()
-    (NULL source kept as a group, exactly as groupBy would)."""
-    return prof.groupBy(SRC).agg(F.sum(N).alias("count"))
+def _ride_along(cube: DataFrame) -> list[str]:
+    """The cube's ride-along null-count columns (``<col>_nulls``)."""
+    return [c for c in cube.columns if c.endswith("_nulls")]
 
 
-def profile_ntok_hist(prof: DataFrame, bin_expr: Column, name: str = "bin") -> DataFrame:
-    """(bin, count) histogram over NON-NULL n_tok — identical to
-    drift.build_histogram(fact.filter(n_tok.isNotNull()), bin_expr).
-    The NULL-group filter runs BEFORE binning: bin expressions like
-    floor(log2(greatest(x, 1))) would otherwise fold NULL into bin 0
-    (greatest skips NULLs)."""
-    return (
-        prof.filter(F.col(NTOK).isNotNull())
-        .groupBy(bin_expr.alias(name))
-        .agg(F.sum(N).alias("count"))
+def profile_summary_frame(cube: DataFrame, bin_expr: Column) -> DataFrame:
+    """The summary plan: one grouping-sets aggregation over the cube,
+    ``gid`` telling the sets apart (3: global, 1: per source, 2: per
+    bin).  NULL n_tok gets a NULL bin — bin expressions such as
+    floor(log2(greatest(x, 1))) would otherwise fold it into bin 0
+    (greatest skips NULLs) — so its bin group only repeats the global
+    row's NULL count."""
+    binned = cube.withColumn(
+        BIN, F.when(F.col(NTOK).isNotNull(), bin_expr)
     )
+    aggs = [
+        F.grouping_id().alias("gid"),
+        F.sum(N).alias(N),
+        F.sum(F.when(F.col(NTOK).isNull(), F.col(N))).alias(f"{NTOK}_nulls"),
+        F.min(NTOK).alias("ntok_min"),
+        F.max(NTOK).alias("ntok_max"),
+    ]
+    aggs += [F.sum(c).alias(c) for c in _ride_along(cube)]
+    return binned.groupingSets([[], [SRC], [BIN]], SRC, BIN).agg(*aggs)
+
+
+def profile_summary(cube: DataFrame, bin_expr: Column) -> ProfileSummary:
+    """Collect the summary plan (1 + |sources| + |bins| rows).  An
+    empty cube yields no global row under grouping sets; its summary
+    is zero rows and counts with no n_tok range."""
+    rows = profile_summary_frame(cube, bin_expr).collect()
+    total = next((r for r in rows if r["gid"] == 3), None)
+    sources = {r[SRC]: r[N] for r in rows if r["gid"] == 1}
+    nulls = {c[: -len("_nulls")]: total[c] if total else 0
+             for c in (f"{NTOK}_nulls", *_ride_along(cube))}
+    nulls[SRC] = sources.get(None, 0)
+    return ProfileSummary(
+        n_rows=total[N] if total else 0,
+        null_counts={c: n or 0 for c, n in nulls.items()},
+        ntok_min=total["ntok_min"] if total else None,
+        ntok_max=total["ntok_max"] if total else None,
+        source_counts=sources,
+        ntok_bins={r[BIN]: r[N] for r in rows
+                   if r["gid"] == 2 and r[BIN] is not None},
+    )
+
+
+@dataclass(frozen=True)
+class FactProfile:
+    """The run-shared profile value: the persisted cube (kept for
+    NTokQuantileDrift's per-value counts) and its collected summary."""
+
+    cube: DataFrame
+    summary: ProfileSummary
+
+    def unpersist(self, blocking: bool = False) -> None:
+        self.cube.unpersist(blocking)
+
+
+def collect_profile(df: DataFrame, bin_expr: Column) -> FactProfile:
+    """Build the cube over ``df``, persist it and collect its summary.
+    Collecting the summary IS the one fact scan: it fills the cube's
+    cache as it reads it, so later cube readers hit cached blocks.
+    persist(MEMORY_AND_DISK), not localCheckpoint, keeps the lineage: a
+    lost block recomputes from the fact table instead of failing every
+    later reader."""
+    cube = fact_profile(df).persist(StorageLevel.MEMORY_AND_DISK)
+    return FactProfile(cube, profile_summary(cube, bin_expr))
 
 
 def profile_ntok_counts(prof: DataFrame) -> DataFrame:

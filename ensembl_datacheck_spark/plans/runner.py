@@ -103,7 +103,8 @@ class SkipCheck(Exception):
 class SharedComputations:
     """Per-run memoization for Spark jobs whose result several checks can
     consume (the fact-table profile in checks/core.py is the flagship:
-    one grouping-sets scan replaces five independent full scans).  Keyed
+    one cube scan and its collected summary replace six independent
+    full scans).  Keyed
     compute-once with a lock PER KEY: the first pooled check to ask runs
     the job while its co-consumers block on that key only — unrelated
     shared values never serialize behind it."""
@@ -316,6 +317,10 @@ class Runner:
         config: dict | None = None,
         shared: SharedComputations | None = None,
     ):
+        if n_buckets < 1:
+            # 0 would fail mid-run in the fused scan's modulo; a negative
+            # count yields negative bucket ids that never checkpoint
+            raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
         self.spark = spark
         self.tables = dict(tables)
         self.fact_table = fact_table

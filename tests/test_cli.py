@@ -199,6 +199,20 @@ def test_parallelism_flag_parses():
     ).parallelism == 1
 
 
+def test_cli_bucket_count_below_one_exits_before_spark(monkeypatch, capsys):
+    """--n-buckets below 1 exits 2 with a message, before the JVM
+    starts."""
+    from ensembl_datacheck_spark import session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("Spark started before argument validation")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
+    for bad in ("0", "-4"):
+        assert main(["--sequences", "x", "--n-buckets", bad]) == 2
+        assert "--n-buckets must be at least 1" in capsys.readouterr().err
+
+
 def test_cli_snapshot_table_runs_equality_check(spark, tmp_path):
     """--snapshot wires the sequences_snapshot table through to
     TokenSnapshotEquality; omitting it makes the same selection skip."""

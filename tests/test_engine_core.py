@@ -669,8 +669,8 @@ def test_shared_fact_profile_one_scan_and_parity(spark, seq_fixture, monkeypatch
     """The aggregate-check family (SequencesStats, RowTotals, SourceDrift,
     NTokDrift, NTokQuantileDrift, SourcesUsed) shares ONE profile-cube
     build per Runner run (operators/profile.fact_profile called exactly
-    once), and the cube-derived numbers equal the direct per-check
-    aggregations they replaced."""
+    once), and the collected summary's numbers equal the direct
+    per-check aggregations they replaced."""
     import ensembl_datacheck_spark.checks.core as core
     from ensembl_datacheck_spark.operators import profile as P
     from pyspark.sql import functions as F
@@ -692,40 +692,125 @@ def test_shared_fact_profile_one_scan_and_parity(spark, seq_fixture, monkeypatch
     # every check produced a real verdict (none errored out)
     assert all(r.error is None for r in summary.results)
 
-    # parity: cube-derived stats == direct aggregations over the fact table
-    seq = seq_fixture["sequences"]
-    prof = orig(seq)
-    g = P.profile_global(prof)
-    assert g["n_rows"] == seq.count()
-    assert g["doc_id__n_null"] == seq.filter(F.col("doc_id").isNull()).count()
-    assert g["source__n_null"] == seq.filter(F.col("source").isNull()).count()
-    nn = seq.filter(F.col("n_tok").isNotNull())
-    direct_minmax = nn.agg(F.min("n_tok"), F.max("n_tok")).collect()[0]
-    assert (g["n_tok__min"], g["n_tok__max"]) == tuple(direct_minmax)
-
-    direct_src = {
-        r["source"]: r["count"] for r in seq.groupBy("source").count().collect()
-    }
-    cube_src = {
-        r["source"]: r["count"]
-        for r in P.profile_source_counts(prof).collect()
-    }
-    assert cube_src == direct_src
-
+    # parity: the collected summary == direct aggregations over the fact
+    # table, NULL source and NULL n_tok rows included
     from ensembl_datacheck_spark.operators import drift as D
     from ensembl_datacheck_spark.sources.synth import ntok_bin
 
-    direct_hist = dict(D.collect_histogram(
-        D.build_histogram(nn, ntok_bin())
-    ))
-    cube_hist = dict(D.collect_histogram(P.profile_ntok_hist(prof, ntok_bin())))
-    assert cube_hist == direct_hist
+    seq = seq_fixture["sequences"]
+    fact = seq.unionByName(spark.createDataFrame([
+        ("null_ntok", [1], None, "src_00"),
+        ("null_source", [1, 2], 2, None),
+        (None, [3], None, None),
+    ], "doc_id string, tokens array<int>, n_tok int, source string"))
+    got = P.profile_summary(orig(fact), ntok_bin())
+    assert got.n_rows == fact.count()
+    for c in ("doc_id", "source", "n_tok"):
+        assert got.null_counts[c] == fact.filter(F.col(c).isNull()).count(), c
+    assert got.null_counts["source"] > 0 and got.null_counts["n_tok"] > 0
+    nn = fact.filter(F.col("n_tok").isNotNull())
+    direct_minmax = nn.agg(F.min("n_tok"), F.max("n_tok")).collect()[0]
+    assert (got.ntok_min, got.ntok_max) == tuple(direct_minmax)
+    direct_src = {
+        r["source"]: r["count"] for r in fact.groupBy("source").count().collect()
+    }
+    assert None in direct_src and got.source_counts == direct_src
+    direct_hist = dict(D.collect_histogram(D.build_histogram(nn, ntok_bin())))
+    assert {str(b): float(n) for b, n in got.ntok_bins.items()} == direct_hist
 
-    # empty-table edge: global row still materializes with zero counts
-    empty = seq.filter(F.lit(False))
-    ge = P.profile_global(orig(empty))
-    assert ge["n_rows"] == 0 and ge["doc_id__n_null"] == 0
-    assert ge["n_tok__min"] is None
+    # empty table: grouping sets yield no global row, the summary still
+    # reads zero rows and no n_tok range
+    empty = P.profile_summary(orig(seq.filter(F.lit(False))), ntok_bin())
+    assert empty == P.ProfileSummary(
+        n_rows=0, null_counts={"doc_id": 0, "source": 0, "n_tok": 0},
+        ntok_min=None, ntok_max=None, source_counts={}, ntok_bins={})
+
+
+def test_driver_side_drift_rows_match_distributed(spark):
+    """drift.category_drift_rows (SourceDrift's driver-side comparison)
+    returns exactly the rows of drift.category_drift_violations on the
+    same inputs, in both directions and under both tolerance kinds:
+    NULL categories, NULL and NaN counts and repeated categories
+    included."""
+    from ensembl_datacheck_spark.operators import drift as D
+
+    nan = float("nan")
+    cur = [("a", 100), ("b", 50), (None, 7), ("c", 0), ("g", 9)]
+    base = [("a", 100.0), ("b", 100.0), ("d", 30.0), (None, 5.0),
+            ("e", None), ("a", 200.0), ("f", nan), ("g", 0.0), ("c", nan)]
+
+    def frame(rows):
+        return spark.createDataFrame(
+            [(k, None if v is None else float(v)) for k, v in rows],
+            "source string, n double")
+
+    for tol in (D.Tolerance(min_proportion=0.75),
+                D.Tolerance(window=(0.95, 1.10)),
+                D.Tolerance(min_proportion=0.5, window=(0.9, 1.2))):
+        for c, b in ((cur, base), (base, cur)):
+            want = D.category_drift_violations(
+                frame(c), frame(b), "source", tol, count_col="n",
+                baseline_count_col="n").collect()
+            got = D.category_drift_rows(c, b, tol)
+            assert sorted(map(str, got)) == sorted(
+                str(tuple(r)) for r in want), (tol, c is cur)
+
+
+def test_source_checks_driver_verdicts_match_distributed(spark, seq_fixture):
+    """SourceDrift (both directions) and SourcesUsed judge from the
+    collected profile summary on the driver; their violation rows equal
+    the distributed plans on the same inputs: category_drift_violations
+    over fact.groupBy(source) and a left-anti join of the active
+    sources, with a dropped active source, a shifted baseline and an
+    active source with a NULL name."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from ensembl_datacheck_spark.operators import drift as D
+
+    sources = seq_fixture["sources"].unionByName(spark.createDataFrame(
+        [(None, 0.0, True)], seq_fixture["sources"].schema))
+    fact = seq_fixture["sequences"].filter(F.col("source") != "src_01")
+    base = seq_fixture["baseline_shifted"]
+    tables = {"sequences": fact, "sources": sources, "baseline_stats": base}
+    cfg = {"source_drift_bidirectional": True}
+
+    def rows(viols, assertion):
+        return sorted((
+            (r["key"], tuple(sorted(json.loads(r["detail"] or "{}").items())))
+            for v in viols for r in v.filter(
+                F.col("assertion") == assertion).collect()), key=repr)
+
+    res, viols = run_check(registry.get("SourceDrift"), spark, tables, cfg)
+    assert res.error is None, res.error
+    cur = fact.groupBy("source").count()
+    base_kv = base.filter(F.col("stat_key") == "source_count").select(
+        F.col("category").alias("source"), "value")
+    tol = D.Tolerance(min_proportion=0.75)
+    fwd = D.category_drift_violations(cur, base_kv, "source", tol)
+    rev = D.category_drift_violations(
+        base_kv.withColumnRenamed("value", "count"),
+        cur.withColumnRenamed("count", "value"), "source", tol)
+
+    def want(df):
+        return sorted((
+            (r["category"], (("base_count", r["base_count"]),
+                             ("cur_count", r["cur_count"])))
+            for r in df.collect()), key=repr)
+
+    assert rows(viols, "source_subtotals") == want(fwd) != []
+    assert rows(viols, "source_subtotals_reverse") == want(rev) != []
+    got = {a.name: a.got for a in res.assertions}
+    assert got["source_subtotals"] == fwd.count()
+    assert got["source_subtotals_reverse"] == rev.count()
+
+    res, viols = run_check(registry.get("SourcesUsed"), spark, tables)
+    missing = sources.filter(F.col("active")).join(
+        fact.select("source"), "source", "left_anti")
+    assert rows(viols, "active_source_has_rows") == sorted(
+        ((r["source"], ()) for r in missing.collect()), key=repr)
+    assert res.assertions[0].got == missing.count() >= 2
 
 
 def test_gen_checks_md_check_mode_reports_missing_file(tmp_path, capsys, monkeypatch):

@@ -277,6 +277,7 @@ def test_ntok_quantile_sketch_path_is_one_fact_scan(spark, monkeypatch):
         SharedComputations,
         run_check,
     )
+    from ensembl_datacheck_spark.sources.synth import ntok_bin
 
     calls = {"fact_profile": 0, "quantile_profile": 0, "probe": 0}
     origs = {
@@ -311,7 +312,7 @@ def test_ntok_quantile_sketch_path_is_one_fact_scan(spark, monkeypatch):
     shared = SharedComputations()
     shared.get(
         core.profile_memo_key(tables["sequences"]),
-        lambda: origs["fact_profile"](tables["sequences"]),
+        lambda: core.P.collect_profile(tables["sequences"], ntok_bin()),
     )
     for k in calls:
         calls[k] = 0

@@ -308,6 +308,89 @@ def test_lane_count_below_one_fails_loud(spark, seq_fixture, monkeypatch,
                   max_parallel_dbs=0)
 
 
+def test_bucket_count_below_one_fails_loud(spark, seq_fixture):
+    """A bucket count below 1 raises when the Runner is built, before
+    any Spark job (the CLI exits 2 before starting Spark:
+    tests/test_cli.py).  A zero count would otherwise fail mid-run in
+    the fused scan's modulo, and a negative one yields negative bucket
+    ids that never checkpoint, so per-partition checks could never
+    resume."""
+    specs = registry.select(names=["DocIdUnique"])
+    tables = _clean_tables(seq_fixture)
+    for bad in (0, -4):
+        with pytest.raises(ValueError, match="n_buckets"):
+            Runner(spark, tables, n_buckets=bad)
+        # a fleet contains it per target, as any failed Runner
+        fleet = run_fleet(spark, [DbTarget("db", tables)], specs,
+                          n_buckets=bad)
+        assert "n_buckets must be at least 1" in fleet.errors["db"]
+
+
+FAMILY = ("SequencesStats", "RowTotals", "SourceDrift", "NTokDrift",
+          "NTokQuantileDrift", "SourcesUsed")
+
+
+def _input_records(spark, job_ids) -> int:
+    """Records the given jobs' stages read: file rows, plus one per
+    cached block batch read back."""
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    stage_ids = set()
+    for j in job_ids:
+        ids = store.job(j).stageIds()
+        stage_ids |= {ids.apply(i) for i in range(ids.size())}
+    stages = store.stageList(None, False, False,
+                             sc._gateway.new_array(sc._jvm.double, 0), None)
+    return sum(s.inputRecords() for s in
+               (stages.apply(i) for i in range(stages.size()))
+               if s.stageId() in stage_ids)
+
+
+def test_aggregate_family_job_budget(spark, parquet_tables):
+    """The six fact-profile consumers share one collected profile
+    summary: together they launch at most 8 jobs (the cube build with
+    its summary, and NTokQuantileDrift's per-value counts over the
+    cached cube) and read the fact table's rows once."""
+    specs = registry.select(names=list(FAMILY))
+    assert {s.name for s in specs} == set(FAMILY)
+    assert all("fact_profile" in s.shared_uses for s in specs)
+    tables = _read(spark, parquet_tables)
+    n_fact = tables["sequences"].count()
+    last = _last_job(spark)
+    summary = Runner(spark, tables, n_buckets=16).run(
+        specs, write_checkpoints=False)
+    assert all(r.error is None for r in summary.results), [
+        r.error for r in summary.results]
+    mine = {f"dcheck:{n}" for n in FAMILY}
+    jobs = [j for j, g in _jobs_since(spark, last).items() if g in mine]
+    assert 0 < len(jobs) <= 8, len(jobs)
+    assert n_fact <= _input_records(spark, jobs) < 2 * n_fact
+
+
+def test_profile_summary_rolls_up_the_cube_not_the_rows(spark,
+                                                         parquet_tables):
+    """The summary's grouping sets expand cube rows: its plan holds one
+    fact-table scan, and its only Expand sits above the cube's
+    (source, n_tok) aggregate."""
+    import re
+
+    from ensembl_datacheck_spark.operators import profile as P
+
+    fact = spark.read.parquet(parquet_tables["sequences"])
+    cube = P.fact_profile(fact).persist()
+    try:
+        plan = P.profile_summary_frame(cube, synth.ntok_bin())._jdf \
+            .queryExecution().executedPlan().toString().splitlines()
+    finally:
+        cube.unpersist()
+    expand = [i for i, line in enumerate(plan) if "Expand [" in line]
+    cube_aggs = [i for i, line in enumerate(plan) if re.search(
+        r"HashAggregate\(keys=\[source#\d+, n_tok#\d+\]", line)]
+    assert len(expand) == 1, plan
+    assert cube_aggs and min(cube_aggs) > expand[0], plan
+    assert sum("FileScan parquet" in line for line in plan) == 1, plan
+
+
 def _explode(ctx, *scan):
     raise RuntimeError("exploded mid-fan-out")
 
