@@ -1,11 +1,12 @@
-"""Shared load-gate for the bench harnesses (bench.py at the repo root
-and scripts/scaling_bench.py).
+"""Shared load-gate for the bench harnesses: bench.py at the repo root,
+scripts/scaling_bench.py, scripts/decode_attrib.py, scripts/lm_bench.py,
+scripts/hh_bench.py and perfbench/run.py.
 
-Both harnesses gate their timed sections on a quiet 1-minute load
+Each harness gates its timed sections on a quiet 1-minute load
 average — the sandbox host carries fluctuating external load that
 swings committed walls ±30% (BENCH/BASELINE.md, round-4 section) — and
-both must label a measurement that proceeded loaded after the gate
-timed out.  One implementation keeps the two committed artifacts
+must label a measurement that proceeded loaded after the gate
+timed out.  One implementation keeps the committed artifacts
 (BENCH_r{N}.json and BENCH/BASELINE.md) comparable: the round-5 review
 found the duplicated copies had already diverged (float-returning gate
 vs bool-returning gate, no timeout labeling in one of them).

@@ -141,12 +141,17 @@ def _shared_fact_profile(ctx) -> P.FactProfile:
     then judges from the collected summary in Python, and
     NTokQuantileDrift reads its per-value counts from the cube the
     summary job cached — six independent full fact scans collapse to
-    one, and the per-check re-aggregation jobs to none.  A standalone
-    run_check gets a private memo (one scan, same answers)."""
-    return ctx.shared.get(
-        _profile_memo_key(ctx),
-        lambda: P.collect_profile(ctx.table("sequences"), ntok_bin()),
-    )
+    one, and the per-check re-aggregation jobs to none.  The build's
+    jobs carry job group ``dcheck:__profile__``, not the group of
+    whichever consumer asked first.  A standalone run_check gets a
+    private memo (one scan, same answers)."""
+    from ensembl_datacheck_spark.plans.runner import job_group
+
+    def build() -> P.FactProfile:
+        with job_group(ctx.spark, "__profile__"):
+            return P.collect_profile(ctx.table("sequences"), ntok_bin())
+
+    return ctx.shared.get(_profile_memo_key(ctx), build)
 
 
 def _stat_rows(ctx, stat_key: str) -> list[tuple]:
@@ -500,14 +505,7 @@ def ntok_drift(ctx):
     "values (default 65536 — every collect is LIMIT-bounded, so an "
     "unbounded column can never flood the driver) the check runs the "
     "mergeable percentile_approx sketch tier (bounded rank error "
-    "1/accuracy).  The tier decision itself never adds a scan: with "
-    "co-consumers of the shared profile cube scheduled in the run "
-    "(Runner-counted CheckSpec.shared_uses) the check JOINS the shared "
-    "cube build — already memoized or in flight, it is a sunk cost; "
-    "standalone, ONE combined aggregation "
-    "(drift.quantile_sketch_probe) carries approx_count_distinct and "
-    "the sketch in the same pass — the sketch path costs exactly one "
-    "fact scan in every execution mode.",
+    "1/accuracy).",
     groups=("sequences", "drift"),
     tables=("sequences", "baseline_stats"),
     shared_uses=("fact_profile",),
@@ -515,7 +513,6 @@ def ntok_drift(ctx):
 def ntok_quantile_drift(ctx):
     from ensembl_datacheck_spark.plans.runner import SkipCheck
 
-    seq = ctx.table("sequences")
     base_q = {
         float(c): float(v) for c, v in _stat_rows(ctx, "n_tok_quantile")
     }
@@ -524,68 +521,28 @@ def ntok_quantile_drift(ctx):
     rel_tol = ctx.config.get("quantile_rel_tol", 0.05)
     max_card = int(ctx.config.get("quantile_exact_max_card", 65_536))
     qs = tuple(sorted(base_q))
-    # Tier decision without a dedicated scan: consult the shared profile
-    # cube ONLY if a co-running check already memoized it (peek — never
-    # build the cube just to count distinct values).  Otherwise run ONE
-    # combined fact aggregation (drift.quantile_sketch_probe) carrying
-    # count + approx_count_distinct + the percentile sketch together, so
-    # the sketch path costs exactly one fact-table scan in every
-    # execution mode.  Only an exact-tier verdict without a memoized
-    # cube pays a second scan — the cube build — and that scan seeds
-    # every other aggregate consumer via ctx.shared.
-    probe: list | None = None
-    sketch_q: dict[float, float] | None = None
-    shared = ctx.shared.peek(_profile_memo_key(ctx))
-    if shared is None and int(
-        ctx.config.get("_shared_consumers", {}).get("fact_profile", 0)
-    ) >= 2:
-        # Co-consumers are scheduled in this run (Runner counts declared
-        # CheckSpec.shared_uses), so the cube build is a sunk cost —
-        # JOIN it (blocking get) rather than racing it: a peek() that
-        # lands while the build is in flight would otherwise launch a
-        # duplicate full fact scan (the combined sketch probe), which
-        # measurably regressed the pooled suite at 50M rows.
-        shared = _shared_fact_profile(ctx)
-    if shared is not None:
-        probe = (
-            P.profile_ntok_counts(shared.cube).limit(max_card + 1).collect()
-        )
-        if not probe:
-            raise SkipCheck("sequences has no non-null n_tok rows")
-        use_sketch = len(probe) > max_card
-    else:
-        est = D.quantile_sketch_probe(seq, "n_tok", qs)
-        if est["n"] == 0:
-            raise SkipCheck("sequences has no non-null n_tok rows")
-        sketch_q = est["quantiles"]
-        use_sketch = est["card_est"] > max_card
-        if not use_sketch:
-            # exact tier wants the value-frequency histogram; build (or
-            # join) the shared cube.  If the HLL estimate undershot and
-            # the true cardinality exceeds the cap, fall back to the
-            # sketch values already computed — never a third scan.
-            probe = (
-                P.profile_ntok_counts(_shared_fact_profile(ctx).cube)
-                .limit(max_card + 1)
-                .collect()
-            )
-            use_sketch = len(probe) > max_card
+    # the LIMIT-guarded per-value collect over the shared profile cube
+    # decides the tier and, below the cap, is the exact tier's input
+    probe = (
+        P.profile_ntok_counts(_shared_fact_profile(ctx).cube)
+        .limit(max_card + 1)
+        .collect()
+    )
+    if not probe:
+        raise SkipCheck("sequences has no non-null n_tok rows")
 
     breaches: list[str] = []
-    if use_sketch:
+    if len(probe) > max_card:
         # sketch tier: mergeable percentile_approx partials — one
         # aggregation whose shuffle carries one sketch per partition
         # regardless of cardinality.
         tier = f"sketch (> {max_card} distinct values)"
-        if sketch_q is None:
-            nn = seq.filter(F.col("n_tok").isNotNull())
-            sketch_q = {
-                float(r["q"]): float(r["value"])
-                for r in D.quantile_profile(
-                    nn, "n_tok", qs, approx=True
-                ).collect()
-                if r["value"] is not None
-            }
+        nn = ctx.table("sequences").filter(F.col("n_tok").isNotNull())
+        sketch_q = {
+            float(r["q"]): float(r["value"])
+            for r in D.quantile_profile(nn, "n_tok", qs, approx=True).collect()
+            if r["value"] is not None
+        }
         for q in qs:
             bv, cur = base_q[q], sketch_q.get(q)
             if cur is None or abs(cur - bv) > rel_tol * abs(bv):

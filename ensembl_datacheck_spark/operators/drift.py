@@ -324,45 +324,6 @@ def quantile_profile(
     )
 
 
-def quantile_sketch_probe(
-    df: DataFrame,
-    value_col: str,
-    qs: tuple[float, ...],
-    accuracy: int = 10_000,
-    rsd: float = 0.02,
-) -> dict:
-    """ONE fact-table aggregation computing both the tier decision and
-    the sketch answer: count, approx_count_distinct (HLL++, relative sd
-    ``rsd``) and the percentile_approx sketch for every requested
-    quantile ride the same map-side-combinable pass.  Callers that may
-    need the sketch tier use this instead of a cardinality probe
-    followed by a second percentile scan — if the cardinality estimate
-    says 'sketch', the sketch values are already in hand (one scan
-    total); if it says 'exact', the exact tier's histogram build is the
-    only further scan.  Returns ``{"n": int, "card_est": int,
-    "quantiles": {q: value}}``."""
-    q_arr = F.array(*[F.lit(float(q)) for q in qs])
-    row = (
-        df.filter(F.col(value_col).isNotNull())
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(value_col, rsd).alias("card_est"),
-            F.percentile_approx(value_col, q_arr, F.lit(accuracy)).alias("qv"),
-        )
-        .first()
-    )
-    qvals = row["qv"] or []
-    return {
-        "n": int(row["n"]),
-        "card_est": int(row["card_est"]),
-        "quantiles": {
-            float(q): float(v)
-            for q, v in zip(qs, qvals)
-            if v is not None
-        },
-    }
-
-
 def quantile_drift_violations(
     current: DataFrame,
     baseline: DataFrame,

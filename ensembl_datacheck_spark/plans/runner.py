@@ -101,13 +101,12 @@ class SkipCheck(Exception):
 
 
 class SharedComputations:
-    """Per-run memoization for Spark jobs whose result several checks can
-    consume (the fact-table profile in checks/core.py is the flagship:
-    one cube scan and its collected summary replace six independent
-    full scans).  Keyed
-    compute-once with a lock PER KEY: the first pooled check to ask runs
-    the job while its co-consumers block on that key only — unrelated
-    shared values never serialize behind it."""
+    """Per-run memo for values several checks consume: the fact-table
+    profile of checks/core.py (one cube scan and its collected summary
+    replace six full scans), and the Runner's own per-run values.  Every
+    consumer asks with a blocking ``get``: the first caller computes the
+    value while later callers of the SAME key wait for it, under a lock
+    per key, so unrelated keys never serialize behind each other."""
 
     def __init__(self) -> None:
         self._vals: dict[str, object] = {}
@@ -121,17 +120,6 @@ class SharedComputations:
             if key not in self._vals:
                 self._vals[key] = fn()
             return self._vals[key]
-
-    def peek(self, key: str) -> object | None:
-        """The memoized value if ALREADY computed, else None — never
-        triggers a build.  Lets a consumer with a cheaper single-purpose
-        plan (e.g. NTokQuantileDrift's combined sketch scan) use the
-        shared value opportunistically without paying for it.  A build
-        in flight on another thread reads as None (no blocking): the
-        peeker then runs its own one-scan plan, which is the bounded
-        worst case."""
-        with self._meta:
-            return self._vals.get(key)
 
     def release(self) -> None:
         """Unpersist cached DataFrame values and reset the memo.  Called
@@ -335,9 +323,6 @@ class Runner:
         # the store, so it needs the namespace just as much
         self.lineage = f"{lineage}#nb{n_buckets}#bk{bucket_key}"
         self.config = config or {}
-        # per-run view of config (run() adds _shared_consumers); default
-        # for any exec path reached outside run()
-        self._run_config = dict(self.config)
         self.run_id = new_run_id()
         # Injectable so a fleet (plans/fleet.py) can hand every Runner ONE
         # memo: shared values are keyed by table fingerprint
@@ -346,12 +331,11 @@ class Runner:
         # collide.  Default: private per-run memo, today's behavior.
         self.shared = shared if shared is not None else SharedComputations()
         self._owns_shared = shared is None
-        self._cc_lock = threading.Lock()
-        self._completed_cache: dict[str, set[int]] | None = None
-        # per-run state, set up by run(): the dimension tables' local
-        # relations (_table_for) and the rows per bucket the fused scan
+        # per-run state, set up by run(): a memo for the dimension tables'
+        # local relations (_table_for) and the lineage's checkpoint map
+        # (_pending_buckets), and the rows per bucket the fused scan
         # counted (partition -1 = the whole table)
-        self._locals: SharedComputations | None = None
+        self._run_memo: SharedComputations | None = None
         self._scanned_rows: dict[int, int] = {}
 
     # --- helpers ---
@@ -365,7 +349,7 @@ class Runner:
         first use and is shared by every later check of the run
         (sources.io.localize_if_small); the fact table, and any table
         outside a run, stays as given."""
-        cache = self._locals
+        cache = self._run_memo
         if cache is None or name == self.fact_table:
             return df
 
@@ -373,7 +357,7 @@ class Runner:
             with job_group(self.spark, "__tables__"):
                 return localize_if_small(self.spark, df)
 
-        return cache.get(name, build)
+        return cache.get(f"table:{name}", build)
 
     def _bucket_rows(self, need: set[int]) -> dict[int, int]:
         """Rows per bucket for the checkpoint rows' ``n_rows`` (partition
@@ -408,18 +392,14 @@ class Runner:
         """None = all pending.  Empty list = nothing to do (skip)."""
         if self.store is None or spec.force:
             return None
-        # lock-guarded compute-once: the fused scan and the pooled checks
-        # race to be first caller, and exactly one checkpoint-table load
-        # must run
-        with self._cc_lock:
-            if self._completed_cache is None:
-                # one checkpoint-table load + aggregation serves every
-                # check in this run (invalidated by run() after appending)
-                with job_group(self.spark, "__checkpoint__"):
-                    self._completed_cache = self.store.completed_map(
-                        self.lineage
-                    )
-            done = self._completed_cache.get(spec.name, set())
+
+        def load() -> dict[str, set[int]]:
+            with job_group(self.spark, "__checkpoint__"):
+                return self.store.completed_map(self.lineage)
+
+        # one checkpoint-table load per run serves every check; the run's
+        # own append comes after every check has read it
+        done = self._run_memo.get("checkpoints", load).get(spec.name, set())
         if not done:
             return None
         all_b = set(range(self.n_buckets)) if spec.per_partition else {-1}
@@ -516,48 +496,20 @@ class Runner:
         unpersist() would hold one InMemoryRelation per distinct fact
         table for the SparkSession's lifetime.  A memo INJECTED by a
         fleet is left for run_fleet to release.  Per-run state (the
-        dimension tables' local relations, the fused scan's row counts)
-        lives only for the call."""
+        dimension tables' local relations, the lineage's checkpoint map,
+        the fused scan's row counts) lives only for the call."""
         if parallelism is None:
             parallelism = lanes(self.spark)
         if parallelism < 1:
             raise ValueError(
                 f"parallelism must be at least 1, got {parallelism}"
             )
-        self._locals = SharedComputations()
+        self._run_memo = SharedComputations()
         self._scanned_rows = {}
         try:
             summary = RunSummary()
             all_violations: list[DataFrame] = []
             checkpoint_rows: list[CheckpointRow] = []
-
-            # Count declared shared-computation consumers among the checks
-            # in THIS run (CheckSpec.shared_uses) and expose the counts to
-            # every body: a check that can serve itself with a cheaper
-            # one-scan plan (NTokQuantileDrift's combined sketch probe)
-            # joins the shared build instead iff co-consumers make that
-            # build a sunk cost — without this signal a peek() racing the
-            # in-flight cube build launches a duplicate full fact scan.
-            # Only checks that will actually RUN against the full table
-            # count as consumers: a checkpoint-complete sibling skips
-            # before touching ctx.shared, and a partially-pending one runs
-            # against a resume-filtered scan with shared=None (see
-            # _exec_one) — counting either would make a lone pending check
-            # "join" a cube build nobody else pays for, re-introducing the
-            # duplicate-scan cost on resume that the sunk-cost rule exists
-            # to avoid.  _pending_buckets is one cached checkpoint-table
-            # load per run.
-            consumer_counts: dict[str, int] = {}
-            for s in specs:
-                if not s.shared_uses:
-                    continue
-                if self._pending_buckets(s) is not None:
-                    continue
-                for kind in s.shared_uses:
-                    consumer_counts[kind] = consumer_counts.get(kind, 0) + 1
-            run_config = dict(self.config)
-            run_config["_shared_consumers"] = consumer_counts
-            self._run_config = run_config
 
             fused = [s for s in specs if s.row_predicates is not None]
             rest = [s for s in specs if s not in fused]
@@ -611,10 +563,9 @@ class Runner:
                         for r in checkpoint_rows:
                             r.n_rows = rows.get(r.partition_id, 0)
                     self.store.append(checkpoint_rows)
-                self._completed_cache = None  # appended rows invalidate it
             return summary
         finally:
-            self._locals = None
+            self._run_memo = None
             self._scanned_rows = {}
             if self._owns_shared:
                 self.shared.release()
@@ -630,7 +581,7 @@ class Runner:
             # DbCheck.pm:775 analogue
             return _skipped(spec, "All tests passed in a previous run"), [], []
         result, violations = run_check(
-            spec, self.spark, self._filtered_tables(pending), self._run_config,
+            spec, self.spark, self._filtered_tables(pending), self.config,
             bucket_key=self.bucket_key, n_buckets=self.n_buckets,
             # shared values are computed from the FULL fact table; a
             # resume-filtered scan must not consume (or poison) them
@@ -702,15 +653,13 @@ class Runner:
         if union_pending is not None:
             scan = scan.filter(self._bucket().isin(sorted(union_pending)))
 
-        # same context protocol as exec_one/run_check: the per-run config
-        # view (carries _shared_consumers) and the run-shared memo —
-        # handed over only on a full-table scan; a resume-filtered scan
-        # must not consume (or poison) shared values computed from the
-        # full fact table.  A private memo created here is released at
+        # same context protocol as _exec_one/run_check: the run-shared
+        # memo is handed over only on a full-table scan; a resume-filtered
+        # scan must not consume (or poison) shared values computed from
+        # the full fact table.  A private memo created here is released at
         # the end of _run_fused (run_check's discipline), not leaked.
         ctx = CheckContext(
-            self.spark, {**self.tables, self.fact_table: scan},
-            self._run_config,
+            self.spark, {**self.tables, self.fact_table: scan}, self.config,
             bucket_key=self.bucket_key, n_buckets=self.n_buckets,
             fact_table=self.fact_table,
             shared=self.shared if union_pending is None else None,

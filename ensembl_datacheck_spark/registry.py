@@ -60,13 +60,9 @@ class CheckSpec:
     # the scan (e.g. broadcast-join a dimension flag).
     row_predicates: Callable | None = None
     # Shared-computation kinds this check's body consumes via ctx.shared
-    # (e.g. "fact_profile", the one-scan profile cube).  The Runner counts
-    # declared consumers per run and exposes the counts to bodies
-    # (ctx.config["_shared_consumers"]), so a check with a cheaper
-    # single-purpose plan can decide between joining the shared build
-    # (co-consumers scheduled -> the build is paid anyway) and running its
-    # own one-scan plan (standalone -> the shared build would be a
-    # dedicated extra scan).
+    # (e.g. "fact_profile", the one-scan profile cube).  Declared
+    # metadata: perfbench and the tests group a family by it; the Runner
+    # does not read it (every consumer joins the shared build).
     shared_uses: tuple[str, ...] = ()
 
     def index_entry(self) -> dict[str, Any]:

@@ -33,10 +33,11 @@ import argparse
 import json
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
+from benchlib import wait_for_quiet  # noqa: E402  (shared load gate)
 
 WORKER = r"""
 import json, sys, time
@@ -121,15 +122,6 @@ print("RESULT " + json.dumps(out))
 """
 
 
-def wait_for_quiet(max_load: float = 5.0, timeout_s: int = 240) -> None:
-    t0 = time.time()
-    while time.time() - t0 < timeout_s:
-        load1 = float(open("/proc/loadavg").read().split()[0])
-        if load1 < max_load:
-            return
-        time.sleep(10)
-
-
 def run_job(data: str, cores: int, job: str) -> dict:
     code = WORKER.format(repo=REPO, cores=cores, data=data, job=job)
     out = subprocess.run([sys.executable, "-c", code], check=True,
@@ -153,8 +145,10 @@ def main():
     for job in args.jobs:
         results[job] = {}
         for cores in args.levels:
-            wait_for_quiet()
+            loadavg_start, gate_timed_out = wait_for_quiet()
             r = run_job(args.data, cores, job)
+            r.update(loadavg_start=loadavg_start,
+                     gate_timed_out=gate_timed_out)
             results[job][cores] = r
             print(f"{job}@{cores}: wall={r['wall']:.2f}s walls={[f'{w:.2f}' for w in r['walls']]}",
                   file=sys.stderr)

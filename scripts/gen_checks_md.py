@@ -15,6 +15,7 @@ fails when this file is stale, exactly like t/index.t pins index.json.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -72,11 +73,19 @@ def render(index: list[dict]) -> str:
 
 
 def main() -> int:
+    ap = argparse.ArgumentParser(
+        description="Write CHECKS.md from ensembl_datacheck_spark/index.json."
+    )
+    ap.add_argument(
+        "--check", action="store_true",
+        help="write nothing; exit 1 if CHECKS.md is missing or stale",
+    )
+    args = ap.parse_args()
     with open(os.path.join(REPO, "ensembl_datacheck_spark", "index.json")) as f:
         index = json.load(f)
     text = render(index)
     path = os.path.join(REPO, "CHECKS.md")
-    if "--check" in sys.argv:
+    if args.check:
         try:
             with open(path) as f:
                 current = f.read()

@@ -3,6 +3,8 @@ resume, on the known-violation synthetic fixture (FIXTURES.md §1/§5)."""
 
 from __future__ import annotations
 
+import pytest
+
 import ensembl_datacheck_spark.checks  # noqa: F401  (registers the suite)
 from ensembl_datacheck_spark.plans.checkpoint import CheckpointStore
 from ensembl_datacheck_spark.plans.runner import Runner, run_check
@@ -813,9 +815,9 @@ def test_source_checks_driver_verdicts_match_distributed(spark, seq_fixture):
     assert res.assertions[0].got == missing.count() >= 2
 
 
-def test_gen_checks_md_check_mode_reports_missing_file(tmp_path, capsys, monkeypatch):
-    """--check on a tree without CHECKS.md reports stale (exit 1), not a
-    FileNotFoundError traceback."""
+def _gen_checks_md(tmp_path, monkeypatch, arg):
+    """scripts/gen_checks_md.py loaded as a module, pointed at a tmp tree
+    holding only index.json, with ``arg`` as its command line."""
     import importlib.util
     import pathlib
     import shutil
@@ -834,9 +836,29 @@ def test_gen_checks_md_check_mode_reports_missing_file(tmp_path, capsys, monkeyp
         tmp_path / "ensembl_datacheck_spark" / "index.json",
     )
     monkeypatch.setattr(mod, "REPO", str(tmp_path))
-    monkeypatch.setattr(_sys, "argv", ["gen_checks_md.py", "--check"])
+    monkeypatch.setattr(_sys, "argv", ["gen_checks_md.py", arg])
+    return mod
+
+
+def test_gen_checks_md_check_mode_reports_missing_file(tmp_path, capsys, monkeypatch):
+    """--check on a tree without CHECKS.md reports stale (exit 1), not a
+    FileNotFoundError traceback."""
+    mod = _gen_checks_md(tmp_path, monkeypatch, "--check")
     assert mod.main() == 1
     assert "stale" in capsys.readouterr().out
+
+
+@pytest.mark.parametrize("arg, code", [("--help", 0), ("--no-such-flag", 2)])
+def test_gen_checks_md_help_and_bad_args_write_nothing(tmp_path, capsys,
+                                                       monkeypatch, arg, code):
+    """--help prints usage and an unknown argument exits 2; neither
+    writes CHECKS.md."""
+    mod = _gen_checks_md(tmp_path, monkeypatch, arg)
+    with pytest.raises(SystemExit) as exc:
+        mod.main()
+    assert exc.value.code == code
+    assert "usage:" in "".join(capsys.readouterr())
+    assert not (tmp_path / "CHECKS.md").exists()
 
 
 def test_register_database_rejects_jdbc_format(spark):

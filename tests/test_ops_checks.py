@@ -264,27 +264,15 @@ def test_ntok_quantile_drift_auto_switches_to_sketch(spark):
     assert a.status == Status.OK, a.diag  # sketch within 5% of exact
 
 
-def test_ntok_quantile_sketch_path_is_one_fact_scan(spark, monkeypatch):
-    """VERDICT r4 item 4: the sketch path must launch exactly ONE
-    fact-table scan in every execution mode.  Standalone (no memoized
-    profile cube): the single combined quantile_sketch_probe aggregation
-    — no cube build, no second percentile pass.  With a co-running
-    check's memoized cube: the tier decision is free (peek) and only the
-    percentile sketch scans.  Exact tier standalone still builds the
-    shared cube (it seeds every other aggregate consumer)."""
+def _count_quantile_scans(monkeypatch) -> dict[str, int]:
+    """Count the check's fact aggregations: the shared profile cube build
+    (profile.fact_profile) and the sketch tier's percentile pass
+    (drift.quantile_profile)."""
     import ensembl_datacheck_spark.checks.core as core
-    from ensembl_datacheck_spark.plans.runner import (
-        SharedComputations,
-        run_check,
-    )
-    from ensembl_datacheck_spark.sources.synth import ntok_bin
 
-    calls = {"fact_profile": 0, "quantile_profile": 0, "probe": 0}
-    origs = {
-        "fact_profile": core.P.fact_profile,
-        "quantile_profile": core.D.quantile_profile,
-        "probe": core.D.quantile_sketch_probe,
-    }
+    calls = {"fact_profile": 0, "quantile_profile": 0}
+    origs = {"fact_profile": core.P.fact_profile,
+             "quantile_profile": core.D.quantile_profile}
 
     def counted(key):
         def wrap(*a, **kw):
@@ -294,21 +282,33 @@ def test_ntok_quantile_sketch_path_is_one_fact_scan(spark, monkeypatch):
 
     monkeypatch.setattr(core.P, "fact_profile", counted("fact_profile"))
     monkeypatch.setattr(core.D, "quantile_profile", counted("quantile_profile"))
-    monkeypatch.setattr(core.D, "quantile_sketch_probe", counted("probe"))
+    return calls
 
+
+@pytest.mark.parametrize("max_card, sketch", [(100_000, 0), (100, 1)],
+                         ids=["exact", "sketch"])
+def test_ntok_quantile_joins_shared_profile_standalone(spark, monkeypatch,
+                                                       max_card, sketch):
+    """NTokQuantileDrift always gets the shared profile by a blocking
+    get: standalone it builds the cube once (the exact tier needs nothing
+    else; the sketch tier adds one percentile pass), and with a memo a
+    sibling already seeded it builds no cube at all."""
+    import ensembl_datacheck_spark.checks.core as core
+    from ensembl_datacheck_spark.plans.runner import (
+        SharedComputations,
+        run_check,
+    )
+    from ensembl_datacheck_spark.sources.synth import ntok_bin
+
+    calls = _count_quantile_scans(monkeypatch)
     tables = _ntok_quantile_tables(spark)
     [spec] = registry.select(names=["NTokQuantileDrift"])
+    cfg = {"quantile_exact_max_card": max_card}
 
-    # 1) sketch tier, standalone: one combined scan, nothing else
-    res, _ = run_check(
-        spark=spark, spec=spec, tables=tables,
-        config={"quantile_exact_max_card": 100},
-    )
+    res, _ = run_check(spark=spark, spec=spec, tables=tables, config=cfg)
     assert res.status == Status.OK, res.assertions
-    assert calls == {"fact_profile": 0, "quantile_profile": 0, "probe": 1}
+    assert calls == {"fact_profile": 1, "quantile_profile": sketch}
 
-    # 2) sketch tier with the cube already memoized by a co-running
-    #    check: free tier decision, one percentile-sketch scan
     shared = SharedComputations()
     shared.get(
         core.profile_memo_key(tables["sequences"]),
@@ -316,76 +316,28 @@ def test_ntok_quantile_sketch_path_is_one_fact_scan(spark, monkeypatch):
     )
     for k in calls:
         calls[k] = 0
-    res, _ = run_check(
-        spark=spark, spec=spec, tables=tables,
-        config={"quantile_exact_max_card": 100}, shared=shared,
-    )
+    try:
+        res, _ = run_check(spark=spark, spec=spec, tables=tables,
+                           config=cfg, shared=shared)
+    finally:
+        shared.release()
     assert res.status == Status.OK, res.assertions
-    assert calls == {"fact_profile": 0, "quantile_profile": 1, "probe": 0}
-
-    # 3) exact tier, standalone: combined probe decides, cube build
-    #    serves the histogram (and would seed co-consumers)
-    for k in calls:
-        calls[k] = 0
-    res, _ = run_check(
-        spark=spark, spec=spec, tables=tables,
-        config={"quantile_exact_max_card": 100_000},
-    )
-    assert res.status == Status.OK, res.assertions
-    assert calls == {"fact_profile": 1, "quantile_profile": 0, "probe": 1}
-
-    # 4) pooled run with co-consumers scheduled (_shared_consumers >= 2,
-    #    the signal Runner.run derives from CheckSpec.shared_uses) but
-    #    the cube not yet memoized — the exact race that duplicated the
-    #    fact scan at 50M rows: the check must JOIN the shared build
-    #    (blocking get -> one cube build) and never launch the combined
-    #    probe or a separate percentile pass
-    for k in calls:
-        calls[k] = 0
-    res, _ = run_check(
-        spark=spark, spec=spec, tables=tables,
-        config={"quantile_exact_max_card": 100_000,
-                "_shared_consumers": {"fact_profile": 2}},
-        shared=SharedComputations(),
-    )
-    assert res.status == Status.OK, res.assertions
-    assert calls == {"fact_profile": 1, "quantile_profile": 0, "probe": 0}
+    assert calls == {"fact_profile": 0, "quantile_profile": sketch}
 
 
-def test_runner_counts_shared_consumers_and_quantile_joins_build(
-    spark, monkeypatch
-):
-    """End-to-end: a pooled Runner.run over the aggregate family injects
-    _shared_consumers from the specs' declared shared_uses, and the
-    quantile check therefore never runs its own combined probe — the
-    whole family shares ONE cube build."""
-    import ensembl_datacheck_spark.checks.core as core
-    from ensembl_datacheck_spark.plans.runner import Runner
-
-    calls = {"fact_profile": 0, "probe": 0}
-    origs = {"fact_profile": core.P.fact_profile,
-             "probe": core.D.quantile_sketch_probe}
-
-    def counted(key):
-        def wrap(*a, **kw):
-            calls[key] += 1
-            return origs[key](*a, **kw)
-        return wrap
-
-    monkeypatch.setattr(core.P, "fact_profile", counted("fact_profile"))
-    monkeypatch.setattr(core.D, "quantile_sketch_probe", counted("probe"))
-
+def test_runner_quantile_joins_shared_build(spark, monkeypatch):
+    """A pooled Runner.run over part of the aggregate family builds the
+    shared profile cube once, NTokQuantileDrift included."""
+    calls = _count_quantile_scans(monkeypatch)
     tables = _ntok_quantile_tables(spark)
     specs = registry.select(
         names=["SequencesStats", "RowTotals", "NTokQuantileDrift"]
     )
-    assert sum(1 for s in specs if "fact_profile" in s.shared_uses) == 3
     summary = Runner(spark, tables, n_buckets=8).run(
         specs, write_checkpoints=False, parallelism=4
     )
     assert summary.n_failed == 0, [r.to_dict() for r in summary.results]
-    assert calls["probe"] == 0
-    assert calls["fact_profile"] == 1
+    assert calls == {"fact_profile": 1, "quantile_profile": 0}
 
 
 def test_ntok_quantile_drift_exact_tier_below_threshold(spark):
@@ -402,30 +354,15 @@ def test_ntok_quantile_drift_exact_tier_below_threshold(spark):
     assert a.status == Status.OK, a.diag
 
 
-def test_resume_lone_quantile_consumer_takes_probe_path(spark, tmp_path,
-                                                        monkeypatch):
-    """Resume-aware consumer counting: siblings that are
-    checkpoint-complete skip before touching ctx.shared, so they must
-    not count as fact_profile consumers — a lone pending
-    NTokQuantileDrift on a resume run takes its own one-scan combined
-    probe instead of paying a cube build nobody else consumes."""
-    import ensembl_datacheck_spark.checks.core as core
+def test_resume_lone_quantile_consumer_builds_profile_once(spark, tmp_path,
+                                                          monkeypatch):
+    """On a resume where its siblings passed before, NTokQuantileDrift
+    is the only pending consumer of the shared profile: it builds the
+    cube once (and, in the sketch tier, runs its percentile pass)."""
     from ensembl_datacheck_spark.plans.checkpoint import CheckpointStore
     from ensembl_datacheck_spark.sources.io import Catalog
 
-    calls = {"fact_profile": 0, "probe": 0}
-    origs = {"fact_profile": core.P.fact_profile,
-             "probe": core.D.quantile_sketch_probe}
-
-    def counted(key):
-        def wrap(*a, **kw):
-            calls[key] += 1
-            return origs[key](*a, **kw)
-        return wrap
-
-    monkeypatch.setattr(core.P, "fact_profile", counted("fact_profile"))
-    monkeypatch.setattr(core.D, "quantile_sketch_probe", counted("probe"))
-
+    calls = _count_quantile_scans(monkeypatch)
     tables = _ntok_quantile_tables(spark)
     store = CheckpointStore(Catalog(spark, str(tmp_path / "wh")))
     cfg = {"quantile_exact_max_card": 100}  # sketch tier
@@ -437,10 +374,10 @@ def test_resume_lone_quantile_consumer_takes_probe_path(spark, tmp_path,
     s1 = r1.run(registry.select(names=["SequencesStats", "RowTotals"]),
                 parallelism=4)
     assert s1.n_failed == 0
-    assert calls == {"fact_profile": 1, "probe": 0}
+    assert calls == {"fact_profile": 1, "quantile_profile": 0}
 
-    # run 2: full family; siblings skip via checkpoint, quantile is the
-    # only real consumer -> standalone combined probe, NO cube build
+    # run 2: full family; siblings skip via checkpoint, the quantile
+    # check builds the cube for itself
     for k in calls:
         calls[k] = 0
     r2 = Runner(spark, tables, n_buckets=8, checkpoint_store=store,
@@ -452,7 +389,8 @@ def test_resume_lone_quantile_consumer_takes_probe_path(spark, tmp_path,
     assert by_name["SequencesStats"].status == Status.SKIP
     assert by_name["RowTotals"].status == Status.SKIP
     assert by_name["NTokQuantileDrift"].status == Status.OK
-    assert calls == {"fact_profile": 0, "probe": 1}
+    assert "sketch" in by_name["NTokQuantileDrift"].assertions[0].expected
+    assert calls == {"fact_profile": 1, "quantile_profile": 1}
 
 
 def test_shared_profile_cube_released_after_run(spark, monkeypatch):

@@ -25,7 +25,7 @@ from ensembl_datacheck_spark.sources.io import Catalog, localize_if_small
 from ensembl_datacheck_spark.verdict import Status
 
 THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
-RUNNER_GROUPS = {"dcheck:__fused__", "dcheck:__tables__",
+RUNNER_GROUPS = {"dcheck:__fused__", "dcheck:__profile__", "dcheck:__tables__",
                  "dcheck:__checkpoint__", "dcheck:__funnel__"}
 
 
@@ -361,10 +361,36 @@ def test_aggregate_family_job_budget(spark, parquet_tables):
         specs, write_checkpoints=False)
     assert all(r.error is None for r in summary.results), [
         r.error for r in summary.results]
-    mine = {f"dcheck:{n}" for n in FAMILY}
+    mine = {f"dcheck:{n}" for n in FAMILY} | {"dcheck:__profile__"}
     jobs = [j for j, g in _jobs_since(spark, last).items() if g in mine]
     assert 0 < len(jobs) <= 8, len(jobs)
     assert n_fact <= _input_records(spark, jobs) < 2 * n_fact
+
+
+@pytest.mark.parametrize("parallelism", [1, 4])
+def test_shared_profile_build_runs_under_its_own_group(spark, parquet_tables,
+                                                       parallelism):
+    """The shared fact profile is built under ``dcheck:__profile__``, not
+    under whichever consumer asks first: those jobs read the fact rows,
+    and no consumer's job reads more than the cached cube's batches (one
+    input record per cached partition, at most one per shuffle
+    partition)."""
+    specs = registry.select(names=list(FAMILY))
+    tables = _read(spark, parquet_tables)
+    n_fact = tables["sequences"].count()
+    max_batches = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert max_batches < n_fact
+    last = _last_job(spark)
+    Runner(spark, tables, n_buckets=16).run(
+        specs, write_checkpoints=False, parallelism=parallelism)
+    by_group: dict[str, list[int]] = {}
+    for j, g in _jobs_since(spark, last).items():
+        by_group.setdefault(g, []).append(j)
+    profile = by_group.get("dcheck:__profile__", [])
+    assert n_fact <= _input_records(spark, profile) < 2 * n_fact
+    for name in FAMILY:
+        for j in by_group.get(f"dcheck:{name}", []):
+            assert _input_records(spark, [j]) <= max_batches, (name, j)
 
 
 def test_profile_summary_rolls_up_the_cube_not_the_rows(spark,
