@@ -3,9 +3,9 @@
 BASELINE.json input_hint).
 
 Check granularity mirrors the reference's one-concern-per-check style
-(lib/.../Checks/*); row-level checks additionally declare fused predicates
-so the Runner executes them all in ONE scan (see operators/fused.py) —
-the scale-out answer to the reference's scan-per-SQL model.
+(lib/.../Checks/*); a row-level check IS its predicate factory, and the
+Runner executes all of them in ONE scan (see operators/fused.py) — the
+scale-out answer to the reference's scan-per-SQL model.
 
 Family mapping (SURVEY.md §2.6):
   1. column stats / completeness → SequencesCompleteness, SequencesStats
@@ -32,7 +32,16 @@ from ensembl_datacheck_spark.verdict import AssertionResult, Status
 # ---------------------------------------------------------------------------
 
 
-def _completeness_preds(ctx, scan):
+@register(
+    "SequencesCompleteness",
+    "No null/empty doc_id, source, tokens, or non-positive n_tok "
+    "(has_data semantics, Test/DataCheck.pm:490-502; BlankNulls.pm:62-66)",
+    groups=("sequences", "completeness", "row_fused"),
+    tables=("sequences",),
+    per_partition=True,
+    row_predicates=True,
+)
+def sequences_completeness(ctx, scan):
     did, src, tok = F.col("doc_id"), F.col("source"), F.col("tokens")
     preds = [
         RowPredicate("doc_id_null_or_empty", did.isNull() | (did == ""), ("source", "n_tok")),
@@ -46,27 +55,16 @@ def _completeness_preds(ctx, scan):
 
 
 @register(
-    "SequencesCompleteness",
-    "No null/empty doc_id, source, tokens, or non-positive n_tok "
-    "(has_data semantics, Test/DataCheck.pm:490-502; BlankNulls.pm:62-66)",
-    groups=("sequences", "completeness", "row_fused"),
+    "TokenInvariants",
+    "size(tokens) == n_tok and all token values in [0, vocab) — the "
+    "per-row invariant family (input_hint; CheckJSONObjects.pm-style "
+    "per-row validation, SURVEY.md S23)",
+    groups=("sequences", "tokens", "row_fused"),
     tables=("sequences",),
     per_partition=True,
-    row_predicates=_completeness_preds,
+    row_predicates=True,
 )
-def sequences_completeness(ctx):
-    seq = ctx.table("sequences")
-    preds, scan = _completeness_preds(ctx, seq)
-    for p in preds:
-        ctx.record(
-            A.is_rows_zero(
-                scan.filter(p.predicate).select("doc_id", *p.diag_cols), p.assertion
-            ),
-            key_col="doc_id",
-        )
-
-
-def _token_invariant_preds(ctx, scan):
+def token_invariants(ctx, scan):
     # ONE predicate definition each, shared with the standalone
     # operators (column_stats.token_length_violations /
     # token_domain_violations) — hand-synchronized copies had already
@@ -89,28 +87,6 @@ def _token_invariant_preds(ctx, scan):
         ),
     ]
     return preds, scan
-
-
-@register(
-    "TokenInvariants",
-    "size(tokens) == n_tok and all token values in [0, vocab) — the "
-    "per-row invariant family (input_hint; CheckJSONObjects.pm-style "
-    "per-row validation, SURVEY.md S23)",
-    groups=("sequences", "tokens", "row_fused"),
-    tables=("sequences",),
-    per_partition=True,
-    row_predicates=_token_invariant_preds,
-)
-def token_invariants(ctx):
-    seq = ctx.table("sequences")
-    preds, scan = _token_invariant_preds(ctx, seq)
-    for p in preds:
-        ctx.record(
-            A.is_rows_zero(
-                scan.filter(p.predicate).select("doc_id", *p.diag_cols), p.assertion
-            ),
-            key_col="doc_id",
-        )
 
 
 def profile_memo_key(df) -> str:
@@ -296,7 +272,17 @@ def doc_id_unique(ctx):
 # ---------------------------------------------------------------------------
 
 
-def _referential_preds(ctx, scan):
+@register(
+    "SourceReferential",
+    "Every sequences.source exists in the sources dimension and inactive "
+    "sources have zero rows (fk + constrained FK, Test/DataCheck.pm:395-419, "
+    "ForeignKeys.pm:82-89; broadcast hash anti-join)",
+    groups=("sequences", "referential", "row_fused"),
+    tables=("sequences", "sources"),
+    per_partition=True,
+    row_predicates=True,
+)
+def source_referential(ctx, scan):
     sources = ctx.table("sources")
     scan = with_dim_flag(scan, "source", sources, "source", "__src_match")
     inactive = sources.filter(~F.col("active"))
@@ -315,28 +301,6 @@ def _referential_preds(ctx, scan):
         ),
     ]
     return preds, scan
-
-
-@register(
-    "SourceReferential",
-    "Every sequences.source exists in the sources dimension and inactive "
-    "sources have zero rows (fk + constrained FK, Test/DataCheck.pm:395-419, "
-    "ForeignKeys.pm:82-89; broadcast hash anti-join)",
-    groups=("sequences", "referential", "row_fused"),
-    tables=("sequences", "sources"),
-    per_partition=True,
-    row_predicates=_referential_preds,
-)
-def source_referential(ctx):
-    seq = ctx.table("sequences")
-    preds, scan = _referential_preds(ctx, seq)
-    for p in preds:
-        ctx.record(
-            A.is_rows_zero(
-                scan.filter(p.predicate).select("doc_id", *p.diag_cols), p.assertion
-            ),
-            key_col="doc_id",
-        )
 
 
 @register(

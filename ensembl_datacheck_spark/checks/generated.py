@@ -90,26 +90,11 @@ def generated_check_specs(
             _guard_fact(ctx)
             return blank_null_predicates(_df), scan
 
-        def _bn_body(ctx, _df=df):
-            from ensembl_datacheck_spark import assertions as A
-
-            for p in blank_null_predicates(_df):
-                key = _df.columns[0]
-                ctx.record(
-                    A.is_rows_zero(
-                        ctx.table(table_name).filter(p.predicate)
-                        .select(key, *p.diag_cols),
-                        p.assertion,
-                    ),
-                    key_col=key,
-                )
-
         specs.append(
             CheckSpec(
                 name=f"BlankNulls_{table_name}",
                 description=f"generated blank-null sweep over string columns "
                             f"of {table_name} (BlankNulls.pm:41-67)",
-                body=_bn_body,
                 groups=("generated", "completeness", "row_fused"),
                 severity=Severity.ADVISORY,
                 tables=(table_name,),
@@ -123,26 +108,11 @@ def generated_check_specs(
             _guard_fact(ctx)
             return whitespace_predicates(_df), scan
 
-        def _ws_body(ctx, _df=df):
-            from ensembl_datacheck_spark import assertions as A
-
-            for p in whitespace_predicates(_df):
-                key = _df.columns[0]
-                ctx.record(
-                    A.is_rows_zero(
-                        ctx.table(table_name).filter(p.predicate)
-                        .select(key, *p.diag_cols),
-                        p.assertion,
-                    ),
-                    key_col=key,
-                )
-
         specs.append(
             CheckSpec(
                 name=f"Whitespace_{table_name}",
                 description=f"generated whitespace sweep over string columns "
                             f"of {table_name} (WhitespaceCritical.pm:41-68)",
-                body=_ws_body,
                 groups=("generated", "completeness", "row_fused"),
                 severity=Severity.ADVISORY,
                 tables=(table_name,),

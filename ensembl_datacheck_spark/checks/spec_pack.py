@@ -217,8 +217,9 @@ class JsonValueSpec:
 
 def register_spec(spec, registry=None, fact_table: str = "sequences") -> None:
     """Compile a declarative spec into a registered check.  RowRuleSpec
-    entries targeting ``fact_table`` additionally declare fused row
-    predicates so the Runner folds them into its single row scan."""
+    entries targeting ``fact_table`` compile to fused row predicates
+    instead of a body, so the Runner folds them into its single row
+    scan."""
     kw = {"_registry": registry} if registry is not None else {}
     extra_kw = {}
 
@@ -278,7 +279,42 @@ def register_spec(spec, registry=None, fact_table: str = "sequences") -> None:
                 )
 
         tables = (spec.table,)
+    elif isinstance(spec, RowRuleSpec) and spec.table == fact_table:
+        # a rule over the fact table IS a fused row predicate: N
+        # registered rules cost one scan + one aggregation total, not a
+        # scan each (the scale answer to the reference's one-SQL-per-check
+        # model), and a standalone run_check runs the same fused path
+        from ensembl_datacheck_spark.operators.fused import RowPredicate
+
+        def row_predicates(ctx, scan, spec=spec, fact_table=fact_table):
+            runner_fact = getattr(ctx, "fact_table", fact_table)
+            if runner_fact != spec.table:
+                # a Runner with a different fact table must not
+                # evaluate this rule's SQL against the wrong scan
+                from ensembl_datacheck_spark.plans.runner import SkipCheck
+
+                raise SkipCheck(
+                    f"row rule targets '{spec.table}' but the fused "
+                    f"scan is '{runner_fact}'"
+                )
+            cond = F.expr(spec.violation_sql)
+            # force analysis NOW (schema access, no job) so an
+            # unresolvable expression fails THIS check inside the
+            # factory's containment, not the whole fused aggregation
+            scan.select(cond.cast("boolean").alias("__rule_check")).schema
+            return [
+                RowPredicate(
+                    f"{spec.name}_rule",
+                    cond,
+                    tuple(spec.diag_cols),
+                )
+            ], scan
+
+        body = row_predicates  # the check's one implementation
+        tables = (spec.table,)
+        extra_kw = {"row_predicates": True, "per_partition": True}
     elif isinstance(spec, RowRuleSpec):
+        # a rule over any other table: its body is its only path
 
         def body(ctx, spec=spec):
             t = ctx.table(spec.table)
@@ -291,39 +327,6 @@ def register_spec(spec, registry=None, fact_table: str = "sequences") -> None:
             )
 
         tables = (spec.table,)
-        if spec.table == fact_table:
-            # rules over the fact table join the Runner's FUSED row scan:
-            # N registered rules cost one scan + one aggregation total,
-            # not a scan each (the scale answer to the reference's
-            # one-SQL-per-check model)
-            from ensembl_datacheck_spark.operators.fused import RowPredicate
-
-            def row_predicates(ctx, scan, spec=spec, fact_table=fact_table):
-                runner_fact = getattr(ctx, "fact_table", fact_table)
-                if runner_fact != spec.table:
-                    # a Runner with a different fact table must not
-                    # evaluate this rule's SQL against the wrong scan
-                    from ensembl_datacheck_spark.plans.runner import SkipCheck
-
-                    raise SkipCheck(
-                        f"row rule targets '{spec.table}' but the fused "
-                        f"scan is '{runner_fact}'"
-                    )
-                cond = F.expr(spec.violation_sql)
-                # force analysis NOW (schema access, no job) so an
-                # unresolvable expression fails THIS check inside the
-                # factory's containment, not the whole fused aggregation
-                scan.select(cond.cast("boolean").alias("__rule_check")).schema
-                return [
-                    RowPredicate(
-                        f"{spec.name}_rule",
-                        cond,
-                        tuple(spec.diag_cols),
-                    )
-                ], scan
-
-            extra_kw["row_predicates"] = row_predicates
-            extra_kw["per_partition"] = True
     elif isinstance(spec, PrefixSpec):
 
         def body(ctx, spec=spec):

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -36,10 +36,6 @@ def token_min(col: Column) -> Column:
 
 def token_max(col: Column) -> Column:
     return F.array_max(col)
-
-
-def has_out_of_domain(col: Column, vocab_size: int) -> Column:
-    return F.exists(col, lambda t: (t < 0) | (t >= vocab_size))
 
 
 def token_arrays_equal(a: Column, b: Column) -> Column:
@@ -163,13 +159,6 @@ def _token_stats_fn(tokens: pd.Series) -> pd.DataFrame:
 # session — so the pandas UDFs are wrapped lazily at call time.
 
 
-def _stack_vectors(s: pd.Series) -> np.ndarray:
-    """Series of equal-length non-null float arrays → (n, dim) float64
-    matrix.  Callers with possibly-null rows go through
-    `_stack_vectors_masked`."""
-    return np.array(s.tolist(), dtype=np.float64)
-
-
 def _stack_vectors_masked(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     """(matrix of the VALID rows, boolean valid-row mask).  A null array
     row must yield a null result, not a ragged-ndarray ValueError that
@@ -232,7 +221,3 @@ def token_stats(col: Column) -> Column:
         _token_stats_fn, "struct<min:bigint,max:bigint,sum:bigint,n:int>"
     )(col)
 
-
-def token_stats_df(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """Attach the Arrow-tier fused stats struct as `tok_stats`."""
-    return df.withColumn("tok_stats", token_stats(F.col(tokens_col)))

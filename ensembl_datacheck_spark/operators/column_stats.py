@@ -76,25 +76,6 @@ def column_stats(
     return df.groupBy(key.alias("group_key")).agg(*exprs)
 
 
-def null_rate_violations(
-    stats_row: dict, max_null_rate: dict[str, float]
-) -> list[tuple[str, float, float]]:
-    """Evaluate per-column null-rate thresholds against a collected fused
-    stats row.  Returns (column, rate, threshold) for breaches."""
-    n = stats_row["n_rows"] or 1
-    out = []
-    for col, thresh in max_null_rate.items():
-        if f"{col}__n_null" not in stats_row:
-            raise KeyError(
-                f"no null-count for column {col!r} in stats row — "
-                "misspelled column in the threshold config?"
-            )
-        rate = (stats_row[f"{col}__n_null"] or 0) / n
-        if rate > thresh:
-            out.append((col, rate, thresh))
-    return out
-
-
 def token_domain_predicate(
     tokens_col: str = "tokens", vocab_size: int = 50257
 ) -> Column:

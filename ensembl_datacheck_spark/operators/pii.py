@@ -37,23 +37,6 @@ DEFAULT_PATTERNS: dict[str, str] = {
 }
 
 
-def redact_expr(
-    col: Column,
-    patterns: dict[str, str] | None = None,
-    token_fmt: str = "[{name}]",
-) -> Column:
-    """Chained regexp_replace over `patterns` in insertion order.
-
-    Each category is replaced by ``token_fmt.format(name=NAME)`` (the
-    upper-cased category), e.g. ``[EMAIL]``.  Pure codegen expression —
-    compose freely inside a select.
-    """
-    out = col
-    for name, pat in (patterns or DEFAULT_PATTERNS).items():
-        out = F.regexp_replace(out, pat, token_fmt.format(name=name.upper()))
-    return out
-
-
 def staged_exprs(
     col: Column,
     patterns: dict[str, str] | None = None,

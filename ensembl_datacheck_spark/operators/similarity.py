@@ -398,16 +398,6 @@ def embedding_near_duplicates(
     )
 
 
-def quantize_vec(vec, scale: int = 1_000_000):
-    """floor(x * scale) as array<long> — IEEE-deterministic across engines
-    (float32 parquet values widen to the same double everywhere), so
-    integer distance math on the quantized vectors is exactly
-    reproducible by any SQL oracle."""
-    return F.transform(
-        vec, lambda x: F.floor(x.cast("double") * F.lit(float(scale))).cast("long")
-    )
-
-
 def l2_topk_exact(
     corpus: DataFrame,
     queries: DataFrame,

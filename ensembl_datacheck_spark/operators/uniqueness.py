@@ -42,13 +42,6 @@ def duplicate_rows(df: DataFrame, key_cols: list[str]) -> DataFrame:
     return df.join(dups, on=key_cols, how="left_semi")
 
 
-def exact_count_distinct(df: DataFrame, cols: list[str]) -> int:
-    """Exact global distinct count.  `distinct()` hash-partitions on all
-    columns (uniform for doc_id-like keys) with map-side partial dedup —
-    already the two-stage plan; final count is a metadata-sized action."""
-    return df.select(*cols).distinct().count()
-
-
 def exact_count_distinct_salted(
     df: DataFrame,
     group_col: str | Column,
@@ -84,9 +77,3 @@ def exact_count_distinct_salted(
     )
     return salted.groupBy("group_key").agg(F.sum("partial").alias("n_distinct"))
 
-
-def uniqueness_report(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """One-pass dup summary per key: (key..., count) for count>1, ordered
-    by multiplicity — the diagnostic the reference prints for stable-id
-    checks."""
-    return duplicate_keys(df, key_cols).orderBy(F.desc("count"), *key_cols)

@@ -89,10 +89,6 @@ class CheckpointStore:
         import threading
 
         self._write_lock = threading.Lock()
-        self._map_cache: (
-            tuple[str, tuple[dict[str, set[int]], dict[int, int]]] | None
-        ) = None
-        self._append_gen = 0  # bumps on append; guards the cache fill
 
     def load(self) -> DataFrame | None:
         if not self.catalog.exists(self.table):
@@ -124,38 +120,23 @@ class CheckpointStore:
         )
         with self._write_lock:
             self.catalog.append_atomic(df, self.table)
-            self._map_cache = None
-            self._append_gen += 1
 
-    def completed_partitions(self, check_name: str, lineage: str) -> set[int]:
-        """Partition ids whose **latest** checkpoint for this check is
-        'ok' under the current input lineage — these are skipped on
-        resume.  The latest-wins semantics mirror the reference's history
-        merge (Manager.pm:460-470: newer run overwrites)."""
-        return self.completed_map(lineage).get(check_name, set())
-
-    def completed_map(self, lineage: str) -> dict[str, set[int]]:
-        """{check_name: completed partition ids} for the whole lineage in
-        ONE load + aggregation, memoized until the next append — a
-        per-check query would re-read the checkpoint table once per
-        check per run (× fleet targets)."""
-        return self._lineage_state(lineage)[0]
-
-    def bucket_rows(self, lineage: str) -> dict[int, int]:
-        """{partition_id: n_rows} recorded under the lineage, from the
-        same load as ``completed_map`` (partition -1 carries the table
-        total).  Every check's row for one bucket records the same count,
-        and a lineage pins the input, so a resume fills its checkpoint
-        rows' ``n_rows`` from here instead of recounting the fact
-        table."""
-        return self._lineage_state(lineage)[1]
-
-    def _lineage_state(
+    def completed_map(
         self, lineage: str
     ) -> tuple[dict[str, set[int]], dict[int, int]]:
-        if self._map_cache is not None and self._map_cache[0] == lineage:
-            return self._map_cache[1]
-        gen = self._append_gen
+        """The lineage's checkpoint state in ONE load + aggregation,
+        uncached (another store on the same warehouse may append at any
+        time; the Runner keeps one load per run):
+
+        * ``{check_name: completed partition ids}`` — partitions whose
+          **latest** checkpoint for the check is 'ok', skipped on resume
+          (latest wins, as the reference's history merge,
+          Manager.pm:460-470: newer run overwrites);
+        * ``{partition_id: n_rows}`` recorded under the lineage (partition
+          -1 carries the table total).  Every check's row for one bucket
+          records the same count, and a lineage pins the input, so a
+          resume fills its checkpoint rows' ``n_rows`` from here instead
+          of recounting the fact table."""
         df = self.load()
         if df is None:
             return {}, {}
@@ -179,11 +160,6 @@ class CheckpointStore:
                 done.setdefault(r["check_name"], set()).add(r["partition_id"])
             if r["n_rows"] is not None:
                 rows[r["partition_id"]] = r["n_rows"]
-        with self._write_lock:
-            # don't publish a map computed from pre-append data: a
-            # concurrent append invalidated it mid-computation
-            if gen == self._append_gen:
-                self._map_cache = (lineage, (done, rows))
         return done, rows
 
 

@@ -1,11 +1,10 @@
-"""Report sinks: JSON results (failures-only default, --passed,
-by-check / by-table pivots — ConvertTapToJson.pm:40-48,144-149
-semantics), TAP-style text (information parity, SURVEY.md §7.4), and the
-run-summary rollup (DataCheckSummary.pm:36-109)."""
+"""Report sinks: JSON results (failures-only default, --passed —
+ConvertTapToJson.pm:40-48,144-149 semantics), TAP-style text
+(information parity, SURVEY.md §7.4), and the run-summary rollup
+(DataCheckSummary.pm:36-109)."""
 
 from __future__ import annotations
 
-import json
 from pathlib import Path
 
 from ensembl_datacheck_spark.verdict import RunSummary, Status
@@ -34,11 +33,6 @@ def summary_line(summary: RunSummary) -> str:
         f"{summary.n_failed} failed, {summary.n_skipped} skipped "
         f"in {summary.wall_runtime:.1f}s"
     )
-
-
-def by_check_report(summary: RunSummary) -> dict:
-    """Keyed by check name (ConvertTapToJson 'by datacheck')."""
-    return {r.check_name: r.to_dict() for r in summary.results}
 
 
 def failed_names(summary: RunSummary) -> list[str]:

@@ -9,10 +9,11 @@ Execution model:
 * fan-out: every run uses one thread pool of ``parallelism`` lanes
   (default ``lanes(spark)``), the analogue of eHive's
   ``analysis_capacity`` throttle (DbDataChecks_conf.pm:214-295);
-* **row-fused checks**: checks declaring row-level predicates are executed
-  together in a single scan (operators/fused.py) — per-(bucket, assertion)
-  counts in one aggregation + one violating-row projection — instead of
-  one scan per check as the reference does;
+* **row-fused checks**: a check declared as a row-predicate factory is
+  executed with its siblings in a single scan (operators/fused.py) —
+  per-(bucket, assertion) counts in one aggregation + one violating-row
+  projection — instead of one scan per check as the reference does; a
+  standalone ``run_check`` of such a check runs the same fused path;
 * funnel: verdicts united into a RunSummary, violations appended to the
   violations table, checkpoint rows appended once per run
   (DataCheckFunnel.pm:35-91 semantics: single merged write);
@@ -258,7 +259,19 @@ def run_check(
     local_table: Callable[[str, DataFrame], DataFrame] | None = None,
 ) -> tuple[CheckResult, list[DataFrame]]:
     """Programmatic single-check entry point (reference §3.3:
-    `My::Check->new(...)->run()`)."""
+    `My::Check->new(...)->run()`).  A row-fused check runs the Runner's
+    own fused scan over its first table, so its verdict and violation
+    rows are the ones a full run gives."""
+    if spec.row_predicates is not None:
+        violations: list[DataFrame] = []
+        summary = Runner(
+            spark, tables,
+            fact_table=spec.tables[0] if spec.tables else "sequences",
+            bucket_key=bucket_key, n_buckets=n_buckets, config=config,
+            shared=shared,
+        ).run([spec], write_checkpoints=False,
+              violations_sink=violations.append, parallelism=1)
+        return summary.results[0], violations
     ctx = CheckContext(
         spark, tables, config, check_name=spec.name,
         bucket_key=bucket_key, n_buckets=n_buckets, shared=shared,
@@ -332,8 +345,8 @@ class Runner:
         self.shared = shared if shared is not None else SharedComputations()
         self._owns_shared = shared is None
         # per-run state, set up by run(): a memo for the dimension tables'
-        # local relations (_table_for) and the lineage's checkpoint map
-        # (_pending_buckets), and the rows per bucket the fused scan
+        # local relations (_table_for) and the lineage's checkpoint state
+        # (_checkpoints), and the rows per bucket the fused scan
         # counted (partition -1 = the whole table)
         self._run_memo: SharedComputations | None = None
         self._scanned_rows: dict[int, int] = {}
@@ -370,7 +383,7 @@ class Runner:
             return {}
         known = dict(self._scanned_rows)
         if not need <= known.keys() and self.store is not None:
-            for b, n in self.store.bucket_rows(self.lineage).items():
+            for b, n in self._checkpoints()[1].items():
                 known.setdefault(b, n)
         if -1 not in known and known.keys() >= set(range(self.n_buckets)):
             known[-1] = sum(known[b] for b in range(self.n_buckets))
@@ -388,18 +401,23 @@ class Runner:
         counted[-1] = sum(counted.values())
         return counted
 
+    def _checkpoints(self) -> tuple[dict[str, set[int]], dict[int, int]]:
+        """The lineage's completed map and rows per bucket
+        (CheckpointStore.completed_map), loaded once per run: one load
+        serves every check, and the run's own append comes after every
+        check has read it."""
+
+        def load() -> tuple[dict[str, set[int]], dict[int, int]]:
+            with job_group(self.spark, "__checkpoint__"):
+                return self.store.completed_map(self.lineage)
+
+        return self._run_memo.get("checkpoints", load)
+
     def _pending_buckets(self, spec: CheckSpec) -> list[int] | None:
         """None = all pending.  Empty list = nothing to do (skip)."""
         if self.store is None or spec.force:
             return None
-
-        def load() -> dict[str, set[int]]:
-            with job_group(self.spark, "__checkpoint__"):
-                return self.store.completed_map(self.lineage)
-
-        # one checkpoint-table load per run serves every check; the run's
-        # own append comes after every check has read it
-        done = self._run_memo.get("checkpoints", load).get(spec.name, set())
+        done = self._checkpoints()[0].get(spec.name, set())
         if not done:
             return None
         all_b = set(range(self.n_buckets)) if spec.per_partition else {-1}

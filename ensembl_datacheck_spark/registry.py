@@ -30,7 +30,8 @@ from ensembl_datacheck_spark.verdict import Severity
 
 @dataclass(frozen=True)
 class CheckSpec:
-    """Declarative check: metadata + a body that builds DataFrame plans.
+    """Declarative check: metadata + ONE implementation, either a body
+    that builds DataFrame plans or a row-predicate factory.
 
     ``body(ctx)`` receives a CheckContext (tables, config, assertion
     recorder) and issues assertions; it never returns a value.  The
@@ -41,7 +42,7 @@ class CheckSpec:
 
     name: str
     description: str
-    body: Callable[..., None]
+    body: Callable[..., None] | None = None
     groups: tuple[str, ...] = ()
     severity: Severity = Severity.CRITICAL
     tables: tuple[str, ...] = ()
@@ -54,10 +55,12 @@ class CheckSpec:
     # unless their group is requested (Manager.pm:246-269 group
     # selection; per-check skip gates DbCheck.pm:740-765).
     on_demand: bool = False
-    # Optional row-level predicate factory `(ctx, scan_df) -> (predicates,
-    # scan_df)` letting the Runner fuse this check into a shared single
-    # scan with its siblings (operators/fused.py).  The factory may extend
-    # the scan (e.g. broadcast-join a dimension flag).
+    # Row-level predicate factory `(ctx, scan_df) -> (predicates, scan_df)`,
+    # the alternative to ``body``: the Runner fuses this check into a
+    # shared single scan with its siblings (operators/fused.py), and a
+    # standalone run_check runs that same path.  The scan is the check's
+    # FIRST table.  The factory may extend the scan (e.g. broadcast-join
+    # a dimension flag).
     row_predicates: Callable | None = None
     # Shared-computation kinds this check's body consumes via ctx.shared
     # (e.g. "fact_profile", the one-scan profile cube).  Declared
@@ -65,15 +68,23 @@ class CheckSpec:
     # does not read it (every consumer joins the shared build).
     shared_uses: tuple[str, ...] = ()
 
+    def __post_init__(self) -> None:
+        if (self.body is None) == (self.row_predicates is None):
+            raise ValueError(
+                f"check {self.name!r} needs exactly one of body and "
+                "row_predicates"
+            )
+
     def index_entry(self) -> dict[str, Any]:
         # same shape as the reference index.json entries
+        impl = self.body or self.row_predicates
         return {
             "name": self.name,
             "description": self.description,
             "groups": sorted(self.groups),
             "datacheck_type": self.severity.value,
             "tables": sorted(self.tables),
-            "package_name": f"{self.body.__module__}.{self.body.__qualname__}",
+            "package_name": f"{impl.__module__}.{impl.__qualname__}",
             "on_demand": self.on_demand,
         }
 
@@ -177,24 +188,26 @@ def register(
     per_partition: bool = False,
     force: bool = False,
     on_demand: bool = False,
-    row_predicates: Callable | None = None,
+    row_predicates: bool = False,
     shared_uses: tuple[str, ...] = (),
     _registry: Registry | None = None,
 ) -> Callable:
-    """Decorator registering a check body as a CheckSpec."""
+    """Decorator registering a check body as a CheckSpec; with
+    ``row_predicates=True`` the decorated function is the check's
+    row-predicate factory instead."""
 
     def deco(fn: Callable) -> Callable:
         spec = CheckSpec(
             name=name,
             description=description,
-            body=fn,
+            body=None if row_predicates else fn,
             groups=tuple(groups),
             severity=Severity(severity),
             tables=tuple(tables),
             per_partition=per_partition,
             force=force,
             on_demand=on_demand,
-            row_predicates=row_predicates,
+            row_predicates=fn if row_predicates else None,
             shared_uses=tuple(shared_uses),
         )
         # NOT `_registry or registry`: an empty Registry has len 0 and is

@@ -367,20 +367,6 @@ def register_database(
         )
 
 
-def register_sf_database(spark: SparkSession, db: str, sf_dir: str) -> None:
-    """Register every driver test table under a namespace (one call per
-    'database' the way the reference points one DBAdaptor per db)."""
-    register_database(
-        spark, db,
-        {t: os.path.join(sf_dir, f"{t}.parquet") for t in SF_TABLES},
-    )
-
-
-def register_sf_views(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_sf_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -256,6 +256,81 @@ def test_skip_with_reason(spark, seq_fixture):
     assert result.skip_reason == "not applicable here"
 
 
+def _fused_verdicts(results, violations, names):
+    """Per check: status, counts, each assertion's verdict fields, and
+    the violation rows as (assertion, partition_id, key)."""
+    rows: dict[str, list] = {n: [] for n in names}
+    for v in violations:
+        for r in v.collect():
+            if r["check_name"] in rows:
+                rows[r["check_name"]].append(
+                    (r["assertion"], r["partition_id"], r["key"]))
+    return {
+        r.check_name: (
+            r.status, r.n_violations, r.n_rows_checked,
+            [(a.name, a.status, a.expected, a.got, a.diag)
+             for a in r.assertions],
+            sorted(rows[r.check_name]),
+        )
+        for r in results if r.check_name in rows
+    }
+
+
+def _generated_case(spark):
+    from ensembl_datacheck_spark.checks.generated import generated_check_specs
+
+    df = spark.createDataFrame(
+        [(1, "ok value", "fine"), (2, "NULL", "fine"), (3, "  ", "fine"),
+         (4, "trailing ", "fine"), (5, "tab\there", "fine")],
+        "id int, a string, b string",
+    )
+    specs = generated_check_specs("t", df)
+    return specs, specs, {"t": df}, {
+        "fact_table": "t", "bucket_key": "id", "n_buckets": 4}
+
+
+@pytest.mark.parametrize("case", ["registry", "generated"])
+def test_standalone_row_fused_check_matches_full_run(spark, seq_fixture,
+                                                     case):
+    """A standalone run_check of a row-fused check returns the verdict
+    and violation rows a full Runner.run gives it: every registered
+    row-fused check on the dirty fixture, and both generated sweeps on
+    their own table."""
+    if case == "registry":
+        fused = [s for s in registry if s.row_predicates is not None]
+        suite = registry.default_suite()
+        assert set(fused) <= set(suite)
+        tables = _tables(seq_fixture)
+        kw = {"n_buckets": 16}
+    else:
+        fused, suite, tables, kw = _generated_case(spark)
+    names = {s.name for s in fused}
+    assert names
+    full_viols: list = []
+    full = Runner(spark, tables, **kw).run(
+        suite, write_checkpoints=False, violations_sink=full_viols.append)
+    want = _fused_verdicts(full.results, full_viols, names)
+    kw.pop("fact_table", None)
+    got: dict = {}
+    for s in fused:
+        res, viols = run_check(s, spark, tables, **kw)
+        got.update(_fused_verdicts([res], viols, {s.name}))
+    assert got == want
+    assert any(v[0] == Status.FAIL for v in want.values())
+
+
+@pytest.mark.parametrize("impl", ["both", "neither"])
+def test_check_spec_needs_exactly_one_implementation(impl):
+    from ensembl_datacheck_spark.registry import CheckSpec
+
+    def fn(ctx, *scan):
+        return None
+
+    kw = ({"body": fn, "row_predicates": fn} if impl == "both" else {})
+    with pytest.raises(ValueError, match="exactly one of body"):
+        CheckSpec(name="Twice", description="", **kw)
+
+
 def test_checkpoint_resume(spark, seq_fixture, tmp_path):
     """Kill-and-resume semantics (FIXTURES.md §4): after a clean run,
     rerunning skips everything; after input change, lineage mismatch
@@ -463,6 +538,27 @@ def test_concurrent_checkpoint_appends_from_separate_stores(spark, tmp_path):
     assert cp.count() == 16
     assert {r["check_name"] for r in cp.select("check_name").distinct().collect()} \
         == {"Check0", "Check1"}
+
+
+def test_completed_map_sees_another_stores_append(spark, tmp_path):
+    """A store outlives runs, so its completed map must not be cached:
+    after store B records 'fail' for a bucket store A has read as 'ok',
+    A's next completed_map no longer lists that bucket."""
+    import time as _t
+
+    from ensembl_datacheck_spark.plans.checkpoint import CheckpointRow
+
+    cat = Catalog(spark, tmp_path / "wh")
+    a, b = CheckpointStore(cat), CheckpointStore(cat)
+    now = _t.time()
+    a.append([CheckpointRow("run_1", "C", p, "ok", now, now + 1, 10, 0, "L")
+              for p in range(4)])
+    done, rows = a.completed_map("L")
+    assert done == {"C": {0, 1, 2, 3}}
+    assert rows == {p: 10 for p in range(4)}
+    b.append([CheckpointRow("run_2", "C", 2, "fail", now + 2, now + 3, 10, 1,
+                            "L")])
+    assert a.completed_map("L")[0] == {"C": {0, 1, 3}}
 
 
 def test_cross_database_lookup_s25(spark, tmp_path):

@@ -425,7 +425,7 @@ RAISERS = [
     CheckSpec(name="BodyRaises", description="body raises", body=_explode,
               per_partition=True),
     CheckSpec(name="RowsRaise", description="row factory raises",
-              body=_explode, per_partition=True, row_predicates=_explode),
+              per_partition=True, row_predicates=_explode),
 ]
 
 
