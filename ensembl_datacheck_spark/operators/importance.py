@@ -36,16 +36,20 @@ pytest.
 Scale shape (the 100 TB story):
 
 * feature extraction is explode + map-side partial aggregation;
-* both distribution fits aggregate to ≤ n_buckets rows (8192 default)
-  — broadcast to the scoring join by construction;
-* scoring joins each gram occurrence against the broadcast
-  (feat → (t_cnt, r_cnt)) map: zero shuffle; the per-document
-  aggregation carries one row per document;
+* both distribution fits aggregate to ≤ n_buckets rows (8192 default),
+  so the scorer collects them to the driver once, when called;
+* the feature id is a dense key in [0, n_buckets): scoring reads each
+  gram occurrence's log-ratio from one array literal by direct index —
+  no join, zero shuffle; the per-document aggregation carries one row
+  per document;
 * top-k is TakeOrderedAndProject (per-partition partial top-k, no
   global sort); Gumbel keys are computed row-local.
 """
 
 from __future__ import annotations
+
+import json
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -230,6 +234,61 @@ def _resolve_width(
     return resolved
 
 
+def _log_ratios(
+    target_counts: DataFrame,
+    raw_counts: DataFrame,
+    n_buckets: int,
+    alpha: float,
+) -> tuple["np.ndarray", float]:
+    """The dense per-feature log-ratio ``x_f = ln(t_f + α) − ln(r_f + α)``
+    indexed by feature id, and the normalizer ``ln(R + αB) − ln(T + αB)``
+    (T, R = total target/raw feature observations): what both scorer
+    tiers look each gram up in.
+
+    Both profiles are at most B rows by contract, so ONE collect of
+    their side-tagged union reads them.  A malformed row raises instead
+    of scoring: a feature id outside [0, B) (metadata-less profiles,
+    e.g. parquet written by a non-Spark tool, evade ``_resolve_width``),
+    a duplicate id (a join would double its count), a NULL feat or
+    count, or a negative count (whose log is a NULL a sum drops)."""
+    import numpy as np
+
+    names = ("target_counts", "raw_counts")
+    rows = (
+        target_counts.select(F.lit(0), "feat", "count")
+        .union(raw_counts.select(F.lit(1), "feat", "count"))
+        .collect()
+    )
+    counts = np.zeros((2, n_buckets), dtype=np.float64)
+    seen = np.zeros((2, n_buckets), dtype=bool)
+    for side, f, c in rows:
+        name = names[side]
+        if f is None or c is None:
+            raise ValueError(
+                f"{name} has a NULL feat or count (feat={f}, count={c})")
+        if not 0 <= f < n_buckets:
+            raise ValueError(
+                f"{name} contains feature id {f} outside [0, {n_buckets}) "
+                "— the profile was hashed with a different n_buckets than "
+                "this call; rebuild it or pass the matching n_buckets"
+            )
+        if seen[side, f]:
+            raise ValueError(
+                f"{name} lists feature id {f} twice — a profile holds one "
+                "count per feature")
+        if not c >= 0:
+            raise ValueError(
+                f"{name} has count {c} for feature id {f} — counts must "
+                "be non-negative")
+        seen[side, f] = True
+        counts[side, f] = c
+    t_total, r_total = counts.sum(axis=1)
+    x = np.log(counts[0] + alpha) - np.log(counts[1] + alpha)
+    norm = math.log(r_total + alpha * n_buckets) - math.log(
+        t_total + alpha * n_buckets)
+    return x, norm
+
+
 def _score_feature_stream(
     items: DataFrame,
     target_counts: DataFrame,
@@ -241,65 +300,27 @@ def _score_feature_stream(
     """THE smoothed log-likelihood-ratio scorer over an occurrence
     stream: ``items`` rows are (id, feat), each counted once.
 
-    Metadata-less profiles (e.g. parquet written by a non-Spark tool)
-    evade ``_resolve_width``, and an id ≥ n_buckets would still join and
-    skew the normalizer silently, so the totals aggregate also takes
-    each profile's max(feat) and raises on an out-of-range id — in the
-    same broadcast, so no extra Spark job."""
-    t = F.broadcast(
-        target_counts.select(
-            F.col("feat").alias("__t_feat"), F.col("count").alias("__t_cnt")
-        )
-    )
-    r = F.broadcast(
-        raw_counts.select(
-            F.col("feat").alias("__r_feat"), F.col("count").alias("__r_cnt")
-        )
-    )
-
-    def total(counts: DataFrame, name: str, alias: str) -> DataFrame:
-        top = F.max("feat")
-        return counts.agg(
-            F.when(
-                top >= n_buckets,
-                F.raise_error(F.concat(
-                    F.lit(f"{name} contains feature id "),
-                    top.cast("string"),
-                    F.lit(f" outside [0, {n_buckets}) — the profile was "
-                          "hashed with a different n_buckets than this "
-                          "call; rebuild it or pass the matching "
-                          "n_buckets"),
-                )),
-            ).otherwise(
-                F.coalesce(F.sum("count"), F.lit(0)).cast("double")
-            ).alias(alias)
-        )
-
-    totals = F.broadcast(
-        total(target_counts, "target_counts", "__T").crossJoin(
-            total(raw_counts, "raw_counts", "__R")
-        )
-    )
-    j = items.join(
-        t, items["feat"] == t["__t_feat"], "left_outer"
-    ).join(r, items["feat"] == r["__r_feat"], "left_outer")
-    per_item = (
-        F.log(F.coalesce(F.col("__t_cnt"), F.lit(0)).cast("double") + alpha)
-        - F.log(F.coalesce(F.col("__r_cnt"), F.lit(0)).cast("double") + alpha)
-    )
-    agg = j.groupBy(id_col).agg(
+    Runs ONE collect when called, of both profiles (``_log_ratios``;
+    under AQE their two aggregations run as map-stage jobs before it).
+    The per-feature log-ratios then ride in the plan as one array
+    literal, and each occurrence reads its term by direct index,
+    ``element_at(x, feat + 1)`` — the feature id is already a dense key
+    in [0, B), so no join, no hash probe and no totals cross-join.  The
+    returned frame is lazy."""
+    x, norm = _log_ratios(target_counts, raw_counts, n_buckets, alpha)
+    # one plan value: from_json over a string literal folds to an array
+    # literal, where F.lit(list) would cost one py4j call per element
+    lut = F.from_json(F.lit(json.dumps(x.tolist())), "array<double>")
+    agg = items.groupBy(id_col).agg(
         F.count(F.lit(1)).alias("n_feat_obs"),
-        F.sum(per_item).alias("__s"),
+        F.sum(F.element_at(lut, (F.col("feat") + 1).cast("int"))).alias(
+            "__s"),
     )
-    b = float(n_buckets)
-    norm = F.log(F.col("__R") + alpha * b) - F.log(F.col("__T") + alpha * b)
-    return (
-        agg.crossJoin(totals)
-        .withColumn(
-            "log_weight",
-            F.col("__s") + F.col("n_feat_obs").cast("double") * norm,
-        )
-        .select(id_col, "n_feat_obs", "log_weight")
+    return agg.select(
+        id_col,
+        "n_feat_obs",
+        (F.col("__s") + F.col("n_feat_obs").cast("double") * norm).alias(
+            "log_weight"),
     )
 
 
@@ -347,13 +368,16 @@ def importance_log_weights_from_docs(
     ``lw = Σ_f c_f·[ln(t_f + α) − ln(r_f + α)] + n·[ln(R + αB) − ln(T + αB)]``
     — the log likelihood ratio of the document's hashed-feature bag
     under the smoothed target vs raw models (B = n_buckets; T, R =
-    total target/raw feature observations, re-aggregated lazily so the
-    whole score is ONE plan).  The per-document feature bag is never
-    materialized: Σ_f c_f·x_f = Σ_occurrences x_f, so each gram
-    OCCURRENCE joins the two broadcast profiles and the per-document
-    aggregate folds straight from the exploded stream — map-side
-    partial aggregation in the explode stage, ONE shuffle row per
-    document (the lm_cross_entropy shape).  Measured end-to-end at 1M
+    total target/raw feature observations).  The call collects both
+    profiles once and builds x_f and the normalizer on the driver
+    (``_log_ratios``); the returned frame is lazy.  The
+    per-document feature bag is never materialized: Σ_f c_f·x_f =
+    Σ_occurrences x_f, so each gram OCCURRENCE reads x_f by feature id
+    and the per-document aggregate folds straight from the exploded
+    stream — map-side partial aggregation in the explode stage, ONE
+    shuffle row per document (the lm_cross_entropy shape).  A malformed
+    profile row (an id outside [0, B), a duplicate id, a NULL, a
+    negative count) raises ValueError here.  Measured end-to-end at 1M
     docs (BENCH/LM_1M.md): a per-document bag path 814 s → fused
     portable 336 s → fused fast tier 99 s (``hash_tier="fast"``:
     numeric xxhash64, no gram strings, no md5) — 8.2×; the fast fused
@@ -402,10 +426,10 @@ def importance_log_weights_arrow(
     own row, stateless per micro-batch — the lm_cross_entropy_arrow
     design point).
 
-    Both profiles are collected to the driver ONCE — bounded by
-    n_buckets (8192 default), far below even the LM-vocab bound that
-    justifies the join tiers' broadcasts — and ride in the task closure
-    as dense numpy arrays indexed by feature id, so scoring is pure
+    Both profiles are collected to the driver ONCE, by the same
+    ``_log_ratios`` the fused scorer uses — bounded by n_buckets (8192
+    default) — and the per-feature log-ratios ride in the task closure
+    as a dense numpy array indexed by feature id, so scoring is pure
     vectorized lookups (no searchsorted needed: feature ids are already
     in [0, B)).  Gram hashing matches the PORTABLE tier (md5 of the
     gram string, via hashlib) — numpy-verified against the JVM paths in
@@ -425,39 +449,12 @@ def importance_log_weights_arrow(
         n_buckets, {"target_counts": target_counts,
                     "raw_counts": raw_counts}
     )
-    import numpy as np
-
-    def dense(prof, name: str) -> tuple["np.ndarray", float]:
-        arr = np.zeros(n_buckets, dtype=np.float64)
-        for row in prof.collect():  # <= n_buckets rows by construction
-            f = int(row["feat"])
-            if not 0 <= f < n_buckets:
-                # metadata-less profiles (e.g. read back from parquet,
-                # which drops column metadata) can evade _resolve_width;
-                # surface the width-contract violation intelligibly
-                # instead of a bare numpy IndexError
-                raise ValueError(
-                    f"{name} contains feature id {f} outside "
-                    f"[0, {n_buckets}) — the profile was hashed with a "
-                    "different n_buckets than this call; rebuild it or "
-                    "pass the matching n_buckets"
-                )
-            arr[f] = float(row["count"])
-        return arr, float(arr.sum())
-
-    t_arr, t_total = dense(target_counts, "target_counts")
-    r_arr, r_total = dense(raw_counts, "raw_counts")
-    ln_t = np.log(t_arr + alpha)
-    ln_r = np.log(r_arr + alpha)
-    import math
-
-    norm = math.log(r_total + alpha * n_buckets) - math.log(
-        t_total + alpha * n_buckets
-    )
+    x, norm = _log_ratios(target_counts, raw_counts, n_buckets, alpha)
 
     def score(batches):
         import hashlib
 
+        import numpy as np
         import pandas as pd
 
         def feats(cell):
@@ -487,9 +484,7 @@ def importance_log_weights_arrow(
                     continue
                 ids.append(doc_id)
                 ns.append(f.size)
-                lws.append(
-                    float((ln_t[f] - ln_r[f]).sum()) + f.size * norm
-                )
+                lws.append(float(x[f].sum()) + f.size * norm)
             if ids:
                 yield pd.DataFrame(
                     {id_col: ids, "n_feat_obs": ns, "log_weight": lws}

@@ -7,6 +7,7 @@ construction: python scripts/dump_plans.py
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -35,8 +36,14 @@ def plan_str(df, mode="formatted"):
     return df._jdf.queryExecution().explainString(jmode)
 
 
+# a plan-literal array of many numbers, e.g. DSIR's per-feature log-ratios
+_LONG_ARRAY = re.compile(r"\[(?:-?[\d.]+(?:E-?\d+)?,){16,}-?[\d.]+(?:E-?\d+)?\]")
+
+
 def section(title, commentary, df, mode="formatted"):
-    return f"## {title}\n\n{commentary}\n\n```\n{plan_str(df, mode).strip()}\n```\n"
+    plan = _LONG_ARRAY.sub(lambda m: f"[<{m.group().count(',') + 1} doubles>]",
+                           plan_str(df, mode).strip())
+    return f"## {title}\n\n{commentary}\n\n```\n{plan}\n```\n"
 
 
 def main():
@@ -422,25 +429,36 @@ def main():
         "simple",
     ))
 
+    # the scorer runs its profile collect when called, so its input must
+    # execute: crc32 as a BIGINT (lm_docs' INT cast overflows under ANSI)
+    dsir_docs = docs.select(
+        "doc_id",
+        F.transform(
+            F.split(F.lower(F.trim(F.col("text"))), r"\s+"), F.crc32,
+        ).alias("tokens"),
+    )
     out.append(section(
-        "DSIR importance top-k: two broadcast profiles, partial top-k",
+        "DSIR importance top-k: direct-indexed log-ratios, partial top-k",
         "Fused DSIR selection (operators/importance.py): both "
-        "distribution fits aggregate to <= n_buckets rows and join the "
-        "exploded gram-occurrence stream as BroadcastHashJoins (plus a "
-        "1-row totals broadcast, whose max(feat) width guard rides in "
-        "the same aggregate); the per-document weight aggregate "
-        "partially aggregates in the same stage as the explode, so the "
-        "only doc-sized Exchange carries one row per document; the "
+        "distribution fits aggregate to <= n_buckets rows, and the "
+        "scorer collects them once when called, checks them and "
+        "builds the normalizer and the per-feature log-ratios, ONE "
+        "array literal (printed below as its length).  Each exploded "
+        "gram occurrence reads its term by direct index, "
+        "element_at(x, feat + 1): no join, no broadcast, no totals "
+        "cross-join.  The per-document weight aggregate partially "
+        "aggregates in the same stage as the explode, so the only "
+        "Exchange carries one row per document; the "
         "final top-k compiles to TakeOrderedAndProject — per-partition "
         "partial top-k, a driver-side merge of k rows per partition, "
         "and NO global sort.  This is the plan that survives scoring "
         "10^12 documents against a curated target slice.",
         IMP.select_top_k(
             IMP.importance_log_weights_from_docs(
-                lm_docs,
+                dsir_docs,
                 IMP.feature_counts_from_docs(
-                    lm_docs.filter(F.col("doc_id") < 200), n_buckets=4096),
-                IMP.feature_counts_from_docs(lm_docs, n_buckets=4096),
+                    dsir_docs.filter(F.col("doc_id") < 200), n_buckets=4096),
+                IMP.feature_counts_from_docs(dsir_docs, n_buckets=4096),
             ),
             60,
         ),

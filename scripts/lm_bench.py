@@ -15,6 +15,7 @@ Usage: python scripts/lm_bench.py [n_rows] [runs] [tiers]
 
 from __future__ import annotations
 
+import os
 import pathlib
 import sys
 import tempfile
@@ -56,8 +57,12 @@ def main() -> None:
         sys.exit(f"unknown tier(s) {sorted(unknown)}; choose from "
                  "jvm,arrow,dsir — failing fast BEFORE the minutes of "
                  "synth generation")
-    spark = get_spark("lm-bench", cores=32, shuffle_partitions=32,
-                      driver_memory="48g")
+    # sized from the host: every core, at most a quarter of its RAM
+    cores = os.cpu_count() or 1
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    driver_memory = f"{max(1, int(ram_gb // 4))}g"
+    spark = get_spark("lm-bench", cores=cores, shuffle_partitions=cores,
+                      driver_memory=driver_memory)
     path = tempfile.mkdtemp(prefix="lm_bench_") + "/seq"
     synth.gen_sequences(
         spark, n_rows, n_partitions=64, inject_violations=False
@@ -66,7 +71,8 @@ def main() -> None:
     n_tokens = seq.selectExpr("sum(size(tokens)) s").collect()[0]["s"]
 
     load0, timed_out = wait_for_quiet()
-    print(f"rows={n_rows} tokens={n_tokens} "
+    print(f"rows={n_rows} tokens={n_tokens} nproc={cores} "
+          f"driver_memory={driver_memory} "
           f"loadavg_start={load0:.2f} gate_timed_out={timed_out}")
 
     fit = None
@@ -97,8 +103,9 @@ def main() -> None:
             print(f"arrow_rowlocal: {walls['arrow_rowlocal'][-1]:.2f}s")
 
         # DSIR end-to-end, FUSED path: profiles straight from token
-        # arrays (shuffle bounded by B), occurrence-level scoring (one
-        # shuffle row per doc), top-1000.  A per-document feature-bag
+        # arrays (shuffle bounded by B) and collected once, occurrence-
+        # level scoring by direct index (one shuffle row per doc),
+        # top-1000.  A per-document feature-bag
         # path, measured once at 813.91 s on this input (its (id, feat)
         # shuffle is ~10^9 rows), lost to it and was deleted; the
         # fused tier below is the only JVM scorer.  Target slice
@@ -128,8 +135,8 @@ def main() -> None:
         best = min(ws)
         print(
             f"BEST {tier}: {best:.2f}s  "
-            f"({n_tokens / best / 1e6:.0f}M tokens/s, "
-            f"{n_rows / best / 1e3:.0f}k docs/s)"
+            f"({n_tokens / best / 1e6:.1f}M tokens/s, "
+            f"{n_rows / best / 1e3:.1f}k docs/s)"
         )
     print(f"loadavg_end={loadavg_1m():.2f}")
 

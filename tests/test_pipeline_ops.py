@@ -2174,10 +2174,9 @@ class TestDsirFusedPath:
         """A profile exported to parquet by a non-Spark writer (pandas
         here) comes back without width metadata, so only the data can
         show it was hashed wider than this call's n_buckets: the
-        scorer's totals aggregate must fail on it with the width-contract
-        message instead of scoring the stray ids."""
-        from pyspark.errors import SparkRuntimeException
-
+        scorer's profile collect must fail on it with the width-contract
+        message when called, before any scoring plan exists, instead of
+        scoring the stray ids."""
         from ensembl_datacheck_spark.operators import importance as IMP
 
         path = str(tmp_path / "wide_profile.parquet")
@@ -2190,13 +2189,12 @@ class TestDsirFusedPath:
         narrow = IMP.feature_counts_from_docs(fused_docs, n_buckets=64)
         for target, raw, name in ((wide, narrow, "target_counts"),
                                   (narrow, wide, "raw_counts")):
-            w = IMP.importance_log_weights_from_docs(
-                fused_docs, target, raw, n_buckets=64
-            )
-            with pytest.raises(SparkRuntimeException,
+            with pytest.raises(ValueError,
                                match=f"{name} contains feature "
                                r"id \d+ outside \[0, 64\)"):
-                w.collect()
+                IMP.importance_log_weights_from_docs(
+                    fused_docs, target, raw, n_buckets=64
+                )
 
     def test_fused_plan_one_doc_shuffle_no_bag_aggregate(
         self, spark, tmp_path
@@ -2207,7 +2205,8 @@ class TestDsirFusedPath:
         contrast): the fused scorer's only document-data Exchange
         hashes on doc_id alone (one row per doc), never (doc_id, feat)
         — the per-document bag shuffle that cost ~10^9 rows at 1M docs
-        (BENCH/LM_1M.md)."""
+        (BENCH/LM_1M.md).  The plan holds no join: each gram occurrence
+        reads its log-ratio from one array literal by feature id."""
         import re
 
         from tests.test_plans import plan_str
@@ -2232,8 +2231,30 @@ class TestDsirFusedPath:
         assert re.search(r"hashpartitioning\(doc_id#\d+L?, \d+\)", plan), (
             "fused path shuffles exactly one row per document"
         )
-        assert plan.count("BroadcastHashJoin") >= 2
-        assert "SortMergeJoin" not in plan
+        assert not re.search(r"Join|CartesianProduct", plan), (
+            "fused path looks each feature up by index, with no join"
+        )
+
+    def test_dsir_topk_documents_job_budget(self, spark):
+        """The driver query launches at most 6 Spark jobs (status-store
+        probe): the profiles' aggregations and their one collect, then
+        the scoring plan's document shuffle and top-k."""
+        from tests.test_oracle_parity import SF_DIR as sf
+        from tests.test_runner_jobs import _jobs_since, _last_job
+        from ensembl_datacheck_spark.plans.entry_queries import QUERIES, _t
+
+        _t(spark, sf)  # the session's one parquet footer read, not the query's
+        sc = spark.sparkContext
+        group = "dsir-topk-job-budget"
+        last = _last_job(spark)
+        sc.setJobGroup(group, "dsir_topk_documents job budget")
+        try:
+            rows = QUERIES["dsir_topk_documents"](spark, sf).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 60
+        jobs = [j for j, g in _jobs_since(spark, last).items() if g == group]
+        assert 0 < len(jobs) <= 6, len(jobs)
 
 
 class TestDsirFastHashTier:
@@ -2454,6 +2475,33 @@ class TestDsirArrowTierAndStream:
         # the matching gram set scores
         out = dsir_weights_stream(stream, uni, uni, use_bigrams=False)
         assert out.isStreaming
+
+
+@pytest.mark.parametrize("tier", ["fused", "arrow"])
+@pytest.mark.parametrize("rows,match", [
+    ([(3, 2), (3, 2)], "feature id 3 twice"),
+    ([(None, 2)], "NULL feat or count"),
+    ([(3, None)], "NULL feat or count"),
+    ([(3, -5)], "count -5 for feature id 3"),
+], ids=["duplicate_feat", "null_feat", "null_count", "negative_count"])
+def test_dsir_malformed_profile_rows_raise(spark, tier, rows, match):
+    """A profile row neither tier can score raises when the scorer is
+    called.  A duplicate feat would double that feature's count in a
+    join and be overwritten in a dense array; a negative count's log is
+    a NULL that a sum drops."""
+    from ensembl_datacheck_spark.operators import importance as IMP
+
+    scorer = {"fused": IMP.importance_log_weights_from_docs,
+              "arrow": IMP.importance_log_weights_arrow}[tier]
+    df = spark.createDataFrame(
+        [(1, [3, 4, 5])], "doc_id long, tokens array<long>"
+    )
+    good = spark.createDataFrame([(3, 4), (9, 1)], "feat long, count long")
+    bad = spark.createDataFrame(rows, "feat long, count long")
+    for target, raw, name in ((bad, good, "target_counts"),
+                              (good, bad, "raw_counts")):
+        with pytest.raises(ValueError, match=f"{name} .*{match}"):
+            scorer(df, target, raw, n_buckets=64)
 
 
 def test_dsir_arrow_dense_rejects_out_of_width_profiles(spark):
