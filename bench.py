@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: every core of the host, at most
+that many) and prints ONE JSON line:
 
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ...,
@@ -17,9 +18,7 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -47,40 +46,42 @@ HEADLINE = [
 ]
 
 
-from benchlib import loadavg_1m, wait_for_quiet  # noqa: E402  (shared gate)
+from benchlib import (  # noqa: E402  (the shared bench harness)
+    best_of,
+    consume,
+    host_spark,
+    loadavg_1m,
+    scratch_dir,
+    suite_fixture,
+    wait_for_quiet,
+)
+
+# best-of-3 after one untimed warm-up, for the queries and the suite:
+# the host's load bursts last 20-60 s (BENCH/BASELINE.md, round 5), so
+# one burst can straddle both sweeps of a 2-pass run
+PASSES = 3
 
 
-def _consume(df):
-    """Execute the full plan without driver materialization cost for wide
-    results: noop datasource when available, else count."""
-    try:
-        df.write.format("noop").mode("overwrite").save()
-    except Exception:
-        df.count()
-
-
-def bench_queries(spark, sf_dir: str, passes: int = 3) -> dict[str, float]:
-    """Best-of-``passes`` wall per headline query (same steady-state
-    protocol as the sequences suite below and scripts/scaling_bench.py).
-    A single-pass protocol let one transient ambient-load spike
-    permanently inflate whichever query it hit — the committed BENCH_r03
-    and BENCH_r04 artifacts both showed phantom regressions that cost a
-    full investigation each (BENCH/BASELINE.md rounds 3-4).  Three passes,
-    not two: the host's load bursts last 20-60 s (round-5 interleaved
-    probes, BENCH/BASELINE.md), so one burst can straddle both sweeps of
-    a 2-pass run; a third sweep (~25 s) makes a fully-contaminated
-    minimum require three independent hits."""
+def bench_queries(spark, sf_dir: str) -> dict[str, float]:
+    """Best-of-``PASSES`` wall per headline query.  A pass sweeps every
+    query once, so a transient load spike inflates one sample of the
+    queries it hits, not their minimum (single-pass BENCH_r03/r04 showed
+    phantom regressions, BENCH/BASELINE.md rounds 3-4).  The untimed
+    warm-up sweep brings up the JIT, the Arrow python worker pool and
+    the sf tables' parquet footers."""
     from ensembl_datacheck_spark.plans.entry_queries import QUERIES
 
-    times: dict[str, float] = {}
-    for _ in range(passes):
+    walls: dict[str, list[float]] = {name: [] for name in HEADLINE}
+
+    def sweep():
         for name in HEADLINE:
-            fn = QUERIES[name]
             t0 = time.perf_counter()
-            _consume(fn(spark, sf_dir))
-            wall = round(time.perf_counter() - t0, 3)
-            times[name] = min(times.get(name, wall), wall)
-    return times
+            consume(QUERIES[name](spark, sf_dir))
+            walls[name].append(time.perf_counter() - t0)
+
+    best_of(sweep, PASSES)
+    # walls[name][0] is the warm-up sweep's
+    return {name: round(min(w[1:]), 3) for name, w in walls.items()}
 
 
 def bench_sequences_suite(spark, n_rows: int, n_buckets: int = 64):
@@ -89,89 +90,38 @@ def bench_sequences_suite(spark, n_rows: int, n_buckets: int = 64):
     import ensembl_datacheck_spark.checks  # noqa: F401
     from ensembl_datacheck_spark import registry
     from ensembl_datacheck_spark.plans.runner import Runner
-    from ensembl_datacheck_spark.sources import synth
 
-    tmp = tempfile.mkdtemp(prefix="dcheck_bench_")
-    try:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        seq = synth.gen_sequences(
-            spark, n_rows, n_partitions=n_part, median_tok=64, max_tok=1024
-        )
-        seq.write.mode("overwrite").parquet(f"{tmp}/sequences")
-        seq_disk = spark.read.parquet(f"{tmp}/sequences")
-        clean_stats = synth.gen_baseline_stats(
-            spark,
-            synth.gen_sequences(spark, n_rows, n_partitions=n_part,
-                                median_tok=64, max_tok=1024,
-                                inject_violations=False),
-        )
-        clean_stats.write.mode("overwrite").parquet(f"{tmp}/baseline")
-        # NOTE: no `meta` table here — the seqs/sec protocol times the
-        # sequences fact-table families (BENCH/BASELINE.md); the meta
-        # spec-pack checks skip in microseconds and are covered by
-        # pytest + the verify drive
-        tables = {
-            "sequences": seq_disk,
-            "sources": synth.gen_sources(spark),
-            "baseline_stats": spark.read.parquet(f"{tmp}/baseline"),
-        }
-        # one untimed warm-up (JIT + page cache), then best-of-3 timed
-        # runs — steady-state throughput with ambient-load spikes
-        # absorbed, same protocol as scripts/scaling_bench.py
-        Runner(spark, tables, n_buckets=n_buckets).run(
-            registry.default_suite(), write_checkpoints=False,
-        )
-        # the violation-injecting fixture makes exactly these checks fail
-        # (synth.py residues; scale-independent).  Pinning the set guards
-        # the headline against a regression that ERRORS checks out early:
-        # error-as-fail verdicts in milliseconds would otherwise collapse
-        # the wall and print an absurd seqs/sec as an "improvement".
-        expected_failed = {
-            "DocIdUnique", "SequencesCompleteness",
-            "SourceReferential", "TokenInvariants",
-        }
-        walls = []
-        for _ in range(3):
-            runner = Runner(spark, tables, n_buckets=n_buckets)
-            t0 = time.perf_counter()
-            summary = runner.run(registry.default_suite(),
-                                 write_checkpoints=False)
-            walls.append(time.perf_counter() - t0)
-            failed = {r.check_name for r in summary.results
-                      if r.status.value == "fail"}
-            assert failed == expected_failed, (
-                f"suite verdicts drifted: failed={sorted(failed)}"
-            )
-        wall = min(walls)
-        return round(n_rows / wall, 1), round(wall, 3), n_rows
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    tables = suite_fixture(spark, scratch_dir("dcheck_bench_"), n_rows, n_part)
+    # the violation-injecting fixture makes exactly these checks fail
+    # (synth.py residues; scale-independent).  Pinning the set guards
+    # the headline against a regression that ERRORS checks out early:
+    # error-as-fail verdicts in milliseconds would otherwise collapse
+    # the wall and print an absurd seqs/sec as an "improvement".
+    expected_failed = {
+        "DocIdUnique", "SequencesCompleteness",
+        "SourceReferential", "TokenInvariants",
+    }
+
+    def run():
+        summary = Runner(spark, tables, n_buckets=n_buckets).run(
+            registry.default_suite(), write_checkpoints=False)
+        failed = {r.check_name for r in summary.results
+                  if r.status.value == "fail"}
+        if failed != expected_failed:
+            raise RuntimeError(
+                f"suite verdicts drifted: failed={sorted(failed)}")
+
+    wall = min(best_of(run, PASSES))
+    return round(n_rows / wall, 1), round(wall, 3), n_rows
 
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    from ensembl_datacheck_spark.session import get_spark
-
-    spark = get_spark("dcheck-bench", cores=cpus,
-                      shuffle_partitions=max(cpus, 16), driver_memory="48g")
-
-    # untimed session warm-up: JVM JIT, codegen compiler, Arrow python
-    # worker pool, parquet footer cache — so the first timed query
-    # measures the query, not session bring-up
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # warm the Arrow python-worker pool too (mapInPandas/pandas_udf
-    # queries otherwise pay ~1-2 s of one-time worker fork + import in
-    # whichever headline query happens to run first)
-    import pandas as _pd
-
-    spark.range(10_000).mapInPandas(
-        lambda it: (b.assign(id=b["id"]) for b in it), "id long"
-    ).write.format("noop").mode("overwrite").save()
-    from ensembl_datacheck_spark.plans.entry_queries import _t
-
-    _consume(next(iter(_t(spark, sf_dir).values())).limit(1000))
+    env_cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    spark = host_spark("dcheck-bench", int(env_cpus) if env_cpus else None)
+    cpus = spark.sparkContext.defaultParallelism
 
     # load-gate the timed section: wait for a quiet 1-min loadavg and
     # record start/end loads in the JSON so a loaded run self-labels
@@ -195,14 +145,14 @@ def main():
         "cpus": cpus,
         "seqs_per_sec": seqs_per_sec,
         "seq_rows": n_rows,
-        # loadavg_end includes this bench's own 32-thread load (a 1-min
-        # loadavg cannot decay within the run) — read it as "how hot was
-        # the box overall", not as ambient load; ambient is gated at
-        # start and absorbed per-query by the best-of-3 protocol
+        # loadavg_end includes this bench's own `cpus`-thread load (a
+        # 1-min loadavg cannot decay within the run) — read it as "how
+        # hot was the box overall", not as ambient load; ambient is
+        # gated at start and absorbed per-query by the best-of-3 protocol
         "loadavg_start": round(loadavg_start, 2),
         "loadavg_end": round(loadavg_1m(), 2),
         "gate_timed_out": gate_timed_out,
-        "bench_passes": 3,
+        "bench_passes": PASSES,
     }
     print(json.dumps(out))
 

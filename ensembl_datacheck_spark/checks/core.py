@@ -247,24 +247,16 @@ def doc_id_unique(ctx):
             diag = diag[:10]
             break
     status = Status.OK if total == 0 else Status.FAIL
-    ctx.result.n_violations = total
-    ctx.result.assertions.append(
-        AssertionResult("doc_id_unique", status, expected=0, got=total, diag=diag)
+    # full violation rows stay lazy; only executed if a sink writes
+    viol = (
+        duplicate_rows(nonblank, ["doc_id"]).select("doc_id", "source", "n_tok")
+        if total else None
     )
-    if total:
-        # full violation rows stay lazy; only executed if a sink writes
-        viol = duplicate_rows(nonblank, ["doc_id"]).select(
-            "doc_id", "source", "n_tok"
-        )
-        ctx.violations.append(
-            viol.select(
-                F.lit(ctx.result.check_name).alias("check_name"),
-                F.lit("doc_id_unique").alias("assertion"),
-                bucket_col("doc_id", ctx.n_buckets).alias("partition_id"),
-                F.col("doc_id").cast("string").alias("key"),
-                F.to_json(F.struct("source", "n_tok")).alias("detail"),
-            )
-        )
+    ctx.record(
+        (AssertionResult("doc_id_unique", status, expected=0, got=total,
+                         diag=diag), viol),
+        key_col="doc_id",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -56,8 +56,6 @@ from ensembl_datacheck_spark.verdict import (
     Status,
 )
 
-VIOLATIONS_SCHEMA = "check_name string, assertion string, partition_id int, key string, detail string"
-
 
 def lanes(spark: SparkSession) -> int:
     """Default number of checks in flight: a quarter of the session's
@@ -607,23 +605,13 @@ class Runner:
             local_table=self._table_for,
         )
         if self.store is None or not write_checkpoints:
-            # no checkpoint rows will be written — skip the extra Spark
-            # job that exists only to build them (re-executing violation
-            # plans for per-bucket counts)
             return result, violations, []
+        # a check attributes its violations to buckets only through
+        # partition_violations; an unattributed failure poisons every
+        # pending bucket (the -1 key)
         viol_counts: dict[int, int] = {}
         if result.partition_violations:
             viol_counts = dict(result.partition_violations)
-        elif spec.per_partition and violations:
-            union = violations[0]
-            for v in violations[1:]:
-                union = union.unionByName(v)
-            viol_counts = {
-                r["partition_id"]: r["n"]
-                for r in union.groupBy("partition_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
         elif result.n_violations:
             viol_counts = {-1: result.n_violations}
         cps = self._checkpoint_rows(spec, result, viol_counts, pending, started)

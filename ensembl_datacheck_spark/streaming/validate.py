@@ -12,7 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ensembl_datacheck_spark.operators.fused import RowPredicate
+from ensembl_datacheck_spark.operators.fused import (
+    RowPredicate,
+    fused_violation_rows,
+)
 
 
 def streaming_violations(
@@ -20,23 +23,14 @@ def streaming_violations(
     predicates: list[RowPredicate],
     key_col: str,
 ) -> DataFrame:
-    """Tag violating rows on a stream — same semantics as the batch
-    fused_violation_rows (map-only; safe for append-mode sinks)."""
+    """Tag violating rows on a stream: the batch fused_violation_rows,
+    projected to (assertion, key); map-only, so safe for append-mode
+    sinks."""
     if not predicates:
         raise ValueError("streaming_violations needs at least one predicate")
-    tags = F.array_compact(
-        F.array(*[F.when(p.predicate, F.lit(p.assertion)) for p in predicates])
-    )
-    any_pred = predicates[0].predicate
-    for p in predicates[1:]:
-        any_pred = any_pred | p.predicate
-    return (
-        stream.filter(any_pred)
-        .select(
-            F.explode(tags).alias("assertion"),
-            F.col(key_col).cast("string").alias("key"),
-        )
-    )
+    return fused_violation_rows(
+        stream, predicates, F.lit(-1), key_col
+    ).select("assertion", "key")
 
 
 def dedup_stream(

@@ -23,7 +23,11 @@ fused scan's (~3.1x) while narrow_only lands near linear, and the
 suite_full - suite_no_tok wall delta accounts for most of the fused
 scan's cost.  Decoded bandwidth is derived from sum(n_tok) * 4 bytes.
 
-Usage: python scripts/decode_attrib.py --data /tmp/dcheck_scaling_r2 \
+Each (job, level) runs in a fresh subprocess
+(``decode_attrib.py --worker <job> <data> <cores>``) over the fixture
+``scripts/scaling_bench.py`` generates.
+
+Usage: python scripts/decode_attrib.py [--data /tmp/dcheck_scaling_data] \
            [--levels 2 8] [--json-out /tmp/attrib.json]
 """
 
@@ -31,113 +35,95 @@ from __future__ import annotations
 
 import argparse
 import json
-import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
-from benchlib import wait_for_quiet  # noqa: E402  (shared load gate)
+from benchlib import (  # noqa: E402  (the shared bench harness)
+    best_of,
+    host_spark,
+    run_worker,
+    suite_fixture,
+    wait_for_quiet,
+)
 
-WORKER = r"""
-import json, sys, time
-sys.path.insert(0, "{repo}")
-from pyspark.sql import functions as F
-from ensembl_datacheck_spark.session import get_spark
-from ensembl_datacheck_spark.plans.runner import Runner
-from ensembl_datacheck_spark.registry import registry
-from ensembl_datacheck_spark.sources import synth
-import ensembl_datacheck_spark.checks  # register
-
-cores = {cores}
-job = "{job}"
-spark = get_spark("decode-attrib", cores=cores,
-                  shuffle_partitions=max(cores, 16), driver_memory="48g")
-seq = spark.read.parquet("{data}/sequences")
-tables = {{
-    "sequences": seq,
-    "sources": synth.gen_sources(spark),
-    "baseline_stats": spark.read.parquet("{data}/baseline"),
-}}
-
-TOKEN_CHECKS = {{"SequencesCompleteness", "TokenInvariants"}}
-
-def run_once():
-    if job == "suite_full":
-        specs = registry.default_suite()
-        Runner(spark, tables, n_buckets=64).run(
-            specs, write_checkpoints=False, parallelism=4)
-    elif job == "suite_no_tok":
-        specs = [s for s in registry.default_suite()
-                 if s.name not in TOKEN_CHECKS]
-        Runner(spark, tables, n_buckets=64).run(
-            specs, write_checkpoints=False, parallelism=4)
-    elif job == "decode_only":
-        seq.agg(F.sum(F.size("tokens")).alias("total_tok"),
-                F.sum(F.array_min("tokens")).alias("s_min"),
-                F.sum(F.array_max("tokens")).alias("s_max")).collect()
-    elif job == "narrow_only":
-        seq.agg(F.count(F.lit(1)).alias("n"),
-                F.sum("n_tok").alias("total_tok"),
-                F.min("doc_id").alias("d0"),
-                F.max("source").alias("s1")).collect()
-    else:
-        raise SystemExit(f"unknown job {{job}}")
-
-# warm-up run (JIT + page cache), then best-of-2 steady-state walls
-run_once()
-walls = []
-for _ in range(2):
-    t0 = time.perf_counter()
-    run_once()
-    walls.append(time.perf_counter() - t0)
-
-total_tok = seq.agg(F.sum("n_tok")).collect()[0][0]
-out = {{"job": job, "cores": cores, "wall": min(walls), "walls": walls,
-        "rows": seq.count(), "total_tok": int(total_tok)}}
-if job == "suite_no_tok":
-    # prove column pruning: rebuild the exact fused-counts plan from the
-    # no-token predicate set and assert `tokens` is absent from the
-    # parquet ReadSchema
-    import io, contextlib
-    from ensembl_datacheck_spark.plans.runner import Runner as _R
-    from ensembl_datacheck_spark.plans.runner import CheckContext
-    from ensembl_datacheck_spark.operators.fused import fused_violation_counts
-    runner = _R(spark, tables, n_buckets=64)
-    ctx = CheckContext(spark, tables, runner.config,
-                       bucket_key=runner.bucket_key, n_buckets=64,
-                       fact_table=runner.fact_table)
-    preds, scan2 = [], seq
-    for s in registry.default_suite():
-        if s.row_predicates is not None and s.name not in TOKEN_CHECKS:
-            ps, scan2 = s.row_predicates(ctx, scan2)
-            preds.extend(ps)
-    plans = io.StringIO()
-    with contextlib.redirect_stdout(plans):
-        fused_violation_counts(scan2, preds, runner._bucket()).explain("formatted")
-    txt = plans.getvalue()
-    out["tokens_pruned"] = "tokens" not in txt
-    out["n_fused_preds_no_tok"] = len(preds)
-print("RESULT " + json.dumps(out))
-"""
+JOBS = ("suite_full", "suite_no_tok", "decode_only", "narrow_only")
+TOKEN_CHECKS = {"SequencesCompleteness", "TokenInvariants"}
 
 
-def run_job(data: str, cores: int, job: str) -> dict:
-    code = WORKER.format(repo=REPO, cores=cores, data=data, job=job)
-    out = subprocess.run([sys.executable, "-c", code], check=True,
-                         capture_output=True, text=True)
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT "):
-            return json.loads(line[len("RESULT "):])
-    raise SystemExit(f"no RESULT line for {job}@{cores}:\n{out.stdout[-2000:]}")
+def worker(job: str, data: str, cores: str) -> None:
+    """Time one job at ``cores`` in this fresh JVM, run as
+    ``decode_attrib.py --worker <job> <data> <cores>``; prints one JSON
+    line."""
+    from pyspark.sql import functions as F
+
+    import ensembl_datacheck_spark.checks  # noqa: F401  (register)
+    from ensembl_datacheck_spark.plans.runner import Runner
+    from ensembl_datacheck_spark.registry import registry
+
+    cores = int(cores)
+    spark = host_spark("decode-attrib", cores=cores)
+    tables = suite_fixture(spark, data)
+    seq = tables["sequences"]
+
+    def run_once():
+        if job == "suite_full":
+            Runner(spark, tables, n_buckets=64).run(
+                registry.default_suite(), write_checkpoints=False,
+                parallelism=4)
+        elif job == "suite_no_tok":
+            specs = [s for s in registry.default_suite()
+                     if s.name not in TOKEN_CHECKS]
+            Runner(spark, tables, n_buckets=64).run(
+                specs, write_checkpoints=False, parallelism=4)
+        elif job == "decode_only":
+            seq.agg(F.sum(F.size("tokens")).alias("total_tok"),
+                    F.sum(F.array_min("tokens")).alias("s_min"),
+                    F.sum(F.array_max("tokens")).alias("s_max")).collect()
+        else:  # narrow_only
+            seq.agg(F.count(F.lit(1)).alias("n"),
+                    F.sum("n_tok").alias("total_tok"),
+                    F.min("doc_id").alias("d0"),
+                    F.max("source").alias("s1")).collect()
+
+    # warm-up run (JIT + page cache), then best-of-2 steady-state walls
+    walls = best_of(run_once, 2)
+    total_tok = seq.agg(F.sum("n_tok")).collect()[0][0]
+    out = {"job": job, "cores": cores, "wall": min(walls), "walls": walls,
+           "rows": seq.count(), "total_tok": int(total_tok)}
+    if job == "suite_no_tok":
+        # prove column pruning: rebuild the exact fused-counts plan from
+        # the no-token predicate set and assert `tokens` is absent from
+        # the parquet ReadSchema
+        from ensembl_datacheck_spark.operators.fused import (
+            fused_violation_counts,
+        )
+        from ensembl_datacheck_spark.plans.runner import CheckContext
+
+        runner = Runner(spark, tables, n_buckets=64)
+        ctx = CheckContext(spark, tables, runner.config,
+                           bucket_key=runner.bucket_key, n_buckets=64,
+                           fact_table=runner.fact_table)
+        preds, scan2 = [], seq
+        for s in registry.default_suite():
+            if s.row_predicates is not None and s.name not in TOKEN_CHECKS:
+                ps, scan2 = s.row_predicates(ctx, scan2)
+                preds.extend(ps)
+        plan = fused_violation_counts(scan2, preds, runner._bucket())
+        txt = plan._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode
+            .fromString("formatted"))
+        out["tokens_pruned"] = "tokens" not in txt
+        out["n_fused_preds_no_tok"] = len(preds)
+    print(json.dumps(out))
 
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--data", default="/tmp/dcheck_scaling_r2")
+    ap.add_argument("--data", default="/tmp/dcheck_scaling_data")
     ap.add_argument("--levels", type=int, nargs=2, default=[2, 8])
-    ap.add_argument("--jobs", nargs="*", default=[
-        "suite_full", "suite_no_tok", "decode_only", "narrow_only"])
+    ap.add_argument("--jobs", nargs="*", choices=JOBS, default=list(JOBS))
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args()
 
@@ -146,7 +132,7 @@ def main():
         results[job] = {}
         for cores in args.levels:
             loadavg_start, gate_timed_out = wait_for_quiet()
-            r = run_job(args.data, cores, job)
+            r = run_worker(__file__, job, args.data, cores)
             r.update(loadavg_start=loadavg_start,
                      gate_timed_out=gate_timed_out)
             results[job][cores] = r
@@ -176,4 +162,7 @@ def main():
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--worker"]:
+        worker(*sys.argv[2:])
+    else:
+        main()

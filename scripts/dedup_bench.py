@@ -19,8 +19,7 @@ load): warm-up job first, then each tier runs twice; the headline
 `wall_sec` is the COLD first wall (the warm second wall rides the
 signature cache and would hide plan regressions), both are reported.
 
-Usage: python scripts/dedup_bench.py [--rows 1000000] [--cores 32]
-                                     [--json-out PATH]
+Usage: python scripts/dedup_bench.py [--rows 1000000] [--json-out PATH]
 """
 
 from __future__ import annotations
@@ -33,6 +32,12 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+from benchlib import (  # noqa: E402  (the shared bench harness)
+    host_spark,
+    scratch_dir,
+    to_parquet,
+    wait_for_quiet,
+)
 
 
 def gen_docs(spark, n_rows: int, n_partitions: int, salt: str = "",
@@ -83,7 +88,6 @@ def headline(walls: list[float]) -> float:
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=1_000_000)
-    ap.add_argument("--cores", type=int, default=32)
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args()
 
@@ -91,23 +95,18 @@ def main():
 
     from ensembl_datacheck_spark.operators import dedup
     from ensembl_datacheck_spark.operators.clusters import connected_components
-    from ensembl_datacheck_spark.session import get_spark
 
-    spark = get_spark("dedup-bench", cores=args.cores,
-                      shuffle_partitions=max(args.cores, 16),
-                      driver_memory="48g")
-    n_part = max(args.cores * 4, 64)
-    import tempfile
-
-    tmp = tempfile.mkdtemp(prefix="dedup_bench_")
-    gen_docs(spark, args.rows, n_part).write.mode("overwrite").parquet(
-        f"{tmp}/docs"
-    )
-    docs = spark.read.parquet(f"{tmp}/docs")
+    spark = host_spark("dedup-bench")
+    cores = spark.sparkContext.defaultParallelism
+    docs = to_parquet(spark, gen_docs(spark, args.rows, max(cores * 4, 64)),
+                      scratch_dir("dedup_bench_") + "/docs")
     expected_pairs = args.rows // 100  # (i, i+1) for i % 100 == 0
 
     # warm-up: JIT, python workers, page cache
     docs.selectExpr("sum(length(text))").collect()
+    load, timed_out = wait_for_quiet()  # the shared quiet-host gate
+    print(f"loadavg_start={load:.2f} gate_timed_out={timed_out}",
+          file=sys.stderr)
 
     results: dict[str, dict] = {}
 
@@ -294,7 +293,7 @@ def main():
         file=sys.stderr,
     )
 
-    out = json.dumps({"rows": args.rows, "cores": args.cores, **results})
+    out = json.dumps({"rows": args.rows, "cores": cores, **results})
     if args.json_out:
         Path(args.json_out).write_text(out)
     print(out)

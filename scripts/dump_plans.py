@@ -327,13 +327,15 @@ def main():
 
     from ensembl_datacheck_spark.operators.corpus import chunk_sequences
 
+    # the one token frame of the sections below: crc32 word ids folded
+    # into INT range, so the frame also executes under ANSI mode (a plain
+    # INT cast of crc32 overflows; the DSIR scorer runs its input)
     toks = docs.select(
         "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("words"),
-    ).select(
-        "doc_id",
+        "source",
         F.transform(
-            "words", lambda w: F.crc32(w).cast("int")
+            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
+            lambda w: F.pmod(F.crc32(w), F.lit(2**31 - 1)).cast("int"),
         ).alias("tokens"),
     )
     out.append(section(
@@ -343,7 +345,8 @@ def main():
         "emission is strictly linear in bytes scanned and the output "
         "inherits the input partitioning (downstream writers need no "
         "re-shuffle).",
-        chunk_sequences(toks, "doc_id", "tokens", chunk_len=16, stride=12),
+        chunk_sequences(toks.drop("source"), "doc_id", "tokens",
+                        chunk_len=16, stride=12),
         "simple",
     ))
 
@@ -389,30 +392,13 @@ def main():
         "tests/test_pipeline_ops.py::TestSourceUnigramDivergence).  "
         "Everything downstream is bounded by vocab x n_sources, with "
         "the per-source and corpus totals broadcast back.",
-        source_unigram_divergence(
-            docs.select(
-                "source",
-                F.transform(
-                    F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                    lambda w: F.crc32(w).cast("int"),
-                ).alias("tokens"),
-            ),
-            "source",
-            "tokens",
-        ),
+        source_unigram_divergence(toks, "source", "tokens"),
         "simple",
     ))
 
     from ensembl_datacheck_spark.operators import importance as IMP
     from ensembl_datacheck_spark.operators import lm as LM
 
-    lm_docs = docs.select(
-        "doc_id",
-        F.transform(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-            lambda w: F.crc32(w).cast("int"),
-        ).alias("tokens"),
-    )
     out.append(section(
         "LM cross-entropy scoring: broadcast vocab, one shuffle row per doc",
         "The CCNet-style perplexity filter (operators/lm.py): the LM "
@@ -424,19 +410,11 @@ def main():
         "only doc-sized Exchange carries one row per document, never "
         "per token.  No SortMergeJoin anywhere; at 10^12 rows the "
         "token stream never materializes past the map side.",
-        LM.lm_cross_entropy(lm_docs, LM.fit_unigram_lm(
-            lm_docs.filter(F.col("doc_id") % 2 == 0))),
+        LM.lm_cross_entropy(toks, LM.fit_unigram_lm(
+            toks.filter(F.col("doc_id") % 2 == 0))),
         "simple",
     ))
 
-    # the scorer runs its profile collect when called, so its input must
-    # execute: crc32 as a BIGINT (lm_docs' INT cast overflows under ANSI)
-    dsir_docs = docs.select(
-        "doc_id",
-        F.transform(
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+"), F.crc32,
-        ).alias("tokens"),
-    )
     out.append(section(
         "DSIR importance top-k: direct-indexed log-ratios, partial top-k",
         "Fused DSIR selection (operators/importance.py): both "
@@ -455,10 +433,10 @@ def main():
         "10^12 documents against a curated target slice.",
         IMP.select_top_k(
             IMP.importance_log_weights_from_docs(
-                dsir_docs,
+                toks,
                 IMP.feature_counts_from_docs(
-                    dsir_docs.filter(F.col("doc_id") < 200), n_buckets=4096),
-                IMP.feature_counts_from_docs(dsir_docs, n_buckets=4096),
+                    toks.filter(F.col("doc_id") < 200), n_buckets=4096),
+                IMP.feature_counts_from_docs(toks, n_buckets=4096),
             ),
             60,
         ),

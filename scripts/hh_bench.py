@@ -24,16 +24,20 @@ from __future__ import annotations
 import math
 import pathlib
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from benchlib import loadavg_1m, wait_for_quiet  # noqa: E402
+from benchlib import (  # noqa: E402  (the shared bench harness)
+    host_spark,
+    loadavg_1m,
+    scratch_dir,
+    to_parquet,
+    wait_for_quiet,
+)
 from ensembl_datacheck_spark.operators.skew import heavy_hitter_keys  # noqa: E402
-from ensembl_datacheck_spark.session import get_spark  # noqa: E402
 
 PHI = 0.001
 N_HOT = 10
@@ -42,35 +46,24 @@ N_HOT = 10
 def main() -> None:
     n_obs = int(sys.argv[1]) if len(sys.argv) > 1 else 20_000_000
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    spark = get_spark("hh-bench", cores=32, shuffle_partitions=64,
-                      driver_memory="48g")
+    spark = host_spark("hh-bench")
     # 10 hot keys at share 2*PHI each (planted positives); the rest of
     # the mass is ~unique background keys (the regime where the full
     # histogram's shuffle is ~the corpus)
     hot_every = int(1 / (2 * PHI * N_HOT))  # 1 obs in 50 is a hot key
-    path = tempfile.mkdtemp(prefix="hh_bench_") + "/keys"
-    spark.range(n_obs).selectExpr(
+    keys = to_parquet(spark, spark.range(n_obs).selectExpr(
         f"CASE WHEN id % {hot_every} < {N_HOT} "
         f"THEN concat('hot_', id % {hot_every}) "
         "ELSE concat('t_', id) END AS key"
-    ).write.parquet(path)
-    keys = spark.read.parquet(path)
+    ), scratch_dir("hh_bench_") + "/keys")
     total = keys.count()
     expected = {
         (f"hot_{i}", n_obs // hot_every) for i in range(N_HOT)
     }
 
-    def run_bucket():
-        return {
-            (r.key, r.cnt)
-            for r in heavy_hitter_keys(keys, "key", PHI, method="bucket").collect()
-        }
-
-    def run_mg():
-        return {
-            (r.key, r.cnt)
-            for r in heavy_hitter_keys(keys, "key", PHI, method="mg").collect()
-        }
+    def recount(method):
+        return {(r.key, r.cnt) for r in heavy_hitter_keys(
+            keys, "key", PHI, method=method).collect()}
 
     def run_histogram():
         return {
@@ -81,7 +74,8 @@ def main() -> None:
             .collect()
         }
 
-    plans = {"bucket_recount": run_bucket, "mg_recount": run_mg,
+    plans = {"bucket_recount": lambda: recount("bucket"),
+             "mg_recount": lambda: recount("mg"),
              "full_histogram": run_histogram}
     walls: dict[str, list[float]] = {k: [] for k in plans}
     for fn in plans.values():  # warm-up (JIT + page cache), untimed

@@ -15,35 +15,23 @@ Usage: python scripts/lm_bench.py [n_rows] [runs] [tiers]
 
 from __future__ import annotations
 
-import os
 import pathlib
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from benchlib import loadavg_1m, wait_for_quiet  # noqa: E402
-
+from benchlib import (  # noqa: E402  (the shared bench harness)
+    consume,
+    host_spark,
+    loadavg_1m,
+    scratch_dir,
+    to_parquet,
+    wait_for_quiet,
+)
 from ensembl_datacheck_spark.operators import importance as IMP  # noqa: E402
 from ensembl_datacheck_spark.operators import lm as LM  # noqa: E402
-from ensembl_datacheck_spark.session import get_spark  # noqa: E402
 from ensembl_datacheck_spark.sources import synth  # noqa: E402
-
-
-def consume(df) -> None:
-    """noop sink: forces every output column (count() would let Catalyst
-    prune the ce/ppl projections out of the join tier).  The fallback
-    SHOUTS — a silently-degraded wall with pruned projections must
-    never be hand-pasted into BENCH/LM_1M.md as a normal datum."""
-    try:
-        df.write.format("noop").mode("overwrite").save()
-    except Exception as exc:  # noqa: BLE001
-        print(
-            f"WARNING: noop sink unavailable ({exc!r}); this wall used "
-            "count() — projections may be PRUNED, do not record it"
-        )
-        df.count()
 
 
 def main() -> None:
@@ -57,31 +45,23 @@ def main() -> None:
         sys.exit(f"unknown tier(s) {sorted(unknown)}; choose from "
                  "jvm,arrow,dsir — failing fast BEFORE the minutes of "
                  "synth generation")
-    # sized from the host: every core, at most a quarter of its RAM
-    cores = os.cpu_count() or 1
-    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
-    driver_memory = f"{max(1, int(ram_gb // 4))}g"
-    spark = get_spark("lm-bench", cores=cores, shuffle_partitions=cores,
-                      driver_memory=driver_memory)
-    path = tempfile.mkdtemp(prefix="lm_bench_") + "/seq"
-    synth.gen_sequences(
+    spark = host_spark("lm-bench")
+    tmp = scratch_dir("lm_bench_")
+    seq = to_parquet(spark, synth.gen_sequences(
         spark, n_rows, n_partitions=64, inject_violations=False
-    ).write.parquet(path)
-    seq = spark.read.parquet(path).select("doc_id", "tokens")
+    ), f"{tmp}/seq").select("doc_id", "tokens")
     n_tokens = seq.selectExpr("sum(size(tokens)) s").collect()[0]["s"]
 
     load0, timed_out = wait_for_quiet()
-    print(f"rows={n_rows} tokens={n_tokens} nproc={cores} "
-          f"driver_memory={driver_memory} "
+    print(f"rows={n_rows} tokens={n_tokens} "
+          f"nproc={spark.sparkContext.defaultParallelism} driver_memory="
+          f"{spark.sparkContext.getConf().get('spark.driver.memory')} "
           f"loadavg_start={load0:.2f} gate_timed_out={timed_out}")
 
     fit = None
     if tiers & {"jvm", "arrow"}:  # only the LM tiers read the fit
         t0 = time.monotonic()
-        fit = LM.fit_unigram_lm(seq)
-        fit_path = tempfile.mkdtemp(prefix="lm_bench_") + "/vocab"
-        fit.write.parquet(fit_path)
-        fit = spark.read.parquet(fit_path)
+        fit = to_parquet(spark, LM.fit_unigram_lm(seq), f"{tmp}/vocab")
         vocab_size = fit.count()
         print(f"LM fit (unigram_profile + persist): "
               f"{time.monotonic() - t0:.2f}s ({vocab_size} vocab rows)")

@@ -5,10 +5,11 @@ two parallelism levels — local[N] and local[4N] — and report throughput
 at both plus efficiency = (T_4N / T_N) / 4 (target ≥ 0.8).
 
 Each level runs in a **fresh subprocess** (a JVM cannot change its
-master), reading the same pre-generated parquet.  Results are written to
+master: ``scaling_bench.py --worker level <data> <cores>``), reading the
+same pre-generated parquet.  Results are written to
 BENCH/BASELINE.md.
 
-Usage: python scripts/scaling_bench.py [--rows 4000000] [--n 8]
+Usage: python scripts/scaling_bench.py [--rows 4000000] [--n nproc/4]
 """
 
 from __future__ import annotations
@@ -16,126 +17,93 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
-from benchlib import wait_for_quiet  # noqa: E402  (shared load gate)
-
-WORKER = r"""
-import json, sys, time
-sys.path.insert(0, "{repo}")
-from ensembl_datacheck_spark.session import get_spark
-from ensembl_datacheck_spark.plans.runner import Runner
-from ensembl_datacheck_spark import registry
-from ensembl_datacheck_spark.sources import synth
-import ensembl_datacheck_spark.checks  # register
-
-cores = {cores}
-spark = get_spark("scaling-bench", cores=cores,
-                  shuffle_partitions=max(cores, 16), driver_memory="48g")
-seq = spark.read.parquet("{data}/sequences")
-tables = {{
-    "sequences": seq,
-    "sources": synth.gen_sources(spark),
-    "baseline_stats": spark.read.parquet("{data}/baseline"),
-}}
-# warm-up: one full untimed suite run (JIT-compiles the generated code,
-# faults the input into page cache) — we measure steady-state throughput,
-# the regime a long-running validation job lives in
-Runner(spark, tables, n_buckets=64).run(registry.default_suite(), write_checkpoints=False,
-                                        parallelism=4)
-# the shared gate helper, not a re-inlined /proc read: benchlib exists
-# precisely because duplicated copies of this code diverged once
-from benchlib import loadavg_1m as _load1
-
-load_start = _load1()
-walls, best_summary = [], None
-for _ in range(2):
-    t0 = time.perf_counter()
-    summary = Runner(spark, tables, n_buckets=64).run(
-        registry.default_suite(), write_checkpoints=False, parallelism=4)
-    w = time.perf_counter() - t0
-    if not walls or w < min(walls):
-        best_summary = summary
-    walls.append(w)
-wall = min(walls)
-n_failed = best_summary.n_failed
-# per-check wall attribution from the BEST run: the round-5 quantile
-# regression needed a same-data A/B bisect to attribute because only the
-# total wall was reported — the slowest-checks list makes the next one a
-# one-read diagnosis.  Per-check runtimes overlap in the runner's thread
-# pool (their sum exceeds the wall); read them as relative weight.  Checks
-# fused into one shared scan report identical (started, runtime) — they
-# collapse to one entry so the list stays diagnostic — but the label
-# checks REAL fused membership (row_predicates, the runner's own fusion
-# rule): small pooled checks can land in the same rounded timing bucket
-# by scheduling coincidence and must not masquerade as the fused scan.
-fused_names = {{s.name for s in registry.default_suite()
-                if s.row_predicates is not None}}
-groups = {{}}
-for r in best_summary.results:
-    groups.setdefault((round(r.started, 2), round(r.runtime, 2)), []).append(
-        r.check_name)
-slowest = sorted(groups.items(), key=lambda kv: -kv[0][1])[:5]
-def _label(names):
-    if len(names) == 1:
-        return names[0]
-    kind = ("fused" if all(n in fused_names for n in names)
-            else "co-timed")
-    return f"{{names[0]}} x{{len(names)}} {{kind}}"
-slowest = {{_label(names): key[1] for key, names in slowest}}
-# load_end includes this worker's own threads; read it relative to
-# `cores`, not as ambient
-print(json.dumps({{"wall": wall, "walls": walls, "cores": cores,
-                   "n_failed": n_failed, "rows": seq.count(),
-                   "slowest_checks": slowest,
-                   "loadavg_start": round(load_start, 2),
-                   "loadavg_end": round(_load1(), 2)}}))
-"""
+from benchlib import (  # noqa: E402  (the shared bench harness)
+    best_of,
+    host_nproc,
+    host_sizing,
+    host_spark,
+    loadavg_1m,
+    run_worker,
+    suite_fixture,
+    wait_for_quiet,
+)
 
 
-def generate(data_dir: str, rows: int) -> None:
-    code = f"""
-import sys
-sys.path.insert(0, "{REPO}")
-from ensembl_datacheck_spark.session import get_spark
-from ensembl_datacheck_spark.sources import synth
-spark = get_spark("gen", cores=32, shuffle_partitions=64, driver_memory="48g")
-seq = synth.gen_sequences(spark, {rows}, n_partitions=256, median_tok=64,
-                          max_tok=1024)
-seq.write.mode("overwrite").parquet("{data_dir}/sequences")
-clean = synth.gen_sequences(spark, {rows}, n_partitions=256, median_tok=64,
-                            max_tok=1024, inject_violations=False)
-synth.gen_baseline_stats(spark, clean).write.mode("overwrite").parquet(
-    "{data_dir}/baseline")
-"""
-    subprocess.run([sys.executable, "-c", code], check=True)
+def worker(kind: str, data: str, n: str) -> None:
+    """One fresh-JVM job, run as ``scaling_bench.py --worker <kind>
+    <data> <n>``: ``gen`` writes the n-row fixture at ``data``; ``level``
+    times the suite over it at n cores.  Prints one JSON line."""
+    import ensembl_datacheck_spark.checks  # noqa: F401  (register)
+    from ensembl_datacheck_spark import registry
+    from ensembl_datacheck_spark.plans.runner import Runner
+
+    if kind == "gen":
+        suite_fixture(host_spark("gen"), data, rows=int(n), n_partitions=256)
+        print(json.dumps({"rows": int(n)}))
+        return
+    cores = int(n)
+    spark = host_spark("scaling-bench", cores=cores)
+    tables = suite_fixture(spark, data)
+    load_start = loadavg_1m()
+    summaries = []
+    # one untimed warm-up suite run (JIT-compiles the generated code,
+    # faults the input into page cache), then best of two: steady-state
+    # throughput, the regime a long-running validation job lives in
+    walls = best_of(lambda: summaries.append(Runner(
+        spark, tables, n_buckets=64).run(
+            registry.default_suite(), write_checkpoints=False,
+            parallelism=4)), 2)
+    best_summary = summaries[1 + walls.index(min(walls))]
+    # per-check wall attribution from the BEST run, a one-read diagnosis
+    # of the next regression.  Per-check runtimes overlap in the pool:
+    # read them as relative weight.  Checks fused into one shared scan
+    # report identical (started, runtime) and collapse to one entry,
+    # labelled "fused" only for REAL fused membership (row_predicates):
+    # small pooled checks can share a rounded timing bucket by chance.
+    fused_names = {s.name for s in registry.default_suite()
+                   if s.row_predicates is not None}
+    groups: dict[tuple, list[str]] = {}
+    for r in best_summary.results:
+        groups.setdefault((round(r.started, 2), round(r.runtime, 2)),
+                          []).append(r.check_name)
+
+    def label(names):
+        if len(names) == 1:
+            return names[0]
+        how = ("fused" if all(n in fused_names for n in names)
+               else "co-timed")
+        return f"{names[0]} x{len(names)} {how}"
+
+    slowest = sorted(groups.items(), key=lambda kv: -kv[0][1])[:5]
+    # load_end includes this worker's own threads; read it relative to
+    # `cores`, not as ambient
+    print(json.dumps({"wall": min(walls), "walls": walls, "cores": cores,
+                      "n_failed": best_summary.n_failed,
+                      "rows": tables["sequences"].count(),
+                      "slowest_checks": {label(names): key[1]
+                                         for key, names in slowest},
+                      "loadavg_start": round(load_start, 2),
+                      "loadavg_end": round(loadavg_1m(), 2)}))
 
 
 def run_level(data_dir: str, cores: int) -> dict:
-    code = WORKER.format(repo=REPO, cores=cores, data=data_dir)
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True
-    )
-    if out.returncode != 0:
-        # surface the worker's actual Spark traceback — a bare
-        # CalledProcessError hides the captured stderr behind the huge
-        # '-c' command string and costs a multi-minute rerun to rediagnose
-        sys.exit(
-            f"worker (cores={cores}) exited {out.returncode}; stderr tail:\n"
-            + "\n".join(out.stderr.strip().splitlines()[-30:])
-        )
-    return json.loads(out.stdout.strip().splitlines()[-1])
+    _, timed_out = wait_for_quiet()
+    return {**run_worker(__file__, "level", data_dir, cores),
+            "gate_timed_out": timed_out}
 
 
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=4_000_000)
-    ap.add_argument("--n", type=int, default=8, help="small parallelism level N")
+    ap.add_argument("--n", type=int, default=max(1, host_nproc() // 4),
+                    help="small parallelism level N (default: a quarter "
+                    "of this host's cores, so 4N uses them all)")
     ap.add_argument("--data", default="/tmp/dcheck_scaling_data")
     ap.add_argument("--skip-gen", action="store_true")
     ap.add_argument("--one-level", type=int, default=None,
@@ -162,29 +130,24 @@ def main():
         # outputs: sequences is written first, so an interrupted
         # generation can leave sequences present but baseline missing —
         # --skip-gen must regenerate, not crash the worker mid-bench
+        for cores in [args.one_level] if args.one_level else [args.n, 4 * args.n]:
+            host_sizing(cores)  # fail before the generation, not after
         complete = all(
             os.path.exists(f"{args.data}/{d}/_SUCCESS")
             for d in ("sequences", "baseline")
         )
         if not args.skip_gen or not complete:
             print(f"generating {args.rows:,} rows at {args.data} ...", file=sys.stderr)
-            generate(args.data, args.rows)
+            run_worker(__file__, "gen", args.data, args.rows)
         if args.one_level:
-            _, timed_out = wait_for_quiet()
-            res = run_level(args.data, args.one_level)
-            res["gate_timed_out"] = timed_out
-            out = json.dumps(res)
+            out = json.dumps(run_level(args.data, args.one_level))
             if args.json_out:
                 with open(args.json_out, "w") as f:
                     f.write(out)
             print(out)
             return
-        _, timed_out_n = wait_for_quiet()
         res_n = run_level(args.data, args.n)
-        res_n["gate_timed_out"] = timed_out_n
-        _, timed_out_4n = wait_for_quiet()
         res_4n = run_level(args.data, args.n * 4)
-        res_4n["gate_timed_out"] = timed_out_4n
     # throughput from the MEASURED row count the workers report, never
     # the --rows flag: --skip-gen against a dir generated with a
     # different --rows would otherwise commit wrong seqs/sec to the
@@ -254,4 +217,7 @@ BASELINE.md sandbox protocol).
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["--worker"]:
+        worker(*sys.argv[2:])
+    else:
+        main()

@@ -1,8 +1,11 @@
-"""The shared load gate (benchlib.py) used by both bench harnesses:
-its (load, timed_out) contract is what lets committed BENCH artifacts
-self-label their measurement window."""
+"""The shared bench harness library (benchlib.py), without Spark: the
+load gate's (load, timed_out) contract is what lets committed BENCH
+artifacts self-label their measurement window; the host sizing and the
+best-of-N timer are what every bench script's walls rest on."""
 
 from __future__ import annotations
+
+import pytest
 
 import benchlib
 
@@ -27,3 +30,31 @@ def test_gate_waits_for_load_to_drop(monkeypatch):
     load, timed_out = benchlib.wait_for_quiet(
         max_load=5.0, timeout_s=60, poll_s=0)
     assert load == 2.0 and timed_out is False
+
+
+@pytest.mark.parametrize("nproc,ram_gb", [(1, 0.5), (4, 15.6), (64, 512.0)])
+def test_host_sizing_fits_the_host(monkeypatch, nproc, ram_gb):
+    monkeypatch.setattr(benchlib, "host_nproc", lambda: nproc)
+    monkeypatch.setattr(benchlib, "host_ram_gb", lambda: ram_gb)
+    for asked in (None, 1, nproc):
+        cores, driver_memory = benchlib.host_sizing(asked)
+        assert 1 <= cores <= nproc
+        assert driver_memory.endswith("m")
+        assert 0 < int(driver_memory[:-1]) <= ram_gb * 1024
+    assert benchlib.host_sizing()[0] == nproc
+    with pytest.raises(ValueError, match=f"this host has {nproc}"):
+        benchlib.host_sizing(nproc + 1)
+
+
+def test_best_of_times_passes_after_an_untimed_warmup(monkeypatch):
+    clock = [0.0]
+    monkeypatch.setattr(benchlib.time, "perf_counter", lambda: clock[0])
+    calls = []
+
+    def fn():
+        # the warm-up (first call) is slow; it must not show in the walls
+        clock[0] += 100.0 if not calls else 2.0
+        calls.append(1)
+
+    assert benchlib.best_of(fn, 3) == [2.0, 2.0, 2.0]
+    assert len(calls) == 4

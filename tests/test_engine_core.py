@@ -1102,7 +1102,8 @@ def test_array_diff_null_in_both_sides_is_not_a_difference(spark):
     assert got == {("a", "left"), ("b", "right")}
 
 
-def test_doc_id_unique_unattributed_under_foreign_bucket_key(spark, seq_fixture):
+def test_doc_id_unique_unattributed_under_foreign_bucket_key(
+        spark, seq_fixture, tmp_path):
     """Bucket attribution requires the runner to bucket by the unique key
     itself; under bucket_key='source' the dup counts stay unattributed
     (partition_violations unset) so a failure poisons pending buckets
@@ -1118,6 +1119,16 @@ def test_doc_id_unique_unattributed_under_foreign_bucket_key(spark, seq_fixture)
                         n_buckets=8)
     assert res2.partition_violations
     assert sum(res2.partition_violations.values()) == res2.n_violations
+    # through a Runner with a store, every bucket is checkpointed 'fail':
+    # none may be skipped as 'ok' on resume
+    store = CheckpointStore(Catalog(spark, tmp_path / "wh"))
+    summary = Runner(spark, {"sequences": seq_fixture["sequences"]},
+                     bucket_key="source", n_buckets=8,
+                     checkpoint_store=store, lineage="foreign").run([spec])
+    assert summary.results[0].status == Status.FAIL
+    rows = store.load().filter("check_name = 'DocIdUnique'").collect()
+    assert sorted((r["partition_id"], r["status"]) for r in rows) == [
+        (b, "fail") for b in range(8)]
 
 
 def _compiles(spark) -> int:
