@@ -25,6 +25,12 @@ import tempfile
 import time
 from pathlib import Path
 
+from ensembl_datacheck_spark.session import (
+    host_driver_memory,
+    host_nproc,
+    host_ram_gb,
+)
+
 
 def loadavg_1m() -> float:
     """1-minute load average (linux /proc; os.getloadavg fallback)."""
@@ -56,16 +62,6 @@ def wait_for_quiet(
     return load1, False
 
 
-def host_nproc() -> int:
-    """CPUs this process may run on (what ``nproc`` prints)."""
-    return len(os.sched_getaffinity(0))
-
-
-def host_ram_gb() -> float:
-    """Physical RAM of this host, in GiB."""
-    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
-
-
 def host_sizing(cores: int | None = None) -> tuple[int, str]:
     """``(cores, driver_memory)`` of a bench session on this host: every
     core unless ``cores`` asks for fewer, and a quarter of physical RAM.
@@ -75,7 +71,7 @@ def host_sizing(cores: int | None = None) -> tuple[int, str]:
     cores = cores or nproc
     if cores > nproc:
         raise ValueError(f"{cores} cores asked for; this host has {nproc}")
-    return cores, f"{int(host_ram_gb() * 256)}m"
+    return cores, host_driver_memory(host_ram_gb())
 
 
 def host_spark(app: str, cores: int | None = None):

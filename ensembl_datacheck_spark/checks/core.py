@@ -119,8 +119,8 @@ def _shared_fact_profile(ctx) -> P.FactProfile:
     summary job cached — six independent full fact scans collapse to
     one, and the per-check re-aggregation jobs to none.  The build's
     jobs carry job group ``dcheck:__profile__``, not the group of
-    whichever consumer asked first.  A standalone run_check gets a
-    private memo (one scan, same answers)."""
+    whichever consumer asked first.  A standalone run_check's one-check
+    Runner has a memo of its own (one scan, same answers)."""
     from ensembl_datacheck_spark.plans.runner import job_group
 
     def build() -> P.FactProfile:

@@ -66,28 +66,12 @@ def generated_check_specs(
     """Build registered-shape CheckSpecs for a concrete table's schema —
     the INFORMATION_SCHEMA-driven generation step, done once at plan
     time.  All generated specs are fused into the shared scan by the
-    Runner."""
+    Runner, which skips them when its fused scan is another table."""
     specs = []
-
-    def _guard_fact(ctx):
-        # spec_pack's row-rule discipline: specs generated for THIS
-        # table must not evaluate their predicates against a Runner
-        # whose fused scan is a different table — overlapping column
-        # names would silently produce wrong verdicts, disjoint ones an
-        # AnalysisException outside per-check containment
-        from ensembl_datacheck_spark.plans.runner import SkipCheck
-
-        runner_fact = getattr(ctx, "fact_table", table_name)
-        if runner_fact != table_name:
-            raise SkipCheck(
-                f"generated sweep targets '{table_name}' but the fused "
-                f"scan is '{runner_fact}'"
-            )
 
     if "blank_nulls" in kinds:
 
         def _bn_preds(ctx, scan, _df=df):
-            _guard_fact(ctx)
             return blank_null_predicates(_df), scan
 
         specs.append(
@@ -105,7 +89,6 @@ def generated_check_specs(
     if "whitespace" in kinds:
 
         def _ws_preds(ctx, scan, _df=df):
-            _guard_fact(ctx)
             return whitespace_predicates(_df), scan
 
         specs.append(

@@ -283,20 +283,10 @@ def register_spec(spec, registry=None, fact_table: str = "sequences") -> None:
         # a rule over the fact table IS a fused row predicate: N
         # registered rules cost one scan + one aggregation total, not a
         # scan each (the scale answer to the reference's one-SQL-per-check
-        # model), and a standalone run_check runs the same fused path
+        # model); a Runner whose fused scan is another table skips it
         from ensembl_datacheck_spark.operators.fused import RowPredicate
 
-        def row_predicates(ctx, scan, spec=spec, fact_table=fact_table):
-            runner_fact = getattr(ctx, "fact_table", fact_table)
-            if runner_fact != spec.table:
-                # a Runner with a different fact table must not
-                # evaluate this rule's SQL against the wrong scan
-                from ensembl_datacheck_spark.plans.runner import SkipCheck
-
-                raise SkipCheck(
-                    f"row rule targets '{spec.table}' but the fused "
-                    f"scan is '{runner_fact}'"
-                )
+        def row_predicates(ctx, scan, spec=spec):
             cond = F.expr(spec.violation_sql)
             # force analysis NOW (schema access, no job) so an
             # unresolvable expression fails THIS check inside the

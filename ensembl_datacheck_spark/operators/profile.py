@@ -53,8 +53,8 @@ value counts.
 The profile is memoized per Runner run via plans/runner.SharedComputations
 (checks/core._shared_fact_profile): under --parallelism the first
 aggregate check to ask runs the scan while its co-consumers block on
-that key only; standalone run_check callers get a private instance and
-pay one scan themselves — today's per-check cost, no sharing.
+that key only.  A standalone run_check is a one-check Runner with a memo
+of its own: it pays one scan itself, shared with no other check.
 """
 
 from __future__ import annotations

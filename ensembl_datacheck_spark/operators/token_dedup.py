@@ -121,50 +121,6 @@ def token_shingle_slices_jvm(
     return slices
 
 
-def token_minhash_candidates_jvm(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    k: int = 8,
-    n_hashes: int = 64,
-    n_bands: int = 16,
-) -> DataFrame:
-    """All-JVM token MinHash tier: k-token windows from
-    token_shingle_slices_jvm (zero Python anywhere — the input_hint's
-    'no per-row Python' taken one step further than the Arrow tier),
-    hashed post-explode with native xxhash64 and folded through the SAME
-    codegen min-aggregate → banding → capped hub-spoke pairing plan as
-    text MinHash (64-bit seeded signature family, _min_sig_agg64).  The
-    shuffle carries map-side-aggregated signature partials, never
-    shingles.
-
-    Signatures differ numerically from token_minhash_candidates (numpy
-    polynomial family vs seeded xxhash64) — both are valid MinHash
-    families with equivalent candidate quality; measured throughput at
-    64-token rows is comparable (BENCH/BASELINE.md token-dedup table).
-    Prefer this tier when Python workers are constrained (no Arrow
-    transfer of the widest column); prefer the Arrow tier when numpy
-    vectorization wins on very long sequences."""
-    from ensembl_datacheck_spark.operators.dedup import (
-        _min_sig_agg64,
-        bucket_candidate_pairs,
-        lsh_band_keys,
-    )
-
-    rows_per_band = n_hashes // n_bands
-    t = df.select(
-        F.col(id_col).alias("id"), F.col(tokens_col).alias("toks")
-    ).filter(F.col("toks").isNotNull() & (F.size("toks") > 0))
-    sh = t.select(
-        "id", F.explode(token_shingle_slices_jvm("toks", k)).alias("g")
-    )
-    sig = _min_sig_agg64(sh, n_hashes)
-    banded = sig.select(
-        "id", F.explode(lsh_band_keys("sig", n_bands, rows_per_band)).alias("bk")
-    )
-    return bucket_candidate_pairs(banded)
-
-
 def portable_token_minhash_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -181,7 +137,7 @@ def portable_token_minhash_candidates(
     (first 8 hex chars of md5 → bigint — DuckDB:
     CAST('0x'||substring(md5(g),1,8) AS BIGINT)), folded through the
     shared MH_COEFFS affine-minima aggregation and banded exactly like
-    the text tier.  Same plan shape as token_minhash_candidates_jvm:
+    the text tier.  Same plan shape as dedup.minhash_lsh_candidates:
     explode shingles → one codegen min-aggregate groupBy(id) (map-side
     partials, the shuffle carries signatures, never shingles) → band
     self-join.  Null/empty token rows are dropped (no signature)."""

@@ -12,8 +12,9 @@ Execution model:
 * **row-fused checks**: a check declared as a row-predicate factory is
   executed with its siblings in a single scan (operators/fused.py) —
   per-(bucket, assertion) counts in one aggregation + one violating-row
-  projection — instead of one scan per check as the reference does; a
-  standalone ``run_check`` of such a check runs the same fused path;
+  projection — instead of one scan per check as the reference does;
+* ``run_check`` is a one-check run: every check, standalone or not,
+  executes through ``Runner``;
 * funnel: verdicts united into a RunSummary, violations appended to the
   violations table, checkpoint rows appended once per run
   (DataCheckFunnel.pm:35-91 semantics: single merged write);
@@ -145,19 +146,20 @@ class SharedComputations:
 
 class CheckContext:
     """What a check body sees: tables, config, assertion recorder.  The
-    analogue of the reference's dba + Test::More import surface."""
+    analogue of the reference's dba + Test::More import surface.  The
+    Runner builds one per check (Runner._exec_one) and one for the fused
+    scan's factories (Runner._run_fused)."""
 
     def __init__(
         self,
         spark: SparkSession,
         tables: dict[str, DataFrame],
-        config: dict | None = None,
-        check_name: str = "",
-        bucket_key: str = "doc_id",
-        n_buckets: int = 64,
-        fact_table: str = "sequences",
-        shared: SharedComputations | None = None,
-        local_table: Callable[[str, DataFrame], DataFrame] | None = None,
+        config: dict | None,
+        check_name: str,
+        bucket_key: str,
+        n_buckets: int,
+        shared: SharedComputations,
+        local_table: Callable[[str, DataFrame], DataFrame],
     ):
         self.spark = spark
         self.tables = tables
@@ -166,24 +168,15 @@ class CheckContext:
         self.violations: list[DataFrame] = []
         self.bucket_key = bucket_key
         self.n_buckets = n_buckets
-        #: name of the table a fused row scan iterates (spec-pack row
-        #: rules verify their target against this before fusing)
-        self.fact_table = fact_table
-        #: run-scoped memo for cross-check shared jobs; standalone
-        #: run_check callers get a private instance (each check then
-        #: computes its own profile — today's per-check cost, no sharing)
-        self.shared = shared if shared is not None else SharedComputations()
-        #: the Runner's per-run table resolver (Runner._table_for: small
-        #: dimension tables become local relations); standalone
-        #: run_check callers read their tables as given
+        #: the run's memo for cross-check shared jobs (Runner.shared)
+        self.shared = shared
+        #: the run's table resolver (Runner._table_for: small dimension
+        #: tables become local relations)
         self._local_table = local_table
 
     def table(self, name: str) -> DataFrame:
         if name in self.tables:
-            df = self.tables[name]
-            if self._local_table is not None:
-                return self._local_table(name, df)
-            return df
+            return self._local_table(name, self.tables[name])
         if "." in name:
             # cross-database lookup (S25): a qualified name resolves
             # through the session catalog (io.register_database) — the
@@ -254,41 +247,20 @@ def run_check(
     bucket_key: str = "doc_id",
     n_buckets: int = 64,
     shared: SharedComputations | None = None,
-    local_table: Callable[[str, DataFrame], DataFrame] | None = None,
 ) -> tuple[CheckResult, list[DataFrame]]:
     """Programmatic single-check entry point (reference §3.3:
-    `My::Check->new(...)->run()`).  A row-fused check runs the Runner's
-    own fused scan over its first table, so its verdict and violation
-    rows are the ones a full run gives."""
-    if spec.row_predicates is not None:
-        violations: list[DataFrame] = []
-        summary = Runner(
-            spark, tables,
-            fact_table=spec.tables[0] if spec.tables else "sequences",
-            bucket_key=bucket_key, n_buckets=n_buckets, config=config,
-            shared=shared,
-        ).run([spec], write_checkpoints=False,
-              violations_sink=violations.append, parallelism=1)
-        return summary.results[0], violations
-    ctx = CheckContext(
-        spark, tables, config, check_name=spec.name,
-        bucket_key=bucket_key, n_buckets=n_buckets, shared=shared,
-        local_table=local_table,
-    )
-    ctx.result.severity = spec.severity.value
-    try:
-        spec.body(ctx)
-    except SkipCheck as s:
-        ctx.result.skip_reason = s.reason
-    except Exception:
-        ctx.result.error = traceback.format_exc(limit=8)
-    if shared is None:
-        # private memo nobody else can consume: free its persisted
-        # values now (repeated standalone run_check calls otherwise each
-        # leave a cube in the CacheManager until session end); returned
-        # violation frames stay valid — persist lineage is recomputable
-        ctx.shared.release()
-    return ctx.result.finish(), ctx.violations
+    `My::Check->new(...)->run()`): a one-check Runner run whose fact
+    table is the check's first table, so its verdict and violation rows
+    are the ones a full run gives."""
+    violations: list[DataFrame] = []
+    summary = Runner(
+        spark, tables,
+        fact_table=spec.tables[0] if spec.tables else "sequences",
+        bucket_key=bucket_key, n_buckets=n_buckets, config=config,
+        shared=shared,
+    ).run([spec], write_checkpoints=False,
+          violations_sink=violations.append, parallelism=1)
+    return summary.results[0], violations
 
 
 def _skipped(
@@ -339,7 +311,8 @@ class Runner:
         # memo: shared values are keyed by table fingerprint
         # (checks/core._profile_memo_key), so targets that validate the
         # SAME table share one cube build while distinct tables can never
-        # collide.  Default: private per-run memo, today's behavior.
+        # collide.  Default: a memo of this Runner's own, released by
+        # run() (the memo's owner releases it).
         self.shared = shared if shared is not None else SharedComputations()
         self._owns_shared = shared is None
         # per-run state, set up by run(): a memo for the dimension tables'
@@ -586,24 +559,40 @@ class Runner:
             if self._owns_shared:
                 self.shared.release()
 
+    def _context(
+        self, tables: dict[str, DataFrame], check_name: str = ""
+    ) -> CheckContext:
+        """A check's view of ``tables`` in this run: the run's memo and
+        table resolver, even when ``tables`` is resume-filtered —
+        shared values are keyed by the analyzed plan of the table they
+        were built from (checks/core._profile_memo_key), so a filtered
+        fact table can never read or poison the full table's."""
+        return CheckContext(
+            self.spark, tables, self.config, check_name, self.bucket_key,
+            self.n_buckets, self.shared, self._table_for,
+        )
+
     def _exec_one(
         self, spec: CheckSpec, write_checkpoints: bool
     ) -> tuple[CheckResult, list[DataFrame], list[CheckpointRow]]:
-        """Run one non-fused check against its pending buckets; returns
-        its verdict, violation frames and checkpoint rows."""
+        """Run one body check against its pending buckets; returns its
+        verdict, violation frames and checkpoint rows.  A check that
+        skips or raises stops there, and the run goes on
+        (BaseCheck.pm:131-139)."""
         started = time.time()
         pending = self._pending_buckets(spec)
         if pending is not None and not pending:
             # DbCheck.pm:775 analogue
             return _skipped(spec, "All tests passed in a previous run"), [], []
-        result, violations = run_check(
-            spec, self.spark, self._filtered_tables(pending), self.config,
-            bucket_key=self.bucket_key, n_buckets=self.n_buckets,
-            # shared values are computed from the FULL fact table; a
-            # resume-filtered scan must not consume (or poison) them
-            shared=self.shared if pending is None else None,
-            local_table=self._table_for,
-        )
+        ctx = self._context(self._filtered_tables(pending), spec.name)
+        ctx.result.severity = spec.severity.value
+        try:
+            spec.body(ctx)
+        except SkipCheck as s:
+            ctx.result.skip_reason = s.reason
+        except Exception:
+            ctx.result.error = traceback.format_exc(limit=8)
+        result, violations = ctx.result.finish(), ctx.violations
         if self.store is None or not write_checkpoints:
             return result, violations, []
         # a check attributes its violations to buckets only through
@@ -629,6 +618,20 @@ class Runner:
         buckets and per-check verdicts only consider that check's pending
         set."""
         started = time.time()
+        # the fused scan is the run's fact table: a check declared over
+        # another table skips rather than score that table's predicates
+        # against the wrong rows (or fail to resolve them outside
+        # per-check containment)
+        ours = []
+        for s in specs:
+            target = s.tables[0] if s.tables else self.fact_table
+            if target == self.fact_table:
+                ours.append(s)
+            else:
+                summary.results.append(_skipped(
+                    s, f"{s.name} targets '{target}' but the fused scan "
+                       f"is '{self.fact_table}'"))
+        specs = ours
         fact = self.tables.get(self.fact_table)
         if fact is None:
             # no fact table in this run (e.g. a meta-only spec-pack
@@ -659,19 +662,7 @@ class Runner:
         if union_pending is not None:
             scan = scan.filter(self._bucket().isin(sorted(union_pending)))
 
-        # same context protocol as _exec_one/run_check: the run-shared
-        # memo is handed over only on a full-table scan; a resume-filtered
-        # scan must not consume (or poison) shared values computed from
-        # the full fact table.  A private memo created here is released at
-        # the end of _run_fused (run_check's discipline), not leaked.
-        ctx = CheckContext(
-            self.spark, {**self.tables, self.fact_table: scan}, self.config,
-            bucket_key=self.bucket_key, n_buckets=self.n_buckets,
-            fact_table=self.fact_table,
-            shared=self.shared if union_pending is None else None,
-            local_table=self._table_for,
-        )
-        ctx_shared_private = union_pending is not None
+        ctx = self._context({**self.tables, self.fact_table: scan})
         preds: list[RowPredicate] = []
         pred_owner: dict[str, CheckSpec] = {}
         scan2 = scan
@@ -679,7 +670,7 @@ class Runner:
         for s in todo:
             # a predicate factory that cannot run (missing table, bad
             # config) must skip/fail THIS check only — same error
-            # containment as run_check (BaseCheck.pm:131-139), not a
+            # containment as _exec_one (BaseCheck.pm:131-139), not a
             # crash of every sibling in the fused scan.  A failed
             # factory's pending buckets are checkpointed 'fail', as a
             # body check's error is, so a resume runs it again
@@ -714,8 +705,6 @@ class Runner:
             healthy.append(s)
         todo = healthy
         if not todo:
-            if ctx_shared_private:
-                ctx.shared.release()
             return
 
         bucket = self._bucket()
@@ -797,5 +786,3 @@ class Runner:
         if out_of_scope is not None:
             tagged = tagged.filter(~out_of_scope)
         all_violations.append(tagged)
-        if ctx_shared_private:
-            ctx.shared.release()

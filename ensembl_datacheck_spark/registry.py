@@ -59,8 +59,9 @@ class CheckSpec:
     # the alternative to ``body``: the Runner fuses this check into a
     # shared single scan with its siblings (operators/fused.py), and a
     # standalone run_check runs that same path.  The scan is the check's
-    # FIRST table.  The factory may extend the scan (e.g. broadcast-join
-    # a dimension flag).
+    # FIRST table (no tables: the fact table); a Runner whose fused scan
+    # is another table skips the check.  The factory may extend the scan
+    # (e.g. broadcast-join a dimension flag).
     row_predicates: Callable | None = None
     # Shared-computation kinds this check's body consumes via ctx.shared
     # (e.g. "fact_profile", the one-scan profile cube).  Declared

@@ -41,20 +41,38 @@ def _submit_conf_keys() -> set[str]:
     return {k for k, _ in SparkConf().getAll()}
 
 
+def host_nproc() -> int:
+    """CPUs this process may run on (what ``nproc`` prints)."""
+    return len(os.sched_getaffinity(0))
+
+
+def host_ram_gb() -> float:
+    """Physical RAM of this host, in GiB."""
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+
+
+def host_driver_memory(ram_gb: float) -> str:
+    """The driver heap of a local session on a host with ``ram_gb`` GiB:
+    a quarter of it, in MiB, leaving the rest to the Python workers and
+    the OS."""
+    return f"{int(ram_gb * 256)}m"
+
+
 def get_spark(
     app_name: str = "ensembl-datacheck-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "24g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``.  In local mode
     the driver JVM is the only process, so ``spark.driver.memory`` is the
-    memory knob.  On a real cluster the same code is submitted via
-    ``spark-submit --py-files`` (north_rule packaging): the submit owns
-    master / deploy-mode / executor sizing, detected here via
+    memory knob; it defaults to a quarter of physical RAM
+    (``host_driver_memory``).  On a real cluster the same code is
+    submitted via ``spark-submit --py-files`` (north_rule packaging): the
+    submit owns master / deploy-mode / executor sizing, detected here via
     ``PYSPARK_GATEWAY_PORT`` (the gateway JVM spark-submit launched before
     this interpreter).  In that case master and driver-memory are never
     overridden — the JVM already exists, so static confs are immutable —
@@ -95,7 +113,8 @@ def get_spark(
     if not submitted:
         builder = (
             builder.master(master)
-            .config("spark.driver.memory", driver_memory)
+            .config("spark.driver.memory",
+                    driver_memory or host_driver_memory(host_ram_gb()))
             .config("spark.ui.enabled", "false")
         )
         if shuffle_partitions is None:

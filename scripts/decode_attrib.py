@@ -99,12 +99,11 @@ def worker(job: str, data: str, cores: str) -> None:
         from ensembl_datacheck_spark.operators.fused import (
             fused_violation_counts,
         )
-        from ensembl_datacheck_spark.plans.runner import CheckContext
 
         runner = Runner(spark, tables, n_buckets=64)
-        ctx = CheckContext(spark, tables, runner.config,
-                           bucket_key=runner.bucket_key, n_buckets=64,
-                           fact_table=runner.fact_table)
+        # the context the Runner hands the fused factories: its memo
+        # and table resolver
+        ctx = runner._context(tables)
         preds, scan2 = [], seq
         for s in registry.default_suite():
             if s.row_predicates is not None and s.name not in TOKEN_CHECKS:

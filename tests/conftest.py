@@ -2,12 +2,14 @@ from __future__ import annotations
 
 import pytest
 
-from ensembl_datacheck_spark.session import get_spark
+from ensembl_datacheck_spark.session import get_spark, host_nproc
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("dcheck-tests", cores=8, shuffle_partitions=8, driver_memory="8g")
+    # every core of the host, and get_spark's default driver heap (a
+    # quarter of physical RAM)
+    s = get_spark("dcheck-tests", cores=host_nproc(), shuffle_partitions=8)
     yield s
 
 

@@ -116,43 +116,6 @@ def test_signature_determinism(token_docs):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_token_minhash_jvm_tier_finds_planted_dups(spark):
-    """The all-JVM token MinHash tier finds exact and near duplicates of
-    token sequences and stays deterministic across runs."""
-    import numpy as np
-
-    from ensembl_datacheck_spark.operators.token_dedup import (
-        token_minhash_candidates_jvm,
-    )
-
-    rng = np.random.default_rng(5)
-    rows = []
-    base = rng.integers(0, 50_000, size=200).tolist()
-    rows.append((1, base))
-    rows.append((2, list(base)))                       # exact dup
-    near = list(base)
-    near[10] = 7
-    rows.append((3, near))                             # near dup (1 token)
-    for i in range(4, 40):
-        rows.append((i, rng.integers(0, 50_000, size=200).tolist()))
-    rows.append((99, rng.integers(0, 50_000, size=3).tolist()))  # < k tokens
-    df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
-
-    pairs = {(r["id_a"], r["id_b"])
-             for r in token_minhash_candidates_jvm(df, k=8, n_hashes=32,
-                                                   n_bands=16).collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) in pairs and (2, 3) in pairs
-    assert not any(99 in p for p in pairs)  # short doc hashes but no dup
-    unrelated = [p for p in pairs if p[0] >= 4 and p[1] >= 4]
-    assert len(unrelated) <= 2  # random 200-token seqs rarely collide
-
-    again = {(r["id_a"], r["id_b"])
-             for r in token_minhash_candidates_jvm(df, k=8, n_hashes=32,
-                                                   n_bands=16).collect()}
-    assert pairs == again
-
-
 def test_connected_components_long_chain_pointer_doubling(spark):
     """A 200-link chain (diameter 200 — the boilerplate-ladder case) must
     converge WELL inside the iteration cap: pointer doubling gives

@@ -256,7 +256,7 @@ def test_skip_with_reason(spark, seq_fixture):
     assert result.skip_reason == "not applicable here"
 
 
-def _fused_verdicts(results, violations, names):
+def _verdicts(results, violations, names):
     """Per check: status, counts, each assertion's verdict fields, and
     the violation rows as (assertion, partition_id, key)."""
     rows: dict[str, list] = {n: [] for n in names}
@@ -292,29 +292,28 @@ def _generated_case(spark):
 @pytest.mark.parametrize("case", ["registry", "generated"])
 def test_standalone_row_fused_check_matches_full_run(spark, seq_fixture,
                                                      case):
-    """A standalone run_check of a row-fused check returns the verdict
-    and violation rows a full Runner.run gives it: every registered
-    row-fused check on the dirty fixture, and both generated sweeps on
-    their own table."""
+    """A standalone run_check of any check returns the verdict and
+    violation rows a full Runner.run gives it: every default-suite
+    check, body and row-fused, on the dirty fixture, and both generated
+    sweeps on their own table."""
     if case == "registry":
-        fused = [s for s in registry if s.row_predicates is not None]
-        suite = registry.default_suite()
-        assert set(fused) <= set(suite)
+        checks = suite = registry.default_suite()
+        assert {s.name for s in registry if s.row_predicates is not None
+                } <= {s.name for s in suite}
         tables = _tables(seq_fixture)
         kw = {"n_buckets": 16}
     else:
-        fused, suite, tables, kw = _generated_case(spark)
-    names = {s.name for s in fused}
-    assert names
+        checks, suite, tables, kw = _generated_case(spark)
+    names = {s.name for s in checks}
     full_viols: list = []
     full = Runner(spark, tables, **kw).run(
         suite, write_checkpoints=False, violations_sink=full_viols.append)
-    want = _fused_verdicts(full.results, full_viols, names)
+    want = _verdicts(full.results, full_viols, names)
     kw.pop("fact_table", None)
     got: dict = {}
-    for s in fused:
+    for s in checks:
         res, viols = run_check(s, spark, tables, **kw)
-        got.update(_fused_verdicts([res], viols, {s.name}))
+        got.update(_verdicts([res], viols, {s.name}))
     assert got == want
     assert any(v[0] == Status.FAIL for v in want.values())
 

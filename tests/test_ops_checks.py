@@ -397,9 +397,9 @@ def test_shared_profile_cube_released_after_run(spark, monkeypatch):
     """The memo owner unpersists the profile cube once the run is done:
     without the paired unpersist every distinct table leaves an
     InMemoryRelation in the CacheManager for the session's lifetime
-    (round-5 review finding).  Covers all three owners: Runner.run
-    (private memo), standalone run_check (private memo), and run_fleet
-    (fleet-shared memo)."""
+    (round-5 review finding).  Covers both owners: Runner.run (its own
+    memo, also under a standalone run_check's one-check Runner) and
+    run_fleet (fleet-shared memo)."""
     import ensembl_datacheck_spark.checks.core as core
     from ensembl_datacheck_spark.plans.fleet import DbTarget, run_fleet
     from ensembl_datacheck_spark.plans.runner import run_check
@@ -426,7 +426,7 @@ def test_shared_profile_cube_released_after_run(spark, monkeypatch):
                                            parallelism=4)
     assert len(captured) == 1 and all_released()
 
-    run_check(specs[0], spark, tables)  # private memo, owned by run_check
+    run_check(specs[0], spark, tables)  # its one-check Runner owns the memo
     assert len(captured) == 2 and all_released()
 
     run_fleet(spark, [DbTarget("db1", tables), DbTarget("db2", tables)],

@@ -242,12 +242,15 @@ def test_small_dimensions_localize_once_others_stay_file_backed(
                for df in seen[name])
     assert all(df.isStreaming for df in seen["stream"])
     assert localize_if_small(spark, tables["stream"]) is tables["stream"]
-    # outside a run, and from standalone run_check, tables stay as given
+    # a standalone run_check is a one-check run: it gets the run's local
+    # relation too
     from ensembl_datacheck_spark.plans.runner import run_check
 
     seen.clear()
-    run_check(specs[0], spark, tables)
-    assert seen["sources"][0] is tables["sources"]
+    with _threshold(spark, str(size)):
+        run_check(specs[0], spark, tables)
+    assert leaf(seen["sources"][0]) == "LocalRelation"
+    assert leaf(seen["sequences"][0]) != "LocalRelation"
 
 
 def _clean_tables(seq_fixture):

@@ -102,9 +102,10 @@ def test_parallel_execution_matches_sequential(spark, seq_fixture):
 
 
 def test_generated_specs_skip_under_foreign_fused_scan(spark):
-    """Specs generated for table X must not evaluate their predicates
-    against a Runner whose fused scan is a different table — overlapping
-    column names would silently score the wrong rows."""
+    """Fused checks declared over table X must not evaluate their
+    predicates against a Runner whose fused scan is a different table —
+    overlapping column names would silently score the wrong rows, and
+    disjoint ones would abort the whole run."""
     from ensembl_datacheck_spark.checks.generated import generated_check_specs
     from ensembl_datacheck_spark.plans.runner import Runner
     from ensembl_datacheck_spark.verdict import Status
@@ -123,3 +124,15 @@ def test_generated_specs_skip_under_foreign_fused_scan(spark):
     for r in summary.results:
         assert r.status == Status.SKIP, (r.check_name, r.status)
         assert "fused scan is 'sequences'" in r.skip_reason
+    # the same rule holds for a core fused check: under a fused scan of
+    # another table it skips, and the run returns its summary
+    import ensembl_datacheck_spark.checks  # noqa: F401
+    from ensembl_datacheck_spark.registry import registry
+
+    t = spark.createDataFrame([(1, "x")], "id int, a string")
+    [r] = Runner(spark, {"t": t}, fact_table="t", bucket_key="id").run(
+        [registry.get("SequencesCompleteness")],
+        write_checkpoints=False).results
+    assert r.status == Status.SKIP
+    assert r.skip_reason == ("SequencesCompleteness targets 'sequences' "
+                             "but the fused scan is 't'")
