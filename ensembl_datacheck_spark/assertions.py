@@ -27,6 +27,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ensembl_datacheck_spark.operators.referential import orphan_rows
 from ensembl_datacheck_spark.sources.io import local_frame
 from ensembl_datacheck_spark.verdict import MAX_DIAG_ROWS, AssertionResult, Status
 
@@ -205,29 +206,20 @@ def row_subtotals(
 
 def fk(
     table: DataFrame,
-    col1: str | Column,
+    col1: str,
     ref: DataFrame,
-    col2: str | Column,
+    col2: str,
     name: str,
     constraint: Column | None = None,
-    broadcast_ref: bool = True,
 ) -> tuple[AssertionResult, DataFrame | None]:
     """Referential integrity (Test/DataCheck.pm:395-419): rows of ``table``
     whose non-null ``col1`` has no match in ``ref.col2`` are violations.
 
-    Physical plan: **left-anti join**, broadcast by default — at fact-table
-    scale the dimension side must broadcast so no shuffle of the fact table
-    occurs (north_rule: broadcast hash anti-join)."""
-    c1 = F.col(col1) if isinstance(col1, str) else col1
-    c2 = F.col(col2) if isinstance(col2, str) else col2
-    left = table.filter(c1.isNotNull())
-    if constraint is not None:
-        left = left.filter(constraint)
-    right = ref.select(c2.alias("__fk_ref_key")).distinct()
-    if broadcast_ref:
-        right = F.broadcast(right)
-    viol = left.join(right, on=c1 == F.col("__fk_ref_key"), how="left_anti")
-    return is_rows_zero(viol, name)
+    Physical plan: broadcast hash **left-anti join**
+    (operators/referential.orphan_rows) — at fact-table scale the
+    dimension side must broadcast so no shuffle of the fact table occurs
+    (north_rule: broadcast hash anti-join)."""
+    return is_rows_zero(orphan_rows(table, col1, ref, col2, constraint), name)
 
 
 def denormalized(

@@ -58,49 +58,38 @@ def whitespace_predicates(df: DataFrame) -> list[RowPredicate]:
     return preds
 
 
-def generated_check_specs(
-    table_name: str,
-    df: DataFrame,
-    kinds: tuple[str, ...] = ("blank_nulls", "whitespace"),
-) -> list[CheckSpec]:
+def generated_check_specs(table_name: str, df: DataFrame) -> list[CheckSpec]:
     """Build registered-shape CheckSpecs for a concrete table's schema —
     the INFORMATION_SCHEMA-driven generation step, done once at plan
-    time.  All generated specs are fused into the shared scan by the
-    Runner, which skips them when its fused scan is another table."""
-    specs = []
+    time: a blank-null and a whitespace sweep.  Both are fused into the
+    shared scan by the Runner, which skips them when its fused scan is
+    another table."""
 
-    if "blank_nulls" in kinds:
+    def _bn_preds(ctx, scan, _df=df):
+        return blank_null_predicates(_df), scan
 
-        def _bn_preds(ctx, scan, _df=df):
-            return blank_null_predicates(_df), scan
+    def _ws_preds(ctx, scan, _df=df):
+        return whitespace_predicates(_df), scan
 
-        specs.append(
-            CheckSpec(
-                name=f"BlankNulls_{table_name}",
-                description=f"generated blank-null sweep over string columns "
-                            f"of {table_name} (BlankNulls.pm:41-67)",
-                groups=("generated", "completeness", "row_fused"),
-                severity=Severity.ADVISORY,
-                tables=(table_name,),
-                per_partition=True,
-                row_predicates=_bn_preds,
-            )
-        )
-    if "whitespace" in kinds:
-
-        def _ws_preds(ctx, scan, _df=df):
-            return whitespace_predicates(_df), scan
-
-        specs.append(
-            CheckSpec(
-                name=f"Whitespace_{table_name}",
-                description=f"generated whitespace sweep over string columns "
-                            f"of {table_name} (WhitespaceCritical.pm:41-68)",
-                groups=("generated", "completeness", "row_fused"),
-                severity=Severity.ADVISORY,
-                tables=(table_name,),
-                per_partition=True,
-                row_predicates=_ws_preds,
-            )
-        )
-    return specs
+    return [
+        CheckSpec(
+            name=f"BlankNulls_{table_name}",
+            description=f"generated blank-null sweep over string columns "
+                        f"of {table_name} (BlankNulls.pm:41-67)",
+            groups=("generated", "completeness", "row_fused"),
+            severity=Severity.ADVISORY,
+            tables=(table_name,),
+            per_partition=True,
+            row_predicates=_bn_preds,
+        ),
+        CheckSpec(
+            name=f"Whitespace_{table_name}",
+            description=f"generated whitespace sweep over string columns "
+                        f"of {table_name} (WhitespaceCritical.pm:41-68)",
+            groups=("generated", "completeness", "row_fused"),
+            severity=Severity.ADVISORY,
+            tables=(table_name,),
+            per_partition=True,
+            row_predicates=_ws_preds,
+        ),
+    ]

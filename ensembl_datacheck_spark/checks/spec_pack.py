@@ -215,11 +215,11 @@ class JsonValueSpec:
     severity: str = "critical"
 
 
-def register_spec(spec, registry=None, fact_table: str = "sequences") -> None:
+def register_spec(spec, registry=None) -> None:
     """Compile a declarative spec into a registered check.  RowRuleSpec
-    entries targeting ``fact_table`` compile to fused row predicates
-    instead of a body, so the Runner folds them into its single row
-    scan."""
+    entries over ``sequences`` (the fact table) compile to fused row
+    predicates instead of a body, so the Runner folds them into its
+    single row scan."""
     kw = {"_registry": registry} if registry is not None else {}
     extra_kw = {}
 
@@ -279,7 +279,7 @@ def register_spec(spec, registry=None, fact_table: str = "sequences") -> None:
                 )
 
         tables = (spec.table,)
-    elif isinstance(spec, RowRuleSpec) and spec.table == fact_table:
+    elif isinstance(spec, RowRuleSpec) and spec.table == "sequences":
         # a rule over the fact table IS a fused row predicate: N
         # registered rules cost one scan + one aggregation total, not a
         # scan each (the scale answer to the reference's one-SQL-per-check

@@ -77,9 +77,11 @@ class CheckpointRow:
 
 
 class CheckpointStore:
-    def __init__(self, catalog: Catalog, table: str = "checkpoints"):
+    #: the catalog table checkpoint rows are appended to
+    table = "checkpoints"
+
+    def __init__(self, catalog: Catalog):
         self.catalog = catalog
-        self.table = table
         # concurrent runners (fleet fan-out) share one store: parquet
         # append jobs to the same directory share a _temporary committer
         # dir, so writes must not overlap.  Iceberg's ACID commit makes

@@ -20,7 +20,10 @@ Execution model:
   (DataCheckFunnel.pm:35-91 semantics: single merged write);
 * resume: partitions whose latest checkpoint is ok under the current input
   lineage are filtered out *before* the scan (cheap bucket-id predicate,
-  no extra shuffle); `force` bypasses (DbCheck.pm:101-105);
+  no extra shuffle): a body check reads only its pending buckets, and a
+  fused check's predicates are scoped to its pending buckets, so the
+  shared scan of their union counts and tags only each check's own rows;
+  `force` bypasses (DbCheck.pm:101-105);
 * error-in-check → failed verdict with diagnostic, run continues
   (BaseCheck.pm:131-139).
 """
@@ -32,6 +35,7 @@ import time
 import traceback
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
+from dataclasses import replace
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -246,7 +250,6 @@ def run_check(
     config: dict | None = None,
     bucket_key: str = "doc_id",
     n_buckets: int = 64,
-    shared: SharedComputations | None = None,
 ) -> tuple[CheckResult, list[DataFrame]]:
     """Programmatic single-check entry point (reference §3.3:
     `My::Check->new(...)->run()`): a one-check Runner run whose fact
@@ -257,7 +260,6 @@ def run_check(
         spark, tables,
         fact_table=spec.tables[0] if spec.tables else "sequences",
         bucket_key=bucket_key, n_buckets=n_buckets, config=config,
-        shared=shared,
     ).run([spec], write_checkpoints=False,
           violations_sink=violations.append, parallelism=1)
     return summary.results[0], violations
@@ -317,10 +319,8 @@ class Runner:
         self._owns_shared = shared is None
         # per-run state, set up by run(): a memo for the dimension tables'
         # local relations (_table_for) and the lineage's checkpoint state
-        # (_checkpoints), and the rows per bucket the fused scan
-        # counted (partition -1 = the whole table)
+        # (_checkpoints)
         self._run_memo: SharedComputations | None = None
-        self._scanned_rows: dict[int, int] = {}
 
     # --- helpers ---
 
@@ -343,16 +343,19 @@ class Runner:
 
         return cache.get(f"table:{name}", build)
 
-    def _bucket_rows(self, need: set[int]) -> dict[int, int]:
+    def _bucket_rows(
+        self, need: set[int], scanned: dict[int, int]
+    ) -> dict[int, int]:
         """Rows per bucket for the checkpoint rows' ``n_rows`` (partition
         -1: the whole table), from counts the run already holds: the
-        fused scan's, then the lineage's checkpoint rows (a resume).  The
-        fact table is counted only when neither covers every bucket in
-        ``need``.  Runs without the fact table (e.g. a meta-only
-        spec-pack suite) report no row counts rather than failing."""
+        fused scan's (``scanned``), then the lineage's checkpoint rows (a
+        resume).  The fact table is counted only when neither covers
+        every bucket in ``need``.  Runs without the fact table (e.g. a
+        meta-only spec-pack suite) report no row counts rather than
+        failing."""
         if self.fact_table not in self.tables:
             return {}
-        known = dict(self._scanned_rows)
+        known = dict(scanned)
         if not need <= known.keys() and self.store is not None:
             for b, n in self._checkpoints()[1].items():
                 known.setdefault(b, n)
@@ -408,55 +411,38 @@ class Runner:
         self,
         spec: CheckSpec,
         result: CheckResult,
-        viol_counts: dict[int, int],
+        bucket_counts: dict[int, int],
         pending: list[int] | None,
-        started: float,
     ) -> list[CheckpointRow]:
-        """The check's checkpoint rows; ``n_rows`` is filled for the whole
-        batch just before the append (_bucket_rows)."""
-        finished = time.time()
+        """The check's checkpoint rows, from its verdict and its
+        violations per bucket (``bucket_counts``); ``n_rows`` is filled
+        for the whole batch just before the append (_bucket_rows)."""
         if result.skip_reason is not None:
             # a skipped check never ran: recording 'ok' buckets would make
             # resume silently skip it forever (the reference's history
             # only records finished runs, DbCheck.pm:767-804)
             return []
-        if spec.per_partition:
-            buckets = pending if pending is not None else list(range(self.n_buckets))
-        else:
-            buckets = [-1]
-        # a failure that carries no per-bucket attribution (error, an
-        # assertion counted only globally, or counts keyed -1 because the
-        # violation frame had no bucket column) must poison every pending
-        # bucket, not mark them 'ok' — {-1: n} on a per-partition check
-        # previously checkpointed every bucket 'ok' and the failure was
-        # skipped forever on resume
-        unattributed_fail = result.status is not Status.OK and (
-            not viol_counts or -1 in viol_counts
+
+        def row(b: int, status: str, nv: int) -> CheckpointRow:
+            return CheckpointRow(
+                run_id=self.run_id, check_name=spec.name, partition_id=b,
+                status=status, started=result.started,
+                finished=result.finished, n_rows=0, n_violations=nv,
+                lineage=self.lineage,
+            )
+
+        if not spec.per_partition:
+            return [row(-1, result.status.value, result.n_violations)]
+        # a failure that carries no per-bucket attribution (an error, or
+        # an assertion counted only globally) must poison every pending
+        # bucket, not mark them 'ok' — resume would skip it forever
+        unattributed_fail = result.error is not None or (
+            result.status is not Status.OK and not bucket_counts
         )
         rows = []
-        for b in buckets:
-            nv = viol_counts.get(b, 0)
-            if b == -1:
-                status = result.status.value
-            else:
-                status = (
-                    "fail"
-                    if nv > 0 or result.error or unattributed_fail
-                    else "ok"
-                )
-            rows.append(
-                CheckpointRow(
-                    run_id=self.run_id,
-                    check_name=spec.name,
-                    partition_id=b,
-                    status=status,
-                    started=started,
-                    finished=finished,
-                    n_rows=0,
-                    n_violations=nv,
-                    lineage=self.lineage,
-                )
-            )
+        for b in pending if pending is not None else range(self.n_buckets):
+            nv = bucket_counts.get(b, 0)
+            rows.append(row(b, "fail" if nv or unattributed_fail else "ok", nv))
         return rows
 
     # --- execution ---
@@ -480,13 +466,20 @@ class Runner:
         jobs carry job group ``dcheck:<check>`` (the scan's:
         ``dcheck:__fused__``, see job_group).
 
+        On a resume every check reads only its pending buckets: a body
+        check's fact table is filtered to them, and a fused check's
+        predicates are scoped to them inside the scan of every fused
+        check's pending union.  Each task hands back its verdicts,
+        violation frames and checkpoint rows; only this method collects
+        them.
+
         The run's OWN shared memo is released once the run, funnel write
         included, completes or fails: a persist() without a paired
         unpersist() would hold one InMemoryRelation per distinct fact
         table for the SparkSession's lifetime.  A memo INJECTED by a
         fleet is left for run_fleet to release.  Per-run state (the
-        dimension tables' local relations, the lineage's checkpoint map,
-        the fused scan's row counts) lives only for the call."""
+        dimension tables' local relations, the lineage's checkpoint map)
+        lives only for the call."""
         if parallelism is None:
             parallelism = lanes(self.spark)
         if parallelism < 1:
@@ -494,29 +487,17 @@ class Runner:
                 f"parallelism must be at least 1, got {parallelism}"
             )
         self._run_memo = SharedComputations()
-        self._scanned_rows = {}
         try:
-            summary = RunSummary()
-            all_violations: list[DataFrame] = []
-            checkpoint_rows: list[CheckpointRow] = []
-
             fused = [s for s in specs if s.row_predicates is not None]
             rest = [s for s in specs if s not in fused]
 
             def pooled(spec: CheckSpec):
                 with job_group(self.spark, spec.name, f"dcheck_{spec.name}"):
-                    return self._exec_one(spec, write_checkpoints)
+                    return self._exec_one(spec)
 
             def fused_pooled():
                 with job_group(self.spark, "__fused__", "dcheck_fused_scan"):
-                    # appends into summary/all_violations/checkpoint_rows
-                    # directly; safe because pooled() tasks only RETURN
-                    # their results — the shared lists are written by this
-                    # thread during the pool phase and by the main thread
-                    # strictly after pool shutdown
-                    self._run_fused(
-                        fused, summary, all_violations, checkpoint_rows
-                    )
+                    return self._run_fused(fused)
 
             # the fused fact scan runs AS a pool task in a slot of its own,
             # so the many contract-small checks (dimension/meta/baseline
@@ -528,11 +509,11 @@ class Runner:
             with ThreadPoolExecutor(parallelism + (1 if fused else 0)) as pool:
                 fused_fut = pool.submit(fused_pooled) if fused else None
                 outs = list(pool.map(pooled, rest))
-                if fused_fut is not None:
-                    fused_fut.result()
+                results, all_violations, checkpoint_rows, scanned = (
+                    fused_fut.result() if fused_fut else ([], [], [], {}))
 
             for result, violations, cps in outs:
-                summary.results.append(result)
+                results.append(result)
                 all_violations.extend(violations)
                 checkpoint_rows.extend(cps)
 
@@ -547,15 +528,14 @@ class Runner:
                 with job_group(self.spark, "__checkpoint__"):
                     if checkpoint_rows:
                         rows = self._bucket_rows(
-                            {r.partition_id for r in checkpoint_rows}
+                            {r.partition_id for r in checkpoint_rows}, scanned
                         )
                         for r in checkpoint_rows:
                             r.n_rows = rows.get(r.partition_id, 0)
                     self.store.append(checkpoint_rows)
-            return summary
+            return RunSummary(results)
         finally:
             self._run_memo = None
-            self._scanned_rows = {}
             if self._owns_shared:
                 self.shared.release()
 
@@ -573,13 +553,12 @@ class Runner:
         )
 
     def _exec_one(
-        self, spec: CheckSpec, write_checkpoints: bool
+        self, spec: CheckSpec
     ) -> tuple[CheckResult, list[DataFrame], list[CheckpointRow]]:
         """Run one body check against its pending buckets; returns its
         verdict, violation frames and checkpoint rows.  A check that
         skips or raises stops there, and the run goes on
         (BaseCheck.pm:131-139)."""
-        started = time.time()
         pending = self._pending_buckets(spec)
         if pending is not None and not pending:
             # DbCheck.pm:775 analogue
@@ -592,32 +571,25 @@ class Runner:
             ctx.result.skip_reason = s.reason
         except Exception:
             ctx.result.error = traceback.format_exc(limit=8)
-        result, violations = ctx.result.finish(), ctx.violations
-        if self.store is None or not write_checkpoints:
-            return result, violations, []
-        # a check attributes its violations to buckets only through
-        # partition_violations; an unattributed failure poisons every
-        # pending bucket (the -1 key)
-        viol_counts: dict[int, int] = {}
-        if result.partition_violations:
-            viol_counts = dict(result.partition_violations)
-        elif result.n_violations:
-            viol_counts = {-1: result.n_violations}
-        cps = self._checkpoint_rows(spec, result, viol_counts, pending, started)
-        return result, violations, cps
+        result = ctx.result.finish()
+        cps = self._checkpoint_rows(
+            spec, result, result.partition_violations, pending)
+        return result, ctx.violations, cps
 
     def _run_fused(
-        self,
-        specs: list[CheckSpec],
-        summary: RunSummary,
-        all_violations: list[DataFrame],
-        checkpoint_rows: list[CheckpointRow],
-    ) -> None:
-        """Execute all row-predicate checks in one scan.  Pending buckets
-        are computed per check; the scan covers the union of pending
-        buckets and per-check verdicts only consider that check's pending
-        set."""
+        self, specs: list[CheckSpec]
+    ) -> tuple[
+        list[CheckResult], list[DataFrame], list[CheckpointRow], dict[int, int]
+    ]:
+        """Execute all row-predicate checks in one scan of the union of
+        their pending buckets, each check's predicates scoped to its own
+        pending buckets.  Returns the checks' verdicts, their one tagged
+        violation frame (none when nothing ran), their checkpoint rows
+        and the rows per bucket the scan counted (partition -1 = the
+        whole table, when every bucket was scanned)."""
         started = time.time()
+        results: list[CheckResult] = []
+        cps: list[CheckpointRow] = []
         # the fused scan is the run's fact table: a check declared over
         # another table skips rather than score that table's predicates
         # against the wrong rows (or fail to resolve them outside
@@ -628,7 +600,7 @@ class Runner:
             if target == self.fact_table:
                 ours.append(s)
             else:
-                summary.results.append(_skipped(
+                results.append(_skipped(
                     s, f"{s.name} targets '{target}' but the fused scan "
                        f"is '{self.fact_table}'"))
         specs = ours
@@ -639,18 +611,18 @@ class Runner:
             # per-check containment ctx.table gives body checks, not a
             # KeyError that would abort the whole run
             reason = f"required table '{self.fact_table}' not available"
-            summary.results.extend(_skipped(s, reason) for s in specs)
-            return
+            results.extend(_skipped(s, reason) for s in specs)
+            return results, [], cps, {}
         pending_by_check: dict[str, list[int] | None] = {
             s.name: self._pending_buckets(s) for s in specs
         }
         todo = [s for s in specs if pending_by_check[s.name] != []]
-        summary.results.extend(
+        results.extend(
             _skipped(s, "All tests passed in a previous run")
             for s in specs if pending_by_check[s.name] == []
         )
         if not todo:
-            return
+            return results, [], cps, {}
         union_pending: set[int] | None = set()
         for s in todo:
             p = pending_by_check[s.name]
@@ -658,9 +630,10 @@ class Runner:
                 union_pending = None
                 break
             union_pending |= set(p)
+        bucket = self._bucket()
         scan = fact
         if union_pending is not None:
-            scan = scan.filter(self._bucket().isin(sorted(union_pending)))
+            scan = scan.filter(bucket.isin(sorted(union_pending)))
 
         ctx = self._context({**self.tables, self.fact_table: scan})
         preds: list[RowPredicate] = []
@@ -668,6 +641,7 @@ class Runner:
         scan2 = scan
         healthy: list[CheckSpec] = []
         for s in todo:
+            pending = pending_by_check[s.name]
             # a predicate factory that cannot run (missing table, bad
             # config) must skip/fail THIS check only — same error
             # containment as _exec_one (BaseCheck.pm:131-139), not a
@@ -677,21 +651,28 @@ class Runner:
             try:
                 ps, scan2 = s.row_predicates(ctx, scan2)
             except SkipCheck as e:
-                summary.results.append(_skipped(s, e.reason))
+                results.append(_skipped(s, e.reason))
                 continue
             except Exception:
                 res = _skipped(s, error=traceback.format_exc(limit=8))
-                summary.results.append(res)
-                checkpoint_rows.extend(self._checkpoint_rows(
-                    s, res, {}, pending_by_check[s.name], started))
+                results.append(res)
+                cps.extend(self._checkpoint_rows(s, res, {}, pending))
                 continue
             if not ps:
                 # e.g. a generated sweep over a table with no applicable
                 # columns: nothing to assert, and an empty predicate list
                 # would crash the fused aggregation downstream
-                summary.results.append(
+                results.append(
                     _skipped(s, "no applicable columns/predicates"))
                 continue
+            if pending is not None:
+                # the scan covers every fused check's pending buckets; a
+                # check counts and tags rows of its own pending buckets
+                # only, so its verdict, violation rows and checkpoints
+                # agree on a resume
+                in_scope = bucket.isin(pending)
+                ps = [replace(p, predicate=in_scope & p.predicate)
+                      for p in ps]
             for p in ps:
                 if p.assertion in pred_owner:
                     raise ValueError(
@@ -703,86 +684,61 @@ class Runner:
                 preds.append(p)
                 pred_owner[p.assertion] = s
             healthy.append(s)
-        todo = healthy
-        if not todo:
-            return
+        if not healthy:
+            return results, [], cps, {}
 
-        bucket = self._bucket()
         counts = fused_violation_counts(scan2, preds, bucket).collect()
         viol_rows = fused_violation_rows(scan2, preds, bucket, self.bucket_key)
         # the counts carry every scanned bucket's row count (an absent
         # bucket has none): the checkpoint rows' n_rows need no separate
-        # counting scan.  Only this thread writes _scanned_rows during
-        # the pool phase; run() reads it after pool shutdown
-        scanned = {r["partition_id"]: r["n_rows"] for r in counts}
+        # counting scan
+        n_rows = {r["partition_id"]: r["n_rows"] for r in counts}
         covered = (
             range(self.n_buckets) if union_pending is None else union_pending
         )
-        self._scanned_rows.update({b: scanned.get(b, 0) for b in covered})
+        scanned = {b: n_rows.get(b, 0) for b in covered}
         if union_pending is None:
-            self._scanned_rows[-1] = sum(scanned.values())
+            scanned[-1] = sum(n_rows.values())
 
         # per-check verdicts from the fused counts
-        for s in todo:
-            own = [p for p in preds if pred_owner[p.assertion] is s]
-            res = CheckResult(check_name=s.name)
+        for s in healthy:
+            res = CheckResult(check_name=s.name, started=started)
             res.severity = s.severity.value
-            res.started = started
-            my_pending = pending_by_check[s.name]
-            viol_counts: dict[int, int] = {}
+            pending = pending_by_check[s.name]
+            own = [p for p in preds if pred_owner[p.assertion] is s]
+            bucket_counts: dict[int, int] = {}
             for p in own:
                 total = 0
                 for r in counts:
-                    b = r["partition_id"]
-                    if my_pending is not None and b not in my_pending:
-                        continue
                     c = r[p.assertion] or 0
                     total += c
                     if c:
-                        viol_counts[b] = viol_counts.get(b, 0) + c
-                status = Status.OK if total == 0 else Status.FAIL
+                        b = r["partition_id"]
+                        bucket_counts[b] = bucket_counts.get(b, 0) + c
                 diag = (
                     []
                     if total == 0
                     else [f"{total} violating rows; persisted to violations table"]
                 )
-                res.assertions.append(
-                    AssertionResult(p.assertion, status, expected=0, got=total, diag=diag)
-                )
+                res.assertions.append(AssertionResult(
+                    p.assertion, Status.OK if total == 0 else Status.FAIL,
+                    expected=0, got=total, diag=diag,
+                ))
                 res.n_violations += total
             res.n_rows_checked = sum(
-                n for b, n in scanned.items()
-                if my_pending is None or b in my_pending
+                n for b, n in n_rows.items() if pending is None or b in pending
             )
-            summary.results.append(res.finish())
-            checkpoint_rows.extend(
-                self._checkpoint_rows(s, res, viol_counts, my_pending, started)
-            )
-        own_assertions = [p.assertion for p in preds]
+            results.append(res.finish())
+            cps.extend(self._checkpoint_rows(s, res, bucket_counts, pending))
+        assertions = [p.assertion for p in preds]
         tagged = viol_rows.withColumn(
             "check_name",
             F.element_at(
                 F.map_from_arrays(
-                    F.array(*[F.lit(a) for a in own_assertions]),
-                    F.array(*[F.lit(pred_owner[a].name) for a in own_assertions]),
+                    F.array(*[F.lit(a) for a in assertions]),
+                    F.array(*[F.lit(pred_owner[a].name) for a in assertions]),
                 ),
                 F.col("assertion"),
             ),
         ).select("check_name", "assertion", "partition_id", "key", "detail")
-        # the union scan covers EVERY fused check's pending buckets; a
-        # check must persist violations only for ITS OWN pending set —
-        # otherwise a row in a sibling's bucket is written under this
-        # check's name while its counts/verdict/checkpoints exclude that
-        # bucket (violations table contradicting the verdict on resume)
-        out_of_scope = None
-        for s in todo:
-            p = pending_by_check[s.name]
-            if p is None:
-                continue
-            cond = (F.col("check_name") == s.name) & ~F.col(
-                "partition_id"
-            ).isin(sorted(p))
-            out_of_scope = cond if out_of_scope is None else (out_of_scope | cond)
-        if out_of_scope is not None:
-            tagged = tagged.filter(~out_of_scope)
-        all_violations.append(tagged)
+        return results, [tagged], cps, scanned

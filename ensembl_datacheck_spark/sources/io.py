@@ -84,16 +84,8 @@ class Catalog:
             reader = reader.option("recursiveFileLookup", "true")
         return reader.parquet(self.path(name))
 
-    def write(
-        self,
-        df: DataFrame,
-        name: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
-    ) -> None:
+    def write(self, df: DataFrame, name: str, mode: str = "overwrite") -> None:
         w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
         if self.use_iceberg:
             w.format("iceberg").save(self.path(name))
         else:

@@ -47,7 +47,7 @@ def section(title, commentary, df, mode="formatted"):
 
 
 def main():
-    spark = get_spark("dump-plans", cores=4, driver_memory="8g")
+    spark = get_spark("dump-plans", cores=4)
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     orders = spark.read.parquet(f"{SF}/orders.parquet")
     seq = synth.gen_sequences(spark, 1000, 4, median_tok=16, max_tok=64)
@@ -371,9 +371,7 @@ def main():
         "the exchange at runtime).  Scan 2 recounts only keys hashing "
         "into candidate buckets behind a BroadcastHashJoin — exact "
         "output, all JVM, no SortMergeJoin, no corpus-sized shuffle at "
-        "any scale.  (method='mg' swaps scan 1 for a mapInPandas "
-        "Misra-Gries summary of <= partitions x ceil(1/phi) rows — the "
-        "collision-robust tier.)",
+        "any scale.",
         heavy_hitter_keys(shingle_keys, "key", phi=0.001),
         "simple",
     ))

@@ -1,15 +1,15 @@
 #!/usr/bin/env python
-"""Heavy-hitter plan bench: Misra-Gries + exact recount
+"""Heavy-hitter plan bench: bucket candidates + exact recount
 (operators/skew.heavy_hitter_keys) vs the full GROUP BY histogram on a
-mostly-distinct keyspace — the standing datum for why the MG path is
+mostly-distinct keyspace — the standing datum for why the recount is
 the 100 TB plan when nearly every key is unique (shingles, n-grams,
 URLs) and map-side combine stops helping.
 
 Planted ground truth (the hard regression signal, dedup_bench.py
 model): 10 hot keys at 2x the phi threshold; everything else is
 ~unique.  BOTH plans must return exactly the 10 planted keys with
-exact counts; the bench prints per-plan walls plus the shuffle-row
-proxies (distinct keys for the histogram vs partitions x cap for MG).
+exact counts; the bench prints per-plan walls plus the histogram's
+shuffle-row proxy (its distinct keys).
 
 Input is materialized to parquet first so both plans time the
 OPERATOR, not generation; runs are interleaved best-of-N and gated on
@@ -21,7 +21,6 @@ Usage: python scripts/hh_bench.py [n_obs] [runs]
 
 from __future__ import annotations
 
-import math
 import pathlib
 import sys
 import time
@@ -61,9 +60,9 @@ def main() -> None:
         (f"hot_{i}", n_obs // hot_every) for i in range(N_HOT)
     }
 
-    def recount(method):
+    def recount():
         return {(r.key, r.cnt) for r in heavy_hitter_keys(
-            keys, "key", PHI, method=method).collect()}
+            keys, "key", PHI).collect()}
 
     def run_histogram():
         return {
@@ -74,9 +73,7 @@ def main() -> None:
             .collect()
         }
 
-    plans = {"bucket_recount": lambda: recount("bucket"),
-             "mg_recount": lambda: recount("mg"),
-             "full_histogram": run_histogram}
+    plans = {"bucket_recount": recount, "full_histogram": run_histogram}
     walls: dict[str, list[float]] = {k: [] for k in plans}
     for fn in plans.values():  # warm-up (JIT + page cache), untimed
         assert fn() == expected
@@ -90,14 +87,10 @@ def main() -> None:
             print(f"{name}: {walls[name][-1]:.2f}s "
                   f"(loadavg {load:.2f}{' TIMED-OUT' if timed_out else ''})")
 
-    n_parts = keys.rdd.getNumPartitions()
-    cap = math.ceil(1 / PHI)
     distinct = keys.select("key").distinct().count()
-    print(f"\nn_obs={total:,} distinct={distinct:,} partitions={n_parts} "
-          f"cap={cap}")
-    print(f"shuffle-row proxy: histogram ~{distinct:,} rows, "
-          f"MG summary <= {n_parts * cap:,} rows "
-          f"({distinct / (n_parts * cap):,.0f}x)")
+    print(f"\nn_obs={total:,} distinct={distinct:,} "
+          f"partitions={keys.rdd.getNumPartitions()}")
+    print(f"shuffle-row proxy: histogram ~{distinct:,} rows")
     for name in plans:
         print(f"{name}: best {min(walls[name]):.2f}s of {walls[name]}")
     print(f"loadavg_end {loadavg_1m():.2f}")

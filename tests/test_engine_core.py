@@ -396,6 +396,90 @@ def test_checkpoint_partial_resume(spark, seq_fixture, tmp_path):
     assert new_buckets == list(range(10, 16))
 
 
+def test_fused_resume_scopes_each_check_to_its_pending_buckets(
+    spark, seq_fixture, tmp_path
+):
+    """Two fused checks resume with DISJOINT pending buckets: the shared
+    scan covers both sets, but each check's assertion counts, checkpoint
+    rows and violation rows cover only its own pending buckets — the
+    same numbers a full run reports for those buckets."""
+    import time
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from ensembl_datacheck_spark.plans.checkpoint import CheckpointRow
+
+    names = ["SequencesCompleteness", "TokenInvariants"]
+    pending = {"SequencesCompleteness": list(range(8, 16)),
+               "TokenInvariants": list(range(8))}
+    tables = _tables(seq_fixture)
+    specs = registry.select(names=names)
+    full_viols: list = []
+    full = Runner(spark, tables, n_buckets=16).run(
+        specs, write_checkpoints=False, violations_sink=full_viols.append)
+    [full_rows] = full_viols
+    full_rows = full_rows.collect()
+
+    store = CheckpointStore(Catalog(spark, tmp_path / "wh_disjoint"))
+    now = time.time()
+    store.append([
+        CheckpointRow("run_pre", name, b, "ok", now - 10, now, 100, 0,
+                      "snap-A#nb16#bkdoc_id")
+        for name in names for b in range(16) if b not in pending[name]
+    ])
+    viols: list = []
+    s = Runner(spark, tables, n_buckets=16, checkpoint_store=store,
+               lineage="snap-A").run(specs, violations_sink=viols.append)
+    [rows] = viols
+    rows = rows.collect()
+    cp = store.load().filter(F.col("run_id") != "run_pre").collect()
+    full_by = _by_name(full)
+    for name, res in _by_name(s).items():
+        own = set(pending[name])
+        want = {}
+        for r in full_rows:
+            if r["check_name"] == name and r["partition_id"] in own:
+                want[r["assertion"]] = want.get(r["assertion"], 0) + 1
+        got = {a.name: a.got for a in res.assertions}
+        assert got == {a.name: want.get(a.name, 0)
+                       for a in full_by[name].assertions}, name
+        assert sorted(r["partition_id"] for r in cp
+                      if r["check_name"] == name) == sorted(own), name
+        mine = [r for r in rows if r["check_name"] == name]
+        assert {r["partition_id"] for r in mine} <= own, name
+        assert Counter(map(tuple, mine)) == Counter(
+            tuple(r) for r in full_rows
+            if r["check_name"] == name and r["partition_id"] in own), name
+    assert any(a.got for r in s.results for a in r.assertions)
+
+
+def test_whole_table_fused_checkpoint_row_counts_violations(spark, tmp_path):
+    """A row-fused check without per_partition checkpoints one -1 row;
+    it carries the verdict's violation count, not 0."""
+    from pyspark.sql import functions as F
+
+    from ensembl_datacheck_spark.operators.fused import RowPredicate
+    from ensembl_datacheck_spark.registry import CheckSpec
+
+    spec = CheckSpec(
+        name="NegativeNTok", description="n_tok is never negative",
+        row_predicates=lambda ctx, scan: (
+            [RowPredicate("n_tok_negative", F.col("n_tok") < 0)], scan),
+    )
+    seq = spark.range(50).selectExpr(
+        "CAST(id AS STRING) AS doc_id",
+        "CAST(CASE WHEN id < 5 THEN -1 ELSE id END AS INT) AS n_tok")
+    store = CheckpointStore(Catalog(spark, tmp_path / "wh_whole"))
+    s = Runner(spark, {"sequences": seq}, n_buckets=4,
+               checkpoint_store=store, lineage="v1").run([spec])
+    [res] = s.results
+    assert res.status == Status.FAIL and res.n_violations == 5
+    [row] = store.load().collect()
+    assert (row["partition_id"], row["status"], row["n_violations"]) == (
+        -1, "fail", 5)
+
+
 def test_violations_sink_and_reports(spark, seq_fixture, tmp_path):
     catalog = Catalog(spark, tmp_path / "wh3")
     sink_calls = []

@@ -317,8 +317,8 @@ def test_ntok_quantile_joins_shared_profile_standalone(spark, monkeypatch,
     for k in calls:
         calls[k] = 0
     try:
-        res, _ = run_check(spark=spark, spec=spec, tables=tables,
-                           config=cfg, shared=shared)
+        [res] = Runner(spark, tables, config=cfg, shared=shared).run(
+            [spec], write_checkpoints=False, parallelism=1).results
     finally:
         shared.release()
     assert res.status == Status.OK, res.assertions

@@ -1462,8 +1462,8 @@ class TestHeavyHitterKeys:
         ]
 
     def test_partition_independent(self, hh_df):
-        """The MG summaries differ per layout, but guaranteed recall +
-        exact recount make the OUTPUT identical across partitionings."""
+        """Partial bucket counts differ per layout, but guaranteed recall
+        + exact recount make the OUTPUT identical across partitionings."""
         from ensembl_datacheck_spark.operators.skew import heavy_hitter_keys
 
         base = sorted(
@@ -1500,8 +1500,6 @@ class TestHeavyHitterKeys:
         assert got == {("a", 2, 2 / 3)}  # N excludes NULLs
         with pytest.raises(ValueError, match="phi"):
             heavy_hitter_keys(df, "key", 0.0)
-        with pytest.raises(ValueError, match="max_partition_keys"):
-            heavy_hitter_keys(df, "key", 1e-9)
 
     def test_recount_plan_broadcasts_candidates(self, hh_df):
         from ensembl_datacheck_spark.operators.skew import heavy_hitter_keys
@@ -1529,22 +1527,6 @@ class TestHeavyHitterKeys:
         empty = spark.range(0).selectExpr("CAST(id AS STRING) AS key")
         assert heavy_hitter_keys(empty, "key", 0.1).count() == 0
 
-    def test_methods_agree(self, hh_df):
-        """bucket (all-JVM, default) and mg (Arrow summary) are two
-        candidate strategies in front of the same exact recount — the
-        output must be identical."""
-        from ensembl_datacheck_spark.operators.skew import heavy_hitter_keys
-
-        bucket = sorted(
-            (r.key, r.cnt, r.share)
-            for r in heavy_hitter_keys(hh_df, "key", 0.02, method="bucket").collect()
-        )
-        mg = sorted(
-            (r.key, r.cnt, r.share)
-            for r in heavy_hitter_keys(hh_df, "key", 0.02, method="mg").collect()
-        )
-        assert bucket == mg and len(bucket) == 5
-
     def test_bucket_collisions_stay_exact(self, hh_df):
         """n_buckets=2 forces every key through 2 candidate buckets —
         the recount must still remove all collision false positives."""
@@ -1552,9 +1534,7 @@ class TestHeavyHitterKeys:
 
         got = sorted(
             (r.key, r.cnt)
-            for r in heavy_hitter_keys(
-                hh_df, "key", 0.02, method="bucket", n_buckets=2
-            ).collect()
+            for r in heavy_hitter_keys(hh_df, "key", 0.02, n_buckets=2).collect()
         )
         assert got == [(f"hot_{i}", 3000 + i) for i in range(5)]
 
@@ -1562,10 +1542,8 @@ class TestHeavyHitterKeys:
         from ensembl_datacheck_spark.operators.skew import heavy_hitter_keys
 
         df = spark.createDataFrame([("a",)], "key string")
-        with pytest.raises(ValueError, match="method"):
-            heavy_hitter_keys(df, "key", 0.5, method="nope")
         with pytest.raises(ValueError, match="n_buckets"):
-            heavy_hitter_keys(df, "key", 0.5, method="bucket", n_buckets=0)
+            heavy_hitter_keys(df, "key", 0.5, n_buckets=0)
 
 
 # --- LM perplexity scoring (operators/lm.py) --------------------------------

@@ -176,32 +176,6 @@ def test_row_rule_bad_sql_contained_to_one_check(spark, meta_world):
     assert by_name["GoodRule"].status == Status.OK
 
 
-def test_row_rule_wrong_fact_table_skips(spark):
-    """A fused rule registered for a different fact table skips with a
-    reason instead of evaluating against the wrong scan."""
-    from ensembl_datacheck_spark.checks.spec_pack import RowRuleSpec, register_spec
-    from ensembl_datacheck_spark.registry import Registry
-
-    reg = Registry()
-    register_spec(
-        RowRuleSpec(
-            name="EventsRule",
-            description="rule over the events fact table",
-            table="events",
-            violation_sql="amount < 0",
-            key_col="event_id",
-        ),
-        registry=reg,
-        fact_table="events",
-    )
-    df = spark.createDataFrame([("d1", 1)], "doc_id string, n_tok int")
-    summary = Runner(spark, {"sequences": df, "events": df}, n_buckets=4).run(
-        reg.default_suite()
-    )
-    [r] = summary.results
-    assert r.status == Status.SKIP and "events" in r.skip_reason
-
-
 GUARD_NAMES = ["DocIdFormat", "MetaValueNotBlank", "MetaActiveBooleanDomain"]
 
 
